@@ -25,8 +25,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.local("graft-bench", cpus)
+    val spark = GraftSession.local("graft-bench")
     val (degraded, loadStart) = degradedGate(load1(), () => load1())
     // Queries run in catalog (name) order with one untimed warm pass
     // each: the warm pass absorbs one-time JIT/codegen/scan-setup cost

@@ -4,6 +4,7 @@ import graft.functions.{ArrayDot, GramHashes, GramHashesLong, MinHashSlices, Nfc
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import scala.reflect.{ClassTag, classTag}
 
 /** SparkSessionExtensions entry point: makes the engine's native
   * expressions available to plain SQL users.
@@ -12,113 +13,39 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   GraftFunctions.register(spark)               (existing session).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDot].getName, "array_dot"),
-      (exprs: Seq[Expression]) => ArrayDot(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("simhash"),
-      new ExpressionInfo(classOf[SimHash].getName, "simhash"),
-      (exprs: Seq[Expression]) => SimHash(exprs(0), SimHash.bitsArg(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("minhash_slices"),
-      new ExpressionInfo(classOf[MinHashSlices].getName, "minhash_slices"),
-      (exprs: Seq[Expression]) => MinHashSlices(exprs(0), SimHash.bitsArg(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("shingle_set"),
-      new ExpressionInfo(classOf[ShingleSet].getName, "shingle_set"),
-      (exprs: Seq[Expression]) => ShingleSet(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("gram_hashes"),
-      new ExpressionInfo(classOf[GramHashes].getName, "gram_hashes"),
-      (exprs: Seq[Expression]) => GramHashes(exprs(0),
-        SimHash.bitsArg(exprs(1)), SimHash.bitsArg(exprs(2)))))
-    e.injectFunction((
-      FunctionIdentifier("gram_hashes_long"),
-      new ExpressionInfo(classOf[GramHashesLong].getName, "gram_hashes_long"),
-      (exprs: Seq[Expression]) => GramHashesLong(exprs(0),
-        SimHash.bitsArg(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("word_grams"),
-      new ExpressionInfo(classOf[WordGrams].getName, "word_grams"),
-      (exprs: Seq[Expression]) => WordGrams(exprs(0), SimHash.bitsArg(exprs(1)))))
-    e.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (exprs: Seq[Expression]) => NfcNormalize(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "normalize_text"),
-      (exprs: Seq[Expression]) => NormalizeText(exprs(0))))
-    e.injectFunction((
-      FunctionIdentifier("pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "pq_encode"),
-      (exprs: Seq[Expression]) => PqEncode(exprs(0), exprs(1),
-        SimHash.bitsArg(exprs(2)))))
-    e.injectFunction((
-      FunctionIdentifier("pq_adc_dist"),
-      new ExpressionInfo(classOf[PqAdcDist].getName, "pq_adc_dist"),
-      (exprs: Seq[Expression]) => PqAdcDist(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("pq_adc_dist_packed"),
-      new ExpressionInfo(classOf[PqAdcDistPacked].getName, "pq_adc_dist_packed"),
-      (exprs: Seq[Expression]) => PqAdcDistPacked(exprs(0), exprs(1),
-        SimHash.bitsArg(exprs(2)))))
-    e.injectFunction((
-      FunctionIdentifier("sub_l2_dist"),
-      new ExpressionInfo(classOf[SubL2Dist].getName, "sub_l2_dist"),
-      (exprs: Seq[Expression]) => SubL2Dist(exprs(0), exprs(1),
-        SimHash.bitsArg(exprs(2)))))
-    e.injectFunction((
-      FunctionIdentifier("sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "sorted_intersect_size"),
-      (exprs: Seq[Expression]) => SortedIntersectSize(exprs(0), exprs(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { case (name, cls, build) =>
+      e.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls, name), build))
+    }
 }
 
 object GraftFunctions {
+  /** The engine's SQL functions as `(name, expression class, builder)`;
+    * both registration paths walk this one table.
+    */
+  val table: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    fn("array_dot", e => ArrayDot(e(0), e(1))),
+    fn("simhash", e => SimHash(e(0), SimHash.bitsArg(e(1)))),
+    fn("minhash_slices", e => MinHashSlices(e(0), SimHash.bitsArg(e(1)))),
+    fn("shingle_set", e => ShingleSet(e(0))),
+    fn("shingle_hashes", e => ShingleHashes(e(0))),
+    fn("gram_hashes", e => GramHashes(e(0), SimHash.bitsArg(e(1)), SimHash.bitsArg(e(2)))),
+    fn("gram_hashes_long", e => GramHashesLong(e(0), SimHash.bitsArg(e(1)))),
+    fn("word_grams", e => WordGrams(e(0), SimHash.bitsArg(e(1)))),
+    fn("nfc_normalize", e => NfcNormalize(e(0))),
+    fn("normalize_text", e => NormalizeText(e(0))),
+    fn("pq_encode", e => PqEncode(e(0), e(1), SimHash.bitsArg(e(2)))),
+    fn("pq_adc_dist", e => PqAdcDist(e(0), e(1))),
+    fn("pq_adc_dist_packed", e => PqAdcDistPacked(e(0), e(1), SimHash.bitsArg(e(2)))),
+    fn("sub_l2_dist", e => SubL2Dist(e(0), e(1), SimHash.bitsArg(e(2)))),
+    fn("sorted_intersect_size", e => SortedIntersectSize(e(0), e(1))))
+
+  private def fn[E <: Expression: ClassTag](name: String, build: Seq[Expression] => E) =
+    (name, classTag[E].runtimeClass.getName, build)
+
   /** Register the engine's SQL functions on an already-built session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "array_dot", exprs => ArrayDot(exprs(0), exprs(1)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "simhash", exprs => SimHash(exprs(0), SimHash.bitsArg(exprs(1))))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "minhash_slices", exprs => MinHashSlices(exprs(0), SimHash.bitsArg(exprs(1))))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "shingle_set", exprs => ShingleSet(exprs(0)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "shingle_hashes", exprs => ShingleHashes(exprs(0)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "gram_hashes", exprs => GramHashes(exprs(0),
-        SimHash.bitsArg(exprs(1)), SimHash.bitsArg(exprs(2))))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "gram_hashes_long", exprs => GramHashesLong(exprs(0),
-        SimHash.bitsArg(exprs(1))))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "word_grams", exprs => WordGrams(exprs(0), SimHash.bitsArg(exprs(1))))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "nfc_normalize", exprs => NfcNormalize(exprs(0)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "normalize_text", exprs => NormalizeText(exprs(0)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "pq_encode", exprs => PqEncode(exprs(0), exprs(1),
-        SimHash.bitsArg(exprs(2))))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "pq_adc_dist", exprs => PqAdcDist(exprs(0), exprs(1)))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "pq_adc_dist_packed", exprs => PqAdcDistPacked(exprs(0), exprs(1),
-        SimHash.bitsArg(exprs(2))))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "sub_l2_dist", exprs => SubL2Dist(exprs(0), exprs(1),
-        SimHash.bitsArg(exprs(2))))
-    org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(
-      spark, "sorted_intersect_size",
-      exprs => SortedIntersectSize(exprs(0), exprs(1)))
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    table.foreach { case (name, _, build) =>
+      org.apache.spark.sql.graftshim.ColumnBridge.registerTempFunction(spark, name, build)
+    }
 }

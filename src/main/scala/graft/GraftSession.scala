@@ -16,9 +16,9 @@ object GraftSession {
   /** `cpus` sizes both the local master and `spark.sql.shuffle.partitions`
     * (one reducer per core — the right size for this single-JVM rig; a
     * real cluster would set partitions to a multiple of total cores).
-    * Default 32 = this container's core count.
+    * Default: [[defaultCpus]].
     */
-  def local(appName: String, cpus: String = "32", logLevel: String = "WARN"): SparkSession = {
+  def local(appName: String, cpus: String = defaultCpus, logLevel: String = "WARN"): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(appName)
@@ -30,4 +30,12 @@ object GraftSession {
     s.sparkContext.setLogLevel(logLevel)
     s
   }
+
+  /** The session core count: `SPARK_GRAFT_CPUS` if set, else every core
+    * the JVM sees.
+    */
+  def defaultCpus: String = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+
+  private[graft] def cpusFrom(env: Option[String]): String =
+    env.getOrElse(Runtime.getRuntime.availableProcessors.toString)
 }

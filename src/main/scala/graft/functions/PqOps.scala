@@ -316,8 +316,8 @@ object PqAdcDist {
   * of the pair loop carries ONE primitive long per vector — 8 bytes,
   * no array header, no per-pair element access on the stream side —
   * the at-scale storage claim (64 bits/vector) made literal. At
-  * fixture scale both ADC forms are join-overhead-bound (PqMicro: 4M
-  * evals of either ≈ the no-op baseline); the storage ratio vs the
+  * fixture scale both ADC forms are join-overhead-bound (SCALE.md round
+  * 10: 4M evals of either ≈ the no-op baseline); the storage ratio vs the
   * unpacked INT array (~10×) is what matters at corpus scale.
   *
   * Null discipline: a table length not divisible by `numSub` or a

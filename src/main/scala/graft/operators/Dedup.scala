@@ -94,7 +94,7 @@ object Dedup {
         concat(col("pos").cast("string"), lit(":"), col("col")).as("bk"))
 
   /** `(doc_id, bk)` LSH band rows — [[sigBandRows]] without the sketch. */
-  private[graft] def bandRows(df: DataFrame): DataFrame =
+  private def bandRows(df: DataFrame): DataFrame =
     sigBandRows(df).select(col("doc_id"), col("bk"))
 
   /** Candidate near-duplicate pairs from the capped LSH band join — the
@@ -173,7 +173,7 @@ object Dedup {
     * partition spec), so this costs the same single band-key
     * exchange the pair form paid.
     */
-  private[graft] def starEdgesOf(bands: DataFrame): DataFrame = {
+  private def starEdgesOf(bands: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val np = bands.sparkSession.sessionState.conf.numShufflePartitions
     val w = Window.partitionBy("bk")
@@ -498,13 +498,13 @@ object Dedup {
     * round-12 measurements say to use (never the columnar cache).
     * Derives from [[stagedCandidatePairs]], so the two artifacts are
     * consistent by construction under the shared fingerprint key.
-    * Measured (tools/ShingleStage, min-of-3 warm): see SCALE.md
-    * round-14 for the sf1/sf10 numbers that shipped it.
+    * Measured (min-of-3 warm): see SCALE.md "Round-14 additions", q25's
+    * second scan, for the sf1/sf10 numbers that shipped it.
     */
   private val stagedShinglePaths =
     scala.collection.concurrent.TrieMap.empty[String, String]
 
-  private[graft] def stagedMemberShingles(s: SparkSession, d: String): DataFrame = {
+  private def stagedMemberShingles(s: SparkSession, d: String): DataFrame = {
     val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
     val path = stagedShinglePaths.getOrElseUpdate(key, {
       val out = Tables.stageDir(s, "graft-shingles") + "/shingles.parquet"
@@ -555,18 +555,18 @@ object Dedup {
 
   /** [[jaccardSims]] over the STAGED member shingle sets — identical
     * result, zero documents scans (shape B of the round-14
-    * tools/ShingleStage measurement).
+    * measurement, SCALE.md "Round-14 additions").
     */
   private[graft] def jaccardSimsStaged(s: SparkSession, d: String): DataFrame =
     jaccardOf(
       pairShingleSetsFrom(stagedCandidatePairs(s, d), stagedMemberShingles(s, d)))
 
-  private[graft] def jaccardVerifyStaged(s: SparkSession, d: String): DataFrame =
+  private def jaccardVerifyStaged(s: SparkSession, d: String): DataFrame =
     jaccardSimsStaged(s, d).filter(col("jaccard") >= JaccardThreshold)
 
   // Round 14: the verify runners read the STAGED member shingle sets
   // ([[stagedMemberShingles]]) instead of re-scanning documents — the
-  // SCALE.md "accepted redundancy" closed. tools/ShingleStage measured
+  // SCALE.md "accepted redundancy" closed. The round-14 A/B measured
   // the two shapes a fixture-scale TIE (sf1 ≈2.1 vs ≈2.0 s, sf10 ≈5.5
   // vs ≈5.6 s, both inside the box's noise band across repeated
   // min-of-3 runs); what ships the staged form is the scan budget —
@@ -610,9 +610,6 @@ object Dedup {
     * `(n_candidates, n_ge_50, n_ge_70, n_ge_90, precision_at_gate)`
     * where the gate is q25's `JaccardThreshold`.
     */
-  def lshQuality(cands: DataFrame, docs: DataFrame): DataFrame =
-    lshQualityOf(jaccardSims(cands, docs))
-
   private def lshQualityOf(sims: DataFrame): DataFrame =
     sims
       .agg(count(lit(1)).as("n_candidates"),
@@ -682,10 +679,10 @@ object Dedup {
     dupClustersWithRounds(pairs, checkpointDir)._1
 
   /** [[dupClusters]] plus the number of label-propagation rounds it took
-    * to converge — the scale-evidence observable (rounds = component
-    * diameter, and each round is one shuffle).
+    * to converge (rounds = component diameter, and each round is one
+    * shuffle).
     */
-  def dupClustersWithRounds(pairs: DataFrame,
+  private def dupClustersWithRounds(pairs: DataFrame,
       checkpointDir: Option[String] = None): (DataFrame, Int) = {
     val snap: DataFrame => DataFrame = checkpointDir match {
       case Some(dir) =>
@@ -1363,24 +1360,6 @@ object Dedup {
   // corner: a band bucket that crosses BandCap as the corpus grows
   // stops proposing NEW pairs, but edges verified before the crossing
   // persist — incremental ingest never retroactively unlinks documents.
-
-  /** Raw collision EDGES of a new `(doc_id, text)` batch against a
-    * pre-signed `(bk, idx_id)` band index (e.g. a [[writeBandIndex]]
-    * table) — the edge-form twin of [[incrementalAgainstIndex]]'s
-    * verdicts, canonicalized to `doc_a < doc_b` so they merge/union
-    * cleanly with [[candidatePairsOf]] output. Only the batch side
-    * shuffles; a bucketed index joins exchange-free.
-    */
-  def incrementalEdges(newDocs: DataFrame, index: DataFrame): DataFrame =
-    edgesFromBands(bandRows(newDocs.select(col("doc_id"), col("text"))), index)
-
-  private[graft] def edgesFromBands(bands: DataFrame, index: DataFrame): DataFrame =
-    bands.select(col("doc_id"), col("bk"))
-      .join(index.select(col("bk"), col("idx_id")), "bk")
-      .filter(col("doc_id") =!= col("idx_id"))
-      .select(least(col("doc_id"), col("idx_id")).as("doc_a"),
-        greatest(col("doc_id"), col("idx_id")).as("doc_b"))
-      .distinct()
 
   /** Star-collapsed connectivity edges of a batch against the index —
     * what the MERGE actually consumes. A band bucket's candidate pairs

@@ -202,9 +202,7 @@ object Quantization {
     sims.withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
   }
 
-  /** The unranked `(qid, nid, adist)` pair stream [[adcTopK]] windows —
-    * exposed for the stage-cost probe (graft.tools.PqProbe).
-    */
+  /** The unranked `(qid, nid, adist)` pair stream [[adcTopK]] windows. */
   private[graft] def adcPairs(embeddings: DataFrame, queryPred: Column,
       codebook: Option[DataFrame]): DataFrame = {
     val cb = codebook.getOrElse(demoCodebook(embeddings))

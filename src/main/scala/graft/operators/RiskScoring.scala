@@ -26,7 +26,7 @@ object RiskScoring {
   /** Per-key risk aggregation (A1-A5, A7) + score arithmetic (M1-M4). */
   def riskTable(events: DataFrame): DataFrame = {
     val dec = DecimalType(18, 2)
-    events
+    val agg = events
       .groupBy(col("user_id"))
       .agg(
         count(lit(1)).as("n_events"),                                      // A2
@@ -35,14 +35,22 @@ object RiskScoring {
           .as("n_purchases"),                                              // A4
         min(col("event_type")).as("first_type"),                           // A5 (det.)
         sum(col("value").cast(dec)).cast(DoubleType).as("total_value"))
-      .withColumn("ownership_risk", lit(100.0) * (lit(1.0) / (lit(1) + col("n_types"))))     // M1
-      .withColumn("liquidity_risk", lit(100.0) * (lit(1.0) / (lit(1) + col("n_purchases")))) // M1
-      .withColumn("concentration", col("n_events") / (lit(1.0) + col("n_types")))            // M2
+    withScores(agg, holders = "n_types", swaps = "n_purchases", total = "n_events")
+  }
+
+  /** Score arithmetic (M1-M4) over three per-key count columns: distinct
+    * holders, distinct swaps and total rows. Adds `ownership_risk`,
+    * `liquidity_risk`, `concentration`, `rug_risk` and `safety_score`.
+    */
+  def withScores(counts: DataFrame, holders: String, swaps: String, total: String): DataFrame =
+    counts
+      .withColumn("ownership_risk", lit(100.0) * (lit(1.0) / (lit(1) + col(holders)))) // M1
+      .withColumn("liquidity_risk", lit(100.0) * (lit(1.0) / (lit(1) + col(swaps))))   // M1
+      .withColumn("concentration", col(total) / (lit(1.0) + col(holders)))             // M2
       .withColumn("rug_risk",
         col("ownership_risk") * lit(0.4) + col("liquidity_risk") * lit(0.4) +
-          col("concentration") * lit(0.2))                                                   // M3
-      .withColumn("safety_score", greatest(lit(0.0), lit(100.0) - col("rug_risk")))          // M4
-  }
+          col("concentration") * lit(0.2))                                             // M3
+      .withColumn("safety_score", greatest(lit(0.0), lit(100.0) - col("rug_risk")))    // M4
 
   /** Top-k by safety score with a deterministic tiebreaker (O4). */
   def topK(risk: DataFrame, k: Int): DataFrame =

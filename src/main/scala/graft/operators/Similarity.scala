@@ -215,8 +215,8 @@ object Similarity {
     * measured sweet spot on this repo's own scale curves: it derives
     * k=16 at sf1 (20k vectors — the demo constant, whose sf1 numbers
     * are all linear) and k=160 at sf10 (200k vectors — exactly the
-    * `tools.NoiseScale` configuration that took q92's kernel from
-    * 92.9 s back to 17.9 s / exp 0.90, SCALE.md round 13).
+    * configuration that took q92's kernel from 92.9 s back to 17.9 s /
+    * exp 0.90, SCALE.md round 13).
     */
   val TargetCellSize = 1250L
 
@@ -1200,7 +1200,7 @@ object Similarity {
     * most the sum of their shares. The plan therefore picks the
     * smallest nProbe whose top-share cells sum to `targetRecall`
     * (clustered corpora can only beat this floor). When a measured
-    * recall curve from `graft.tools.IvfProbeCurve` is supplied, it
+    * recall curve (SCALE.md round-9 re-baseline) is supplied, it
     * overrides the floor: the smallest measured nProbe reaching the
     * target wins (the sf1 story, where recall is 1.0 at nProbe 1).
     *
@@ -1392,7 +1392,7 @@ object Similarity {
   // IVF ranking scored against q26's exact ranking — per-query
   // recall@k and the reciprocal rank at which the approximate list
   // surfaces the TRUE nearest neighbor (rr = 0 when it misses
-  // entirely). The IvfProbeCurve tool measures the same thing as a
+  // entirely). SCALE.md's probe curve measures the same thing as a
   // sweep; this registers the single-operating-point number under the
   // DuckDB gate, so a recall regression (a centroid change, a probe
   // default change, a tie-break bug) fails CORRECTNESS, not just a CI

@@ -1633,10 +1633,10 @@ object TextAnalysis {
   // hashes on the UNIFORM (doc_id, w) pair, not the Zipf-skewed word
   // alone. n_tokens = sum(cnt) and sum_scaled = sum(cnt * p_scaled) are
   // exact in the same integer arithmetic as the per-occurrence form.
-  // private[graft] so tools.LmHeadroom derives its Long-safe ceiling
-  // from THIS constant — lowering LmScale (the documented web-corpus
-  // mitigation) must move the headroom report with it.
-  private[graft] val LmScale = 1000000000000L
+  // The Long-safe headroom at this scale is measured in SCALE.md (q56/q71
+  // integer-LM overflow guards, round-9 re-baseline); lowering LmScale
+  // (the documented web-corpus mitigation) moves that headroom with it.
+  private val LmScale = 1000000000000L
 
   /** Per-doc mean corpus-unigram token probability over any
     * `(doc_id, text)` frame (the q56 kernel).

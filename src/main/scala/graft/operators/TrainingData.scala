@@ -165,7 +165,8 @@ object TrainingData {
 
   // ---- the staged 8-gram-hash artifact (round 14, late session) ----------
   // The stage-aggregates boundary ("gram-volume branches recompute")
-  // held as prose until tools/GramStage priced it: staging the DISTINCT
+  // held as prose until round 14 priced it (SCALE.md "the gram-volume
+  // boundary, priced and moved"): staging the DISTINCT
   // `(doc_id, gh)` 8-gram stream once per corpus fingerprint wins
   // q42 25.2→3.6 s and q43 26.0→4.7 s at sf10 (3.4× each at sf1), with
   // the cold write ≈ 1.4 raw queries — amortized from the second
@@ -207,7 +208,7 @@ object TrainingData {
   // |corpus|².
 
   /** q42's tail over any `(source, gh)` stream (shared by the staged
-    * registry form and the raw form GramStage A/Bs).
+    * registry form and the raw form).
     */
   private[graft] def sharedSourcePairs(srcGh: DataFrame): DataFrame =
     srcGh
@@ -537,7 +538,7 @@ object TrainingData {
   // merge table and per-doc counts ride the staged `(doc_id, w, cnt)`
   // artifact (zero corpus scans); packing is q46's partition-local
   // fold, sharded by doc_id hash.
-  private[graft] val BpePackCapacity = 1024L // BPE symbols per pack (capacity-swept: see SCALE.md round 14)
+  private val BpePackCapacity = 1024L // BPE symbols per pack (capacity-swept: see SCALE.md round 14)
 
   private def q102(s: SparkSession, d: String): DataFrame =
     packSequencesFromCounts(

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Path-level file pruning (SURVEY.md §2.6 O5/O6, §2.1 S9/A8): the
   * reference repeatedly lists an object-store prefix, sorts by key or
@@ -29,12 +29,6 @@ object FileCatalog {
       .map(s => FileMeta(s.getPath.toString, s.getModificationTime, s.getLen))
   }
 
-  /** Listing as a DataFrame (for listing-level queries/joins). */
-  def listingDf(spark: SparkSession, dir: String, suffix: String = ""): DataFrame = {
-    import spark.implicits._
-    list(spark, dir, suffix).toDF()
-  }
-
   /** O5: newest N paths by modification time (desc), name-desc tiebreak. */
   def newestN(spark: SparkSession, dir: String, n: Int, suffix: String = ""): Seq[String] =
     list(spark, dir, suffix)
@@ -44,11 +38,4 @@ object FileCatalog {
   /** S9/A8: the single newest file, if any. */
   def newestFile(spark: SparkSession, dir: String, suffix: String = ""): Option[String] =
     newestN(spark, dir, 1, suffix).headOption
-
-  /** Read only the newest N parquet files of a directory. */
-  def readNewestParquet(spark: SparkSession, dir: String, n: Int): DataFrame = {
-    val paths = newestN(spark, dir, n, ".parquet")
-    require(paths.nonEmpty, s"no parquet files under $dir")
-    spark.read.parquet(paths: _*)
-  }
 }

@@ -107,8 +107,7 @@ object Compact {
   /** Usage: Compact <dir> [targetMiB=128] */
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Compact <dir> [targetMiB]")
-    val spark = graft.GraftSession.local("graft-compact",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.GraftSession.local("graft-compact")
     val target = if (args.length > 1) args(1).toLong * 1024 * 1024
       else 128L * 1024 * 1024
     val (before, after, rows) = run(spark, args(0), target)

@@ -68,8 +68,9 @@ object Curate {
   // pack geometry than the run it restarts would silently "succeed".
   // Capacity is in BPE SYMBOLS (the q99 currency — what a context
   // window actually holds), sized by the round-14
-  // capacity sweep (tools/PackFill; fixture BPE compression ~3.6, mean
-  // doc ~196 symbols — 2048 packs ~10 docs and fills ~0.87).
+  // capacity sweep (SCALE.md "Round-14 additions"; fixture BPE
+  // compression ~3.6, mean doc ~196 symbols — 2048 packs ~10 docs and
+  // fills ~0.87).
   private val PackCapacity = 2048L
   // output-file budget for the shard manifest (q113, round 14): ~8
   // packs per file — real shard writers cut far larger files, but the

@@ -18,8 +18,7 @@ object IncrCluster {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: IncrCluster <sfDir>")
     val sfDir = args(0)
-    val spark = graft.GraftSession.local("graft-incr-cluster",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.GraftSession.local("graft-incr-cluster")
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
 
     def timed[A](f: => A): (A, Double) = {

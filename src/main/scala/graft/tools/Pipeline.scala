@@ -42,8 +42,8 @@ object Pipeline {
   /** Risk analytics over the canonical table, keyed by mint
     * (streamlit 1.3.txt:83-113 semantics on the domain schema).
     */
-  def domainRisk(cleaned: DataFrame): DataFrame =
-    cleaned
+  def domainRisk(cleaned: DataFrame): DataFrame = {
+    val agg = cleaned
       .filter(col("mint") =!= "")
       .groupBy(col("mint"))
       .agg(
@@ -55,16 +55,12 @@ object Pipeline {
         // (the reference fills names from metadata or a REST lookup, J2)
         coalesce(min(when(col("token_name") =!= "", col("token_name"))),
           lit("Unknown")).as("token_name"))
-      .withColumn("ownership_risk", lit(100.0) * (lit(1.0) / (lit(1) + col("unique_holders"))))
-      .withColumn("liquidity_risk", lit(100.0) * (lit(1.0) / (lit(1) + col("swap_sellers"))))
-      .withColumn("concentration", col("total_transfers") / (lit(1.0) + col("unique_holders")))
-      .withColumn("rug_risk",
-        col("ownership_risk") * lit(0.4) + col("liquidity_risk") * lit(0.4) +
-          col("concentration") * lit(0.2))
-      .withColumn("safety_score", greatest(lit(0.0), lit(100.0) - col("rug_risk")))
+    RiskScoring.withScores(agg, holders = "unique_holders", swaps = "swap_sellers",
+        total = "total_transfers")
       .withColumn("explanation", RiskExplain.explain(
         col("ownership_risk"), col("liquidity_risk"),
         col("concentration"), col("rug_risk")))
+  }
 
   /** Stages 2-4, shared by both ingest paths: normalize + union +
     * parquet load, then the risk analytics top-k.

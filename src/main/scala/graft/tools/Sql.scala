@@ -8,8 +8,7 @@ package graft.tools
 object Sql {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Sql <sfDir> <sql>...")
-    val spark = graft.GraftSession.local("graft-sql",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.GraftSession.local("graft-sql")
     graft.Tables.names.foreach { t =>
       scala.util.Try(
         graft.Tables(spark, args(0), t).createOrReplaceTempView(t))

@@ -8,8 +8,7 @@ package graft.tools
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: TimeQuery <sfDir> <queryName>...")
-    val spark = graft.GraftSession.local("graft-timequery",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.GraftSession.local("graft-timequery")
     args.drop(1).foreach { name =>
       val q = graft.Registry.byName(name)
       def pass(): Double = {

@@ -9,8 +9,7 @@ import java.nio.file.{Files, Paths}
 object VerifyOne {
   def main(args: Array[String]): Unit = {
     val sfDir +: outDir +: names = args.toSeq
-    val spark = graft.GraftSession.local("graft-verify-one",
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = graft.GraftSession.local("graft-verify-one")
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>
       val q = graft.Registry.byName(n)

@@ -908,7 +908,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val mega = Similarity.recommendNProbe(skewed, targetRecall = 0.8)
     assert(mega.nProbe == 1 && mega.useExact)
     assert(math.abs(mega.maxLoadFactor - 0.85 * 16) < 1e-9)
-    // a measured curve (IvfProbeCurve) overrides the floor: clustered
+    // a measured recall curve overrides the floor: clustered
     // corpora reach target recall at tiny nProbe (the sf1 story)
     val clustered = Similarity.recommendNProbe(uniform, targetRecall = 0.9,
       measuredCurve = Seq(1 -> 1.0, 2 -> 1.0, 4 -> 1.0))

@@ -33,7 +33,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * q96/q99) now rides the staged `(doc_id, w, cnt)` token artifact
   * (`TextAnalysis.stagedTokenCounts`) and budgets 0–1 corpus scans —
   * their branch reads hit the small staged parquet instead; the
-  * gram-volume boundary was PRICED round 14 (tools/GramStage) and
+  * gram-volume boundary was PRICED round 14 (SCALE.md) and
   * moved for the two set-semantics 8-gram consumers (q42/q43 ride
   * `stagedGramHashes`); q50 stays
   * at (3,0) because its unit is word 3-GRAMS (higher-volume text
