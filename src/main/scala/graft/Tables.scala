@@ -41,10 +41,9 @@ object Tables {
 
   /** Cheap content fingerprint of a corpus dir — per-file (relative
     * path, size, nanosecond mtime) folded into an order-independent
-    * 64-bit hash over everything under `dir` — used to key the per-JVM
-    * session-stage caches ([[graft.operators.Dedup]] staged
-    * pairs/clusters, [[graft.operators.Multimodal]] staged aHashes,
-    * [[graft.operators.TextAnalysis]] staged token counts). A
+    * 64-bit hash over everything under `dir` — the stamp of every
+    * corpus-derived [[graft.Stage]] (the registry's session stages and
+    * Multimodal's staged aHashes) and of each `Curate` stage chain. A
     * long-lived JVM that regenerates a fixture directory IN PLACE gets
     * a different stamp and re-stages instead of silently serving the
     * old corpus's artifacts (round-12 ADVICE). Per-file hashing (not
@@ -58,23 +57,6 @@ object Tables {
     * files; at production scale the equivalent is the object-store
     * listing the driver already performs to plan the scan.
     */
-  /** Root directory for a new session-staged artifact. Local mode
-    * defaults to a JVM temp dir; a CLUSTER deployment must set
-    * `spark.graft.stageDir` to a shared filesystem URI (HDFS/S3/...)
-    * so every executor reads the artifact the driver's job wrote —
-    * a driver-local /tmp path is invisible to remote executors. The
-    * parquet writer creates the directory, so the conf path needs no
-    * local mkdir and accepts any Hadoop-FS URI.
-    */
-  private[graft] def stageDir(s: org.apache.spark.sql.SparkSession,
-      prefix: String): String =
-    s.conf.getOption("spark.graft.stageDir") match {
-      case Some(root) =>
-        s"$root/$prefix-${java.util.UUID.randomUUID().toString.take(8)}"
-      case None =>
-        java.nio.file.Files.createTempDirectory(prefix).toString
-    }
-
   def fingerprint(dir: String): String = {
     val root = java.nio.file.Paths.get(dir)
     if (!java.nio.file.Files.exists(root)) return "absent"

@@ -487,7 +487,7 @@ object Dedup {
         Seq("doc_b"))
 
   /** Candidate-MEMBER shingle sets `(doc_id, wh)`, staged to parquet
-    * once per (JVM, corpus fingerprint) — the round-14 closure of the
+    * once per session ([[graft.Stage]]) — the round-14 closure of the
     * "q25 accepted redundancy" (SCALE.md Known costs): the verify-side
     * queries (q25/q74, q65) each re-scanned documents to hash the
     * member sets, although the member population is fixed the moment
@@ -501,21 +501,11 @@ object Dedup {
     * Measured (min-of-3 warm): see SCALE.md "Round-14 additions", q25's
     * second scan, for the sf1/sf10 numbers that shipped it.
     */
-  private val stagedShinglePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedMemberShingles(s: SparkSession, d: String): DataFrame = {
-    val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
-    val path = stagedShinglePaths.getOrElseUpdate(key, {
-      val out = Tables.stageDir(s, "graft-shingles") + "/shingles.parquet"
+  private def stagedMemberShingles(s: SparkSession, d: String): DataFrame =
+    graft.Stage.session(s, "graft-shingles", d)(
       shingleSetsFrame(Tables.documents(s, d)
-          .join(candidateMembers(stagedCandidatePairs(s, d)),
-            Seq("doc_id"), "left_semi"))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+        .join(candidateMembers(stagedCandidatePairs(s, d)),
+          Seq("doc_id"), "left_semi")))
 
   /** Exact (pre-hashed) Jaccard for EVERY candidate pair, unfiltered —
     * the shared sims kernel [[jaccardVerify]] thresholds and the q74
@@ -803,10 +793,11 @@ object Dedup {
     dupClusters(starEdgesOf(bandRows(
       Tables.documents(s, d).select(col("doc_id"), col("text")))))
 
-  /** The q44 cluster map, computed ONCE per (JVM, corpus dir) and
-    * staged to parquet — the Curate stage-artifact discipline applied
-    * inside the registry. q53 and q72 are both doc-volume consumers of
-    * the SAME connected-components result q44 computes (together the
+  /** The q44 cluster map, computed ONCE per session and staged to
+    * parquet ([[graft.Stage]]) — the Curate stage-artifact discipline
+    * applied inside the registry. q53 and q72 are both doc-volume
+    * consumers of the SAME connected-components result q44 computes
+    * (together the
     * three were the whole bench hot tail: ~6.6 s of 38.7 s at sf0.1,
     * ~44 s of 175 s at sf1); recomputing the 5-round label-propagation
     * loop per query bought nothing but wall-clock. The staged frame is
@@ -820,28 +811,12 @@ object Dedup {
     * (tools/Curate stages it explicitly; this helper gives the ad-hoc
     * registry path the same shape without changing any query's
     * CONTENT — q53/q72 hashes are byte-identical to the recompute).
-    * Keyed by canonical corpus path PLUS a listing fingerprint
-    * ([[Tables.fingerprint]]): a JVM that regenerates the corpus dir
-    * in place re-stages instead of serving the stale map (round-12
-    * ADVICE — q53/q72 would otherwise silently disagree with a fresh
-    * q44). Concurrent first calls race benignly (one extra temp
-    * write, last path wins, both valid).
     */
-  private val stagedClusterPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private[graft] def stagedClusters(s: SparkSession, d: String): DataFrame =
+    graft.Stage.session(s, "graft-clusters", d)(
+      dupClusters(stagedCandidatePairs(s, d)))
 
-  private[graft] def stagedClusters(s: SparkSession, d: String): DataFrame = {
-    val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
-    val path = stagedClusterPaths.getOrElseUpdate(key, {
-      val out = Tables.stageDir(s, "graft-clusters") + "/clusters.parquet"
-      dupClusters(stagedCandidatePairs(s, d))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
-
-  /** The LSH candidate-pair frame, staged once per (JVM, corpus dir) —
+  /** The LSH candidate-pair frame, staged once per session —
     * the second application of the stage-doc-volume-aggregates
     * boundary: FIVE registry consumers (q25 verify, q65 containment,
     * q74 quality curve, q88 spans, and the cluster-stage build above)
@@ -856,20 +831,8 @@ object Dedup {
     * consumer aggregates or joins the frame, so parquet round-trip
     * order is immaterial.
     */
-  private val stagedPairPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def stagedCandidatePairs(s: SparkSession, d: String): DataFrame = {
-    // fingerprinted key: see stagedClusters (an in-place corpus rewrite
-    // must invalidate the staged pairs, not serve the old corpus's)
-    val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
-    val path = stagedPairPaths.getOrElseUpdate(key, {
-      val out = Tables.stageDir(s, "graft-cand") + "/cand.parquet"
-      candidatePairs(s, d).write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+  private[graft] def stagedCandidatePairs(s: SparkSession, d: String): DataFrame =
+    graft.Stage.session(s, "graft-cand", d)(candidatePairs(s, d))
 
   /** DuckDB twin of [[dupClusters]] over `cand`, shared by o44/o53 so
     * the clustering semantics cannot drift: `cl` is (doc_id,
@@ -2092,25 +2055,17 @@ object Dedup {
   // merge's min-label arithmetic is exercised in both directions: a
   // batch doc can become the representative of a touched old cluster.
   //
-  // The base state (90% cluster map + capped band index) is SESSION-
-  // STAGED per (JVM, corpus fingerprint), because in production it
-  // EXISTS on disk before the batch arrives — the query's subject is
-  // the MERGE, and rebuilding the stored state in-query timed the
-  // wrong thing (29 s of q116's sf1 wall was the base CC loop;
-  // tools/IncrCluster reports the init cost separately and honestly).
-  private val stagedBaseStatePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private def stagedBaseState(s: SparkSession, d: String): String = {
-    val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
-    stagedBaseStatePaths.getOrElseUpdate(key, {
-      val out = Tables.stageDir(s, "graft-cstate")
+  // The base state (90% cluster map + capped band index) is a SESSION
+  // STAGE, because in production it EXISTS on disk before the batch
+  // arrives — the query's subject is the MERGE, and rebuilding the
+  // stored state in-query timed the wrong thing (29 s of q116's sf1
+  // wall was the base CC loop; tools/IncrCluster reports the init cost
+  // separately and honestly).
+  private def stagedBaseState(s: SparkSession, d: String): String =
+    graft.Stage.sessionDir(s, "graft-cstate", d)(out =>
       writeClusterState(
         Tables.documents(s, d).filter(col("doc_id") % 10 =!= 9), out,
-        trackSurvivors = false)
-      out
-    })
-  }
+        trackSurvivors = false))
 
   private def q116(s: SparkSession, d: String): DataFrame = {
     val dir = stagedBaseState(s, d)

@@ -659,7 +659,7 @@ object Multimodal {
     * modality's plain query and its staged-hash companion consumed the
     * SAME frame by re-running the whole decode (the entire media cost:
     * q98+q98b were 7.1 s + 7.3 s of the sf1 bench). The decode now
-    * runs once per (JVM, corpus dir, modality) and lands on the same
+    * runs once per (corpus dir, modality) stamp and lands on the same
     * per-sf stage path the DuckDB oracle already reads, so the b-
     * companion's contract is untouched. The PLAIN queries (q60/q80/
     * q98) stay the honest fused decode+pair benchmark — they do not
@@ -673,61 +673,21 @@ object Multimodal {
     * move because BMP/WAV decode is cheap and the banded pairing
     * dominates them. Hashes unchanged (same frame, same pairing).
     */
-  // Keyed by the path actually WRITTEN (not the source corpus path),
-  // with the value recording which (canonical corpus, listing
-  // fingerprint) the stage currently holds. The stage path must stay
-  // basename-derived — the DuckDB oracle reads the literal
-  // `$StageRoot/sf0.01/...` — so two corpus dirs sharing a basename
-  // alias onto ONE stage path; a source-keyed cache would mark both
-  // "staged" while the second write clobbered the first (round-12
-  // ADVICE). Path-keyed, a stamp mismatch (different source dir OR an
-  // in-place corpus rewrite changing the fingerprint) re-stages before
-  // reading.
-  //
-  // Concurrency (round-13 ADVICE): locks are PER STAGE PATH — two
-  // modalities (or two sf dirs) stage in parallel instead of
-  // serializing on one global lock — and the re-stage writes to a TMP
-  // sibling then swaps it in with two metadata ops (delete + rename),
-  // so a concurrent reader of an aliased corpus can no longer observe
-  // a directory mid-parquet-write (seconds of torn files under the old
-  // in-place overwrite); the remaining race is the unavoidable lazy-
-  // evaluation one (a frame returned before an alias re-staged the
-  // path re-plans against the new files), which the fingerprint stamps
-  // bound to genuinely-different-corpus collisions.
-  private val stagedAHashStamps =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private val stageLocks =
-    scala.collection.concurrent.TrieMap.empty[String, Object]
-
+  // The stage path must stay basename-derived — the DuckDB oracle reads
+  // the literal `$StageRoot/sf0.01/...` — so two corpus dirs sharing a
+  // basename alias onto ONE stage path (round-12 ADVICE). The stamp is
+  // the SOURCE corpus (canonical path @ listing fingerprint), so
+  // returning to the other alias, or rewriting a corpus in place,
+  // re-stages before reading; [[graft.Stage]] swaps the new hashes in
+  // by tmp + rename, so a concurrent reader never sees a torn parquet
+  // (round-13 ADVICE). The remaining race is the lazy-evaluation one: a
+  // frame returned before an alias re-staged the path re-plans against
+  // the new files.
   private def stagedAHashes(s: SparkSession, d: String, sub: String,
-      hashesOf: => DataFrame): DataFrame = {
-    val path = s"$StageRoot/${new java.io.File(d).getName}/$sub"
-    val stamp = new java.io.File(d).getCanonicalPath + "@" +
-      graft.Tables.fingerprint(d)
-    val lock = stageLocks.getOrElseUpdate(path, new Object)
-    lock.synchronized {
-      if (!stagedAHashStamps.get(path).contains(stamp)) {
-        val tmp = java.nio.file.Paths.get(
-          s"$path.tmp-${Thread.currentThread().getId}-${System.nanoTime()}")
-        hashesOf.write.mode("overwrite").parquet(tmp.toString)
-        val dst = java.nio.file.Paths.get(path)
-        deleteTree(dst)
-        java.nio.file.Files.move(tmp, dst)
-        stagedAHashStamps.put(path, stamp)
-      }
-    }
-    s.read.parquet(path)
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.exists(p)) {
-      val it = java.nio.file.Files.walk(p)
-      try {
-        it.sorted(java.util.Comparator.reverseOrder())
-          .forEach(java.nio.file.Files.delete(_))
-      } finally it.close()
-    }
-  }
+      hashesOf: => DataFrame): DataFrame =
+    s.read.parquet(graft.Stage(s,
+      s"$StageRoot/${new java.io.File(d).getName}/$sub",
+      graft.Stage.corpusStamp(d))(hashesOf.write.parquet(_)))
 
   private def q60b(s: SparkSession, d: String): DataFrame =
     Dedup.bandedHammingPairs(

@@ -311,7 +311,7 @@ object Quantization {
   /** Session-staged demo-point L2 / ADC rankings — q94's inputs, the
     * [[Similarity.stagedRanking]] discipline applied to the PQ pair
     * (see the staged-rankings note there): the exact-L2 and ADC
-    * rankings are each staged once per (JVM, corpus fingerprint)
+    * rankings are each staged once per session ([[graft.Stage]])
     * through the SAME kernels q84 benchmarks, and the recall
     * observable derives from the artifacts. q84 stays the honest
     * self-contained ADC benchmark.

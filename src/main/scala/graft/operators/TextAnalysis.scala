@@ -24,7 +24,7 @@ object TextAnalysis {
   private def wordSet(text: Column): Column = array_distinct(split(text, " "))
 
   /** The `(doc_id, w, cnt)` token pre-aggregate, staged to parquet once
-    * per (JVM, corpus fingerprint) — the round-13 application of the
+    * per session ([[graft.Stage]]) — the round-13 application of the
     * stage-aggregates discipline (`Dedup.stagedClusters`) to the
     * TOKENIZED CORPUS, the artifact every production text pipeline
     * materializes exactly once. Six registry branches each re-ran the
@@ -40,26 +40,14 @@ object TextAnalysis {
     * equal the documents table's even on a dirty corpus). q29 stays the
     * honest self-contained tokenize benchmark, exactly as q23/q44 stay
     * the candidate/clustering benchmarks while the stage-reading
-    * queries share their artifacts. Keyed by canonical path PLUS
-    * listing fingerprint (StageCacheSpec's invalidation contract);
-    * concurrent first calls race benignly.
+    * queries share their artifacts.
     */
-  private val stagedTokenPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def stagedTokenCounts(s: SparkSession, d: String): DataFrame = {
-    val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
-    val path = stagedTokenPaths.getOrElseUpdate(key, {
-      val out = Tables.stageDir(s, "graft-tokens") + "/tokens.parquet"
+  private[graft] def stagedTokenCounts(s: SparkSession, d: String): DataFrame =
+    graft.Stage.session(s, "graft-tokens", d)(
       Tables.documents(s, d)
         .select(col("doc_id"),
           explode(split(coalesce(col("text"), lit("")), " ")).as("w"))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("cnt")))
 
   // ---- incremental token-count state (round 15) ---------------------------
   // The (doc_id, w, cnt) artifact is a PURE PER-DOC function of text,
@@ -165,7 +153,7 @@ object TextAnalysis {
       below.getOrElse(tokenVersions(dir)._2))
 
   /** The `(doc_id, g, c)` ADJACENT-BIGRAM pre-aggregate, staged once per
-    * (JVM, corpus fingerprint) — the round-14 extension of the staged
+    * session ([[graft.Stage]]) — the round-14 extension of the staged
     * token artifact to word ORDER. The bigram stream is the second
     * corpus-wide tokenization every text pipeline materializes (n-gram
     * LMs, DSIR features, merge statistics), and before this stage the
@@ -181,26 +169,14 @@ object TextAnalysis {
     * that absence IS the documented q71/q64 contract, so unlike the
     * token artifact there is no null-coalesce requirement; n_docs-style
     * totals must never be derived from this frame (use the token
-    * artifact, whose row set covers every document). Keyed by canonical
-    * path PLUS listing fingerprint (StageCacheSpec's invalidation
-    * contract); concurrent first calls race benignly.
+    * artifact, whose row set covers every document).
     */
-  private val stagedBigramPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def stagedBigramCounts(s: SparkSession, d: String): DataFrame = {
-    val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
-    val path = stagedBigramPaths.getOrElseUpdate(key, {
-      val out = Tables.stageDir(s, "graft-bigrams") + "/bigrams.parquet"
+  private[graft] def stagedBigramCounts(s: SparkSession, d: String): DataFrame =
+    graft.Stage.session(s, "graft-bigrams", d)(
       Tables.documents(s, d)
         .select(col("doc_id"),
           explode(graft.functions.WordGrams(col("text"), 2)).as("g"))
-        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c"))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+        .groupBy(col("doc_id"), col("g")).agg(count(lit(1)).as("c")))
 
   // ---- q27: language identification (marker-hit argmax) ------------------
   private def q27(s: SparkSession, d: String): DataFrame = {
@@ -1006,7 +982,7 @@ object TextAnalysis {
   }
 
   /** The q99 per-doc BPE frame `(doc_id, n_ws_tokens, n_bpe_tokens,
-    * compression)`, staged once per (JVM, corpus fingerprint) — round
+    * compression)`, staged once per session — round
     * 17. FIVE registry consumers spend the q99 token definition
     * (q102's packer, q103's budget, q110's fertility, q112's
     * per-language budget, q118b's epoch allocation) and each re-ran
@@ -1020,23 +996,11 @@ object TextAnalysis {
     * tokenizer benchmark (the q23/q29/q44 discipline); consumers
     * read this frame, and every one of them aggregates or joins it,
     * so parquet round-trip order is immaterial and hashes are
-    * byte-identical. Keyed by canonical path PLUS listing
-    * fingerprint (StageCacheSpec's invalidation contract);
-    * concurrent first calls race benignly.
+    * byte-identical.
     */
-  private val stagedBpePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def stagedBpeDoc(s: SparkSession, d: String): DataFrame = {
-    val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
-    val path = stagedBpePaths.getOrElseUpdate(key, {
-      val out = Tables.stageDir(s, "graft-bpedoc") + "/bpedoc.parquet"
-      bpeApplyFromCounts(stagedTokenCounts(s, d))
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+  private[graft] def stagedBpeDoc(s: SparkSession, d: String): DataFrame =
+    graft.Stage.session(s, "graft-bpedoc", d)(
+      bpeApplyFromCounts(stagedTokenCounts(s, d)))
 
   private def q99(s: SparkSession, d: String): DataFrame =
     bpeApplyFromCounts(stagedTokenCounts(s, d))

@@ -179,23 +179,13 @@ object TrainingData {
   // hashes cannot serve. DISTINCT (doc_id, gh) is the exact consumer
   // semantics: both q42's source sets and q43's test-doc sets dedupe
   // per doc (collect_set), so the forms are value-identical
-  // (GramFormsSpec pins it). Keyed like every session stage.
-  private val stagedGramPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  private[graft] def stagedGramHashes(s: SparkSession, d: String): DataFrame = {
-    val key = new java.io.File(d).getCanonicalPath + "@" + Tables.fingerprint(d)
-    val path = stagedGramPaths.getOrElseUpdate(key, {
-      val out = Tables.stageDir(s, "graft-grams") + "/grams.parquet"
+  // (GramFormsSpec pins it).
+  private[graft] def stagedGramHashes(s: SparkSession, d: String): DataFrame =
+    graft.Stage.session(s, "graft-grams", d)(
       Tables.documents(s, d)
         .select(col("doc_id"),
           explode(graft.functions.GramHashesLong(col("text"), 8)).as("gh"))
-        .dropDuplicates("doc_id", "gh")
-        .write.mode("overwrite").parquet(out)
-      out
-    })
-    s.read.parquet(path)
-  }
+        .dropDuplicates("doc_id", "gh"))
 
   // ---- q42: cross-source contamination (shared 8-gram count) -------------
   // Long n-grams make overlap evidence, not noise (the 13-gram idea from

@@ -105,7 +105,7 @@ object Curate {
     val docs = Tables.documents(spark, sfDir)
 
     // The dedup head's cluster map and the corpus token artifact.
-    // Default: the per-JVM fingerprint-keyed session stages (one q44
+    // Default: the fingerprint-keyed session stages (one q44
     // loop + one full tokenize per corpus fingerprint). With
     // `stateDir`: the INCREMENTAL heads (round 15) — the first run
     // initializes persistent state (cluster map + capped band index +
@@ -156,28 +156,24 @@ object Curate {
     // nothing.
     //
     // `resume` is the restart contract exercised as code (crash-tested
-    // by CurateRestartSpec): a stage whose artifact already carries a
-    // parquet _SUCCESS marker AND a matching generation stamp is READ
-    // BACK, not recomputed — `df` is by-name precisely so a skipped
-    // stage's eager upstream work (label-propagation rounds, the
-    // k-means fit) never runs. A stage that crashed MID-write has no
-    // _SUCCESS and recomputes into an overwrite, so torn files cannot
-    // be resumed into. `failAfter` injects the crash between a
-    // completed write and the next stage.
+    // by CurateRestartSpec): a stage whose artifact [[graft.Stage]]
+    // finds complete under a matching stamp is READ BACK, not
+    // recomputed — `df` is by-name precisely so a skipped stage's eager
+    // upstream work (label-propagation rounds, the k-means fit) never
+    // runs. Without `resume` every stage rebuilds. `failAfter` injects
+    // the crash between a completed write and the next stage.
     //
     // The stamp (round-13 ADVICE): _SUCCESS alone says "some run once
     // finished writing here", not "THIS run's lineage wrote here" — if
     // the source corpus changed, or artifacts from two generations
     // coexist (an early stage dir deleted while a later one survives
     // after the corpus moved on), a marker-only resume silently mixes
-    // generations. Each stage therefore writes _GRAFT_STAMP carrying
-    // the corpus fingerprint plus the ordered chain of upstream stage
-    // names (so a run with a different stage sequence — e.g. with vs
-    // without benchmark decontamination — never reuses the other's
-    // artifacts), written AFTER the parquet write so a crash between
-    // the two recomputes on resume (safe direction). Reuse across an
-    // upstream recompute is sound because every stage kernel is
-    // deterministic: same corpus + same chain => same content.
+    // generations. Each stage's stamp is therefore the corpus
+    // fingerprint plus the ordered chain of upstream stage names (so a
+    // run with a different stage sequence — e.g. with vs without
+    // benchmark decontamination — never reuses the other's artifacts).
+    // Reuse across an upstream recompute is sound because every stage
+    // kernel is deterministic: same corpus + same chain => same content.
     var mark = System.nanoTime()
     var chain = s"corpus:${Tables.fingerprint(sfDir)}"
     // `tag` folds stage PARAMETERS into the stamp chain without moving
@@ -187,17 +183,10 @@ object Curate {
     // other setting's artifact.
     def stage(df: => DataFrame, name: String, tag: String = ""): DataFrame = {
       chain = s"$chain/$name$tag"
-      val path = s"$outDir/$name"
-      val stamp = java.nio.file.Paths.get(path, "_GRAFT_STAMP")
-      val complete = new java.io.File(s"$path/_SUCCESS").exists &&
-        java.nio.file.Files.exists(stamp) &&
-        new String(java.nio.file.Files.readAllBytes(stamp),
-          java.nio.charset.StandardCharsets.UTF_8) == chain
-      if (!(resume && complete)) {
-        df.write.mode("overwrite").parquet(path)
-        java.nio.file.Files.write(stamp,
-          chain.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        stageWalls.foreach(_ += name -> (System.nanoTime() - mark) / 1e9)
+      val path = graft.Stage(spark, s"$outDir/$name", chain, reuse = resume) {
+        tmp =>
+          df.write.parquet(tmp)
+          stageWalls.foreach(_ += name -> (System.nanoTime() - mark) / 1e9)
       }
       mark = System.nanoTime()
       if (failAfter.contains(name)) throw new InjectedCrash(name)

@@ -1,13 +1,12 @@
 package graft
 
-import graft.functions.RiskVectorAgg
 import graft.operators.{Multimodal, RiskScoring, ScaleVariants}
 import graft.sources.FileCatalog
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** Typed aggregator, approx-distinct accuracy, multimodal plumbing, and
+/** Approx-distinct accuracy, multimodal plumbing, and
   * file-catalog pruning.
   */
 class ExtensionsSpec extends AnyFunSuite {
@@ -26,28 +25,6 @@ class ExtensionsSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](Tables.events(spark, dir))
     assert(e.getMessage.contains("unexpected type"))
     assert(e.getMessage.contains("StringType"))
-  }
-
-  test("typed RiskVectorAgg matches the declarative risk table") {
-    val events = Tables.events(spark, TestSpark.sf0001)
-    val typed = events
-      .select(col("user_id"), col("event_type"), col("event_id"), col("value"))
-      .as[RiskVectorAgg.EventRow]
-      .groupByKey(_.user_id)
-      .agg(RiskVectorAgg.agg.toColumn.name("risk"))
-      .map { case (uid, v) => (uid, v.n_events, v.n_types, v.n_purchases, v.safety_score) }
-      .collect().map(t => t._1 -> t).toMap
-    val declarative = RiskScoring.riskTable(events)
-      .select("user_id", "n_events", "n_types", "n_purchases", "safety_score")
-      .collect()
-    assert(declarative.nonEmpty)
-    declarative.foreach { r =>
-      val (_, n, t, p, s) = typed(r.getLong(0))
-      assert(n == r.getAs[Long]("n_events"))
-      assert(t == r.getAs[Long]("n_types"))
-      assert(p == r.getAs[Long]("n_purchases"))
-      assert(math.abs(s - r.getAs[Double]("safety_score")) < 1e-9)
-    }
   }
 
   test("approx_count_distinct stays within 5% of exact") {
