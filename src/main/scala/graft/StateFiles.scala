@@ -4,9 +4,11 @@ import java.nio.channels.{FileChannel, OverlappingFileLockException}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
-/** Pointer + lock discipline shared by the persistent LSM state dirs
-  * (the cluster/survivor state in [[graft.operators.Dedup]] and the
-  * token state in [[graft.operators.TextAnalysis]]).
+/** Pointer, meta and lock discipline shared by the four persistent
+  * state families — the cluster state of [[graft.operators.Dedup]], the
+  * token state of [[graft.operators.TextAnalysis]], the semantic state
+  * of [[graft.operators.Similarity]] and the media state of
+  * [[graft.operators.Multimodal]] — all through [[VersionedState]].
   *
   * Pointer writes are ATOMIC: the content lands in a temp file first
   * and renames over `_LATEST` with `ATOMIC_MOVE`, so a reader racing
@@ -31,30 +33,25 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   */
 private[graft] object StateFiles {
 
-  private def pointerPath(dir: String, name: String): Path =
-    Paths.get(dir, name)
+  private def pointerPath(dir: String): Path = Paths.get(dir, "_LATEST")
 
-  /** `(latest, base)` from the pointer file; `(0, 0)` when absent.
-    * `baseDefault` supplies the base for a legacy one-field pointer.
+  def hasPointer(dir: String): Boolean = Files.exists(pointerPath(dir))
+
+  /** `(latest, base)` from the pointer file; `(0, 0)` when absent. A
+    * legacy one-field pointer predates compaction: every version from 1
+    * is live.
     */
-  def readPointer(dir: String, name: String = "_LATEST",
-      baseDefault: Int => Int = identity): (Int, Int) = {
-    val p = pointerPath(dir, name)
+  def readPointer(dir: String): (Int, Int) = {
+    val p = pointerPath(dir)
     if (!Files.exists(p)) return (0, 0)
     val parts = new String(Files.readAllBytes(p), StandardCharsets.UTF_8)
       .trim.split("\\s+")
-    (parts(0).toInt,
-      if (parts.length > 1) parts(1).toInt else baseDefault(parts(0).toInt))
+    (parts(0).toInt, if (parts.length > 1) parts(1).toInt else 1)
   }
 
   /** Atomically publish `"<latest> <base>"`: temp file + ATOMIC_MOVE. */
-  def writePointer(dir: String, latest: Int, base: Int,
-      name: String = "_LATEST"): Unit = {
-    val tmp = Files.createTempFile(Paths.get(dir), s".$name", ".tmp")
-    Files.write(tmp, s"$latest $base".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, pointerPath(dir, name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writePointer(dir: String, latest: Int, base: Int): Unit =
+    writeMeta(dir, "_LATEST", s"$latest $base")
 
   /** Atomically publish a small metadata file (format marker, pinned
     * parameters): temp file + ATOMIC_MOVE, the pointer discipline.
@@ -80,38 +77,20 @@ private[graft] object StateFiles {
     * an opaque parquet path error (or worse, silently mix verdict
     * generations). A dir with no pointer passes: init will stamp it.
     */
-  def requireMeta(dir: String, name: String, expected: String,
-      what: String): Unit = {
-    if (!Files.exists(Paths.get(dir, "_LATEST"))) return
+  def requireMeta(dir: String, name: String, expected: String): Unit = {
+    if (!hasPointer(dir)) return
     readMeta(dir, name) match {
       case Some(`expected`) => ()
       case Some(other) => throw new IllegalStateException(
-        s"$what state dir $dir was initialized with '$other' but this " +
+        s"state dir $dir was initialized with '$other' but this " +
           s"sync passed '$expected' — mixing generations would silently " +
           "corrupt the state; re-init (or pass the original values)")
       case None => throw new IllegalStateException(
-        s"$what state dir $dir has a pointer but no $name stamp: this is " +
+        s"state dir $dir has a pointer but no $name stamp: this is " +
           "a legacy (pre-versioned) layout this code cannot fold into — " +
           "re-init the state dir from the current corpus")
     }
   }
-
-  /** Remove versioned side-table dirs `<table>_v<v>` for v < `below` —
-    * the shared walk-and-delete of every LSM state's janitor (cluster /
-    * semantic / token states all gc the same way). Returns the number
-    * of version directories removed.
-    */
-  def gcVersions(dir: String, tables: Seq[String], below: Int): Int =
-    (1 until below).flatMap(v => tables.map(t => (t, v))).count {
-      case (t, v) =>
-        val p = Paths.get(dir, s"${t}_v$v")
-        Files.exists(p) && {
-          import scala.jdk.CollectionConverters._
-          val files = Files.walk(p).iterator().asScala.toSeq
-          files.reverse.foreach(Files.deleteIfExists(_))
-          true
-        }
-    }
 
   /** Run `f` holding the exclusive writer lock of `dir`; throw
     * `IllegalStateException` immediately if another writer (this JVM

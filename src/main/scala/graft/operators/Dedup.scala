@@ -1535,11 +1535,8 @@ object Dedup {
       checkpointDir)
 
   // ---- persistent cluster state: the incremental dedup head's artifacts --
-  // What a production ingest keeps between batches, all LSM-style
-  // versioned tables under one dir, committed TOGETHER by one atomic
-  // pointer flip (round 16 rework — the previous layout appended the
-  // index/roster AFTER the flip and documented the duplicate-row
-  // residue; the versioned commit has no residue at all):
+  // What a production ingest keeps between batches: five tables of one
+  // graft.VersionedState, committed TOGETHER by one atomic pointer flip:
   //   clusters_v{n}   (doc_id, cluster_id)          v{base} full, above deltas
   //   survivors_v{n}  (doc_id, cluster_id,
   //                    cluster_size, quality)       per-cluster canonical
@@ -1552,72 +1549,41 @@ object Dedup {
   //                                                 ineligible (global cap)
   //   ids_v{n}        (doc_id, quality)             the batch's roster slice,
   //                                                 scored once at ingest
-  // The pointer file `_LATEST` carries "<latest> <base>" and is
-  // published by atomic rename (graft.StateFiles), so a reader never
-  // sees a torn pointer; every version-v artifact is written BEFORE
-  // the flip, and all reads are POINTER-BOUNDED (union of versions
-  // base..latest only). Crash contract, exact: a crash before the flip
-  // leaves orphan v-dirs no reader resolves, and the replayed batch —
-  // derived by anti-joining the COMMITTED roster — recomputes the same
-  // version into an overwrite; a crash after the flip means the batch
-  // is fully committed and the replay's anti-join finds nothing. There
-  // is no partially-ingested state to reconcile. Writers serialize
-  // through an OS-level exclusive lock (StateFiles.withWriterLock):
-  // the batch pipeline (Curate --state) and the streaming leg
-  // (clusterStateStream) are both advertised writers of ONE state dir,
-  // and a second concurrent writer FAILS LOUDLY instead of silently
-  // losing a batch's merges to a read-modify-write race. Readers never
-  // lock. Compaction is pure addition (new full versions + pointer
-  // flip); versions below the PREVIOUS base are then garbage-collected
-  // — the one-generation grace keeps any reader that resolved the
-  // pointer since the previous compaction valid while the janitor runs.
+  // The store's commit writes every version-v table before the flip,
+  // and every read is pointer-bounded. Crash contract, exact: a crash
+  // before the flip leaves orphan v-dirs no reader resolves, and the
+  // replayed batch — derived by anti-joining the COMMITTED roster —
+  // recomputes the same version into an overwrite; a crash after the
+  // flip means the batch is fully committed and the replay's anti-join
+  // finds nothing. There is no partially-ingested state to reconcile.
+  // Writers serialize through an OS-level exclusive lock
+  // (StateFiles.withWriterLock): the batch pipeline (Curate --state)
+  // and the streaming leg (clusterStateStream) are both advertised
+  // writers of ONE state dir, and a second concurrent writer FAILS
+  // LOUDLY instead of silently losing a batch's merges to a
+  // read-modify-write race. Readers never lock.
 
-  private def latestPointer(dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(dir, "_LATEST")
-
-  private[graft] val StateTables =
-    Seq("clusters", "survivors", "band_index", "saturated", "ids")
-
-  // Format marker (round 17): a round-15-era dir (unversioned
-  // band_index/ids, no survivors_v*) fed to this code used to die
-  // inside readParts with an opaque parquet path-not-found — the
-  // marker turns that into an explicit "legacy layout, re-init"
-  // failure at the first pointer resolution.
+  // The `_FORMAT` marker: a dir of an older layout (unversioned
+  // band_index/ids, no survivors_v*) fails loudly at the first pointer
+  // resolution instead of inside a parquet read.
   private val ClusterStateFormat = "cluster-state-v2"
 
-  /** `(latest, base)` versions from the pointer file; base = the most
-    * recent FULL map, every version above it a delta. Reads/writes go
-    * through [[graft.StateFiles]]: the pointer is published with an
-    * atomic rename (a racing reader sees old or new, never torn).
-    * Every resolution also checks the format marker, so a legacy dir
-    * fails loudly here instead of deep inside a parquet read.
-    */
-  private def stateVersions(dir: String): (Int, Int) = {
-    graft.StateFiles.requireMeta(dir, "_FORMAT", ClusterStateFormat, "cluster")
-    graft.StateFiles.readPointer(dir)
-  }
-
-  private def writePointer(dir: String, latest: Int, base: Int): Unit =
-    graft.StateFiles.writePointer(dir, latest, base)
-
-  // deltas compact into a new full version once they exceed this
-  // fraction of the base map's rows — the LSM read/write balance knob
-  private val CompactFraction = 0.3
-  // ...or once this many delta VERSIONS stack up regardless of mass: a
-  // stream of small micro-batches (clusterStateStream) accumulates
-  // rows slowly but versions fast, and the fold's read cost is per
-  // part dir, not per row
-  private val MaxDeltaVersions = 64
-
-  /** Pointer-bounded union of one side table's version parts. */
-  private def readParts(s: SparkSession, dir: String, name: String): DataFrame = {
-    val (latest, base) = stateVersions(dir)
-    s.read.parquet((base to latest).map(v => s"$dir/${name}_v$v"): _*)
-  }
+  private def clusterState(dir: String): graft.VersionedState =
+    new graft.VersionedState(dir, Seq(
+        graft.VersionedState.Keyed("clusters", "doc_id",
+          Seq("doc_id", "cluster_id")),
+        graft.VersionedState.Keyed("survivors", "cluster_id",
+          Seq("doc_id", "cluster_id", "cluster_size", "quality"),
+          tombstone = Some("doc_id")),
+        graft.VersionedState.Union("band_index"),
+        graft.VersionedState.Union("saturated", distinct = true),
+        graft.VersionedState.Union("ids")),
+      massTable = Some("clusters"),
+      marker = Some("_FORMAT" -> ClusterStateFormat))
 
   /** The stored capped band index `(bk, idx_id, sig)`. */
   private[graft] def readBandIndex(s: SparkSession, dir: String): DataFrame =
-    readParts(s, dir, "band_index")
+    clusterState(dir).read(s, "band_index")
 
   /** The ingested-id roster with each doc's quality score `(doc_id,
     * quality)` — scored ONCE at ingest with the q28 kernel
@@ -1628,26 +1594,17 @@ object Dedup {
     * new scan.
     */
   def readIdQuality(s: SparkSession, dir: String): DataFrame =
-    readParts(s, dir, "ids")
+    clusterState(dir).read(s, "ids")
 
   private def readSaturated(s: SparkSession, dir: String): DataFrame =
-    readParts(s, dir, "saturated").distinct()
+    clusterState(dir).read(s, "saturated")
 
   /** The stored cluster map: the base full version with every delta
     * above it folded in (latest version wins per doc). A just-compacted
     * or just-initialized state reads as ONE parquet scan, no shuffle.
     */
-  def readClusterState(s: SparkSession, dir: String): DataFrame = {
-    val (latest, base) = stateVersions(dir)
-    if (latest == base) s.read.parquet(s"$dir/clusters_v$base")
-    else
-      (base to latest)
-        .map(v => s.read.parquet(s"$dir/clusters_v$v")
-          .select(col("doc_id"), col("cluster_id"), lit(v).as("_v")))
-        .reduce(_ unionByName _)
-        .groupBy(col("doc_id"))
-        .agg(max_by(col("cluster_id"), col("_v")).as("cluster_id"))
-  }
+  def readClusterState(s: SparkSession, dir: String): DataFrame =
+    clusterState(dir).read(s, "clusters")
 
   /** The stored per-cluster survivor table `(doc_id, cluster_id,
     * cluster_size, quality)` — one row per CLUSTERED near-dup family
@@ -1661,24 +1618,8 @@ object Dedup {
     * first-seen members, so no full-corpus re-selection ever runs
     * (ClusterSurvivorSpec pins the equality across chained batches).
     */
-  def readSurvivorState(s: SparkSession, dir: String): DataFrame = {
-    val (latest, base) = stateVersions(dir)
-    val folded =
-      if (latest == base) s.read.parquet(s"$dir/survivors_v$base")
-      else
-        (base to latest)
-          .map(v => s.read.parquet(s"$dir/survivors_v$v")
-            .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-              col("quality"), lit(v).as("_v")))
-          .reduce(_ unionByName _)
-          .groupBy(col("cluster_id"))
-          .agg(max_by(struct(col("doc_id"), col("cluster_size"),
-            col("quality")), col("_v")).as("r"))
-          .select(col("r.doc_id").as("doc_id"), col("cluster_id"),
-            col("r.cluster_size").as("cluster_size"),
-            col("r.quality").as("quality"))
-    folded.filter(col("doc_id").isNotNull)
-  }
+  def readSurvivorState(s: SparkSession, dir: String): DataFrame =
+    clusterState(dir).read(s, "survivors")
 
   // quality scoring needs n_chars; the state APIs accept a bare
   // (doc_id, text) frame (the streaming leg's shape) and derive it
@@ -1765,39 +1706,38 @@ object Dedup {
     graft.StateFiles.withWriterLock(dir) {
       val s = docs.sparkSession
       val d = ensureNChars(docs)
-      val (idxSlice, saturated) = initBandFrames(d)
-      idxSlice.write.mode("overwrite").parquet(s"$dir/band_index_v1")
-      saturated.write.mode("overwrite").parquet(s"$dir/saturated_v1")
-      val ids =
-        if (trackSurvivors) scoredIds(d)
-        else d.select(col("doc_id"), lit(null).cast("double").as("quality"))
-      ids.write.mode("overwrite").parquet(s"$dir/ids_v1")
-      // round 17: the init CC loop rides star edges (the q44 change —
-      // clique→star connectivity equivalence, same capped-bucket
-      // eligibility as the pair explode), so the one O(corpus)
-      // clustering pass feeds Σ|bucket| edges instead of Σ|bucket|²/2
-      // pairs; ClusterSurvivorSpec/IncrCluster pin the map against
-      // from-scratch dupClusters(candidatePairsOf(...)) results.
-      dupClusters(starEdgesOf(bandRows(d.select(col("doc_id"), col("text")))),
-          checkpointDir)
-        .write.mode("overwrite").parquet(s"$dir/clusters_v1")
-      if (trackSurvivors)
-        canonicalDocsPreScored(s.read.parquet(s"$dir/ids_v1"),
-            s.read.parquet(s"$dir/clusters_v1"))
-          .filter(col("cluster_size") >= 2)
-          .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-            col("quality"))
-          .write.mode("overwrite").parquet(s"$dir/survivors_v1")
-      else s.emptyDataFrame
-        .select(lit(null).cast("long").as("doc_id"),
-          lit(null).cast("long").as("cluster_id"),
-          lit(null).cast("long").as("cluster_size"),
-          lit(null).cast("double").as("quality"))
-        .write.mode("overwrite").parquet(s"$dir/survivors_v1")
-      // marker before the pointer: once a reader can resolve v1 the
-      // format check already passes
-      graft.StateFiles.writeMeta(dir, "_FORMAT", ClusterStateFormat)
-      writePointer(dir, 1, 1)
+      val state = clusterState(dir)
+      state.commit(s, full = true) { v =>
+        val (idxSlice, saturated) = initBandFrames(d)
+        idxSlice.write.mode("overwrite").parquet(state.path("band_index", v))
+        saturated.write.mode("overwrite").parquet(state.path("saturated", v))
+        val ids =
+          if (trackSurvivors) scoredIds(d)
+          else d.select(col("doc_id"), lit(null).cast("double").as("quality"))
+        ids.write.mode("overwrite").parquet(state.path("ids", v))
+        // the init CC loop rides star edges (clique→star connectivity
+        // equivalence, same capped-bucket eligibility as the pair
+        // explode), so the one O(corpus) clustering pass feeds Σ|bucket|
+        // edges instead of Σ|bucket|²/2 pairs; ClusterSurvivorSpec and
+        // IncrCluster pin the map against from-scratch
+        // dupClusters(candidatePairsOf(...)) results.
+        dupClusters(starEdgesOf(bandRows(d.select(col("doc_id"), col("text")))),
+            checkpointDir)
+          .write.mode("overwrite").parquet(state.path("clusters", v))
+        if (trackSurvivors)
+          canonicalDocsPreScored(s.read.parquet(state.path("ids", v)),
+              s.read.parquet(state.path("clusters", v)))
+            .filter(col("cluster_size") >= 2)
+            .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
+              col("quality"))
+            .write.mode("overwrite").parquet(state.path("survivors", v))
+        else s.emptyDataFrame
+          .select(lit(null).cast("long").as("doc_id"),
+            lit(null).cast("long").as("cluster_id"),
+            lit(null).cast("long").as("cluster_size"),
+            lit(null).cast("double").as("quality"))
+          .write.mode("overwrite").parquet(state.path("survivors", v))
+      }
     }
 
   /** Bring stored cluster state up to date with a NEW corpus snapshot
@@ -1810,7 +1750,7 @@ object Dedup {
     * the updated map. A snapshot with no new docs returns the stored
     * map untouched (no version bump).
     *
-    * Cap semantics (round 16): GLOBAL by default — a bucket proposes
+    * Cap semantics: GLOBAL by default — a bucket proposes
     * edges iff its true corpus-wide size stays within [[BandCap]], the
     * exact eligibility a from-scratch rebuild applies, so the merged
     * map equals the rebuild everywhere except the inherent CROSSING
@@ -1818,7 +1758,7 @@ object Dedup {
     * persist after it crosses — incremental ingest never retroactively
     * unlinks; tools/IncrCluster traces every residual diff row to a
     * crossing bucket and fails otherwise). `permissive = true` opts
-    * into the round-15 scope-local rules ([[starEdgesFromBands]] —
+    * into the scope-local rules ([[starEdgesFromBands]] —
     * higher recall inside saturated buckets, the 8.9%-of-rows sf10
     * drift documented in SCALE.md round 15). The index append and
     * saturation bookkeeping are global-style under BOTH modes, so a
@@ -1827,7 +1767,7 @@ object Dedup {
   def updateClusterState(s: SparkSession, dir: String, docs: DataFrame,
       checkpointDir: Option[String] = None,
       permissive: Boolean = false,
-      maxDeltaVersions: Int = MaxDeltaVersions): DataFrame =
+      maxDeltaVersions: Int = graft.VersionedState.MaxDeltaVersions): DataFrame =
     graft.StateFiles.withWriterLock(dir) {
       updateLocked(s, dir, docs, checkpointDir, permissive, maxDeltaVersions)
     }
@@ -1835,6 +1775,7 @@ object Dedup {
   private def updateLocked(s: SparkSession, dir: String, docs: DataFrame,
       checkpointDir: Option[String], permissive: Boolean,
       maxDeltaVersions: Int): DataFrame = {
+    val state = clusterState(dir)
     val d = ensureNChars(docs)
     val roster = readIdQuality(s, dir)
     // the batch is persisted because THREE kernels consume it (the
@@ -1864,63 +1805,32 @@ object Dedup {
       else starEdgesGlobalCap(sb, stats)
     val (delta, newRows, repMap) =
       mergeDelta(readClusterState(s, dir), edges, checkpointDir)
-    val (latest, base) = stateVersions(dir)
-    val v = latest + 1
-    // COMMIT ORDER: every version-v artifact lands BEFORE the pointer
-    // flips, and the batch itself derives from the COMMITTED roster —
-    // a crash before the flip leaves orphan v-dirs no reader resolves
-    // and the replay overwrites them with identical content; a crash
-    // after the flip makes the replay's anti-join empty. Exactly-once
-    // state transitions with no residue (the round-15 append-after-
-    // flip layout left duplicate index/ids rows behind a post-flip
-    // crash; ClusterMergeSpec pins the rollback-replay fixpoint).
-    delta.write.mode("overwrite").parquet(s"$dir/clusters_v$v")
-    // the roster slice lands first among the version-v writes so the
-    // survivor update's first-seen lookup READS IT BACK (a thin
-    // columnar read) instead of re-running the scoring pass; write
-    // order within a version is free — nothing resolves any v-file
-    // until the pointer flips
-    scoredIds(batch).write.mode("overwrite").parquet(s"$dir/ids_v$v")
-    survivorDelta(readSurvivorState(s, dir), repMap, newRows,
-        s.read.parquet(s"$dir/ids_v$v").unionByName(roster))
-      .write.mode("overwrite").parquet(s"$dir/survivors_v$v")
-    // index slice: the batch's band rows for buckets whose true size
-    // stays within the cap (the index never grows a bucket past it)
-    sb.select(col("bk"), col("doc_id").as("idx_id"), col("sig"))
-      .join(stats.filter(!col("sat") && col("t") <= BandCap).select("bk"),
-        Seq("bk"))
-      .write.mode("overwrite").parquet(s"$dir/band_index_v$v")
-    stats.filter(!col("sat") && col("t") > BandCap).select("bk")
-      .write.mode("overwrite").parquet(s"$dir/saturated_v$v")
-    writePointer(dir, v, base)
+    // the batch derives from the COMMITTED roster, so a crash before
+    // the flip replays into an overwrite of the same version and a
+    // crash after it makes the replay's anti-join empty
+    // (ClusterMergeSpec pins the rollback-replay fixpoint)
+    state.commit(s, maxDeltas = maxDeltaVersions) { v =>
+      delta.write.mode("overwrite").parquet(state.path("clusters", v))
+      // the roster slice lands first among the version-v writes so the
+      // survivor update's first-seen lookup READS IT BACK (a thin
+      // columnar read) instead of re-running the scoring pass; write
+      // order within a version is free — nothing resolves any v-file
+      // until the pointer flips
+      scoredIds(batch).write.mode("overwrite").parquet(state.path("ids", v))
+      survivorDelta(readSurvivorState(s, dir), repMap, newRows,
+          s.read.parquet(state.path("ids", v)).unionByName(roster))
+        .write.mode("overwrite").parquet(state.path("survivors", v))
+      // index slice: the batch's band rows for buckets whose true size
+      // stays within the cap (the index never grows a bucket past it)
+      sb.select(col("bk"), col("doc_id").as("idx_id"), col("sig"))
+        .join(stats.filter(!col("sat") && col("t") <= BandCap).select("bk"),
+          Seq("bk"))
+        .write.mode("overwrite").parquet(state.path("band_index", v))
+      stats.filter(!col("sat") && col("t") > BandCap).select("bk")
+        .write.mode("overwrite").parquet(state.path("saturated", v))
+    }
     sb.unpersist(blocking = false)
     batch.unpersist(blocking = false)
-    // LSM compaction: once the deltas exceed CompactFraction of the
-    // base (or maxDeltaVersions stack up), fold EVERY table into a new
-    // full version (pure addition — a crash mid-compaction leaves the
-    // delta state live), then garbage-collect versions below the
-    // PREVIOUS base: superseded by the compaction before this one, so
-    // any reader that resolved the pointer since then stays valid.
-    // Counts come from parquet footers, not scans.
-    val deltaRows = (base + 1 to v)
-      .map(x => s.read.parquet(s"$dir/clusters_v$x").count()).sum
-    if (deltaRows > CompactFraction *
-        s.read.parquet(s"$dir/clusters_v$base").count() ||
-      v - base >= maxDeltaVersions) {
-      val nv = v + 1
-      readClusterState(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/clusters_v$nv")
-      readSurvivorState(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/survivors_v$nv")
-      readBandIndex(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/band_index_v$nv")
-      readSaturated(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/saturated_v$nv")
-      readIdQuality(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/ids_v$nv")
-      writePointer(dir, nv, nv)
-      gcClusterState(dir, below = Some(base))
-    }
     readClusterState(s, dir)
   }
 
@@ -1962,10 +1872,9 @@ object Dedup {
     * grace). Returns the number of version directories removed.
     */
   def gcClusterState(dir: String, below: Option[Int] = None): Int =
-    graft.StateFiles.gcVersions(dir, StateTables,
-      below.getOrElse(stateVersions(dir)._2))
+    clusterState(dir).gc(below)
 
-  /** RECONCILING compaction (round 17) — retire the crossing corner.
+  /** RECONCILING compaction — retire the crossing corner.
     *
     * The incremental map diverges from a from-scratch rebuild in
     * exactly one place: edges committed while a bucket was still under
@@ -1997,8 +1906,8 @@ object Dedup {
   def reconcileClusterState(s: SparkSession, dir: String,
       checkpointDir: Option[String] = None): DataFrame =
     graft.StateFiles.withWriterLock(dir) {
-      val (latest, base) = stateVersions(dir)
-      require(latest > 0, s"state dir $dir is not initialized")
+      val state = clusterState(dir)
+      require(state.initialized, s"state dir $dir is not initialized")
       // live buckets: never crossed the cap ⇒ index holds their FULL
       // membership and the rebuild would propose exactly their cliques
       def live = readBandIndex(s, dir).select(col("bk"), col("idx_id"))
@@ -2008,30 +1917,29 @@ object Dedup {
         .filter(col("idx_id") =!= col("hub"))
         .select(col("hub").as("doc_a"), col("idx_id").as("doc_b"))
         .distinct()
-      val v = latest + 1
-      dupClusters(edges, checkpointDir)
-        .write.mode("overwrite").parquet(s"$dir/clusters_v$v")
-      val roster = readIdQuality(s, dir)
-      // trackSurvivors = false states carry a null-quality roster; they
-      // keep their placeholder survivor table through a reconcile
-      val tracked = roster.filter(col("quality").isNotNull)
-        .limit(1).count() > 0
-      val survivors =
-        if (tracked)
-          canonicalDocsPreScored(roster,
-              s.read.parquet(s"$dir/clusters_v$v"))
-            .filter(col("cluster_size") >= 2)
-            .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-              col("quality"))
-        else readSurvivorState(s, dir)
-      survivors.write.mode("overwrite").parquet(s"$dir/survivors_v$v")
-      readBandIndex(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/band_index_v$v")
-      readSaturated(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/saturated_v$v")
-      roster.write.mode("overwrite").parquet(s"$dir/ids_v$v")
-      writePointer(dir, v, v)
-      gcClusterState(dir, below = Some(base))
+      state.commit(s, full = true) { v =>
+        dupClusters(edges, checkpointDir)
+          .write.mode("overwrite").parquet(state.path("clusters", v))
+        val roster = readIdQuality(s, dir)
+        // trackSurvivors = false states carry a null-quality roster; they
+        // keep their placeholder survivor table through a reconcile
+        val tracked = roster.filter(col("quality").isNotNull)
+          .limit(1).count() > 0
+        val survivors =
+          if (tracked)
+            canonicalDocsPreScored(roster,
+                s.read.parquet(state.path("clusters", v)))
+              .filter(col("cluster_size") >= 2)
+              .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
+                col("quality"))
+          else readSurvivorState(s, dir)
+        survivors.write.mode("overwrite").parquet(state.path("survivors", v))
+        readBandIndex(s, dir).write.mode("overwrite")
+          .parquet(state.path("band_index", v))
+        readSaturated(s, dir).write.mode("overwrite")
+          .parquet(state.path("saturated", v))
+        roster.write.mode("overwrite").parquet(state.path("ids", v))
+      }
       readClusterState(s, dir)
     }
 
@@ -2041,12 +1949,13 @@ object Dedup {
     */
   def syncClusterState(s: SparkSession, dir: String, docs: DataFrame,
       checkpointDir: Option[String] = None): DataFrame =
-    if (java.nio.file.Files.exists(latestPointer(dir)))
+    if (clusterState(dir).initialized)
       updateClusterState(s, dir, docs, checkpointDir)
     else {
       writeClusterState(docs, dir, checkpointDir)
       readClusterState(s, dir)
     }
+
   // Fixture form: the corpus is split 90/10 on doc_id % 10 — the base
   // corpus is clustered (the stored map a prior run would have staged),
   // the 10% batch proposes edges against the base's capped band index

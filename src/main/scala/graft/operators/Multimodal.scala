@@ -480,14 +480,14 @@ object Multimodal {
           col("cluster_id") === col("media_id")).as("keep"))
   }
 
-  // ---- incremental media-hash state (round 17) ----------------------------
+  // ---- incremental media-hash state ---------------------------------------
   // At 100 TB of media, re-decoding the whole sidecar on every ingest
   // is the difference between a pipeline and a demo: the Curate
   // `--media` stage re-ran every decode whenever ONE file changed
   // (the stage stamp folds a listing fingerprint — correct, but all
   // or nothing). This state keeps a per-path print roster
-  // `(media_id, path, mtime, len, media_type, sh)` under the shared
-  // StateFiles discipline (versioned parts, atomic pointer, writer
+  // `(media_id, path, mtime, len, media_type, sh)` as the keyed table
+  // of a graft.VersionedState (versioned parts, atomic pointer, writer
   // lock, mass/version compaction): a sync lists the dir WITHOUT
   // reading payload bytes (binaryFile prunes `content` when the
   // column is unselected), diffs the listing against the roster on
@@ -500,26 +500,15 @@ object Multimodal {
   // media_id). Verdicts then come from [[mediaVerdictsFromPrints]]
   // over the stored prints — zero payload bytes touched.
 
-  private val MediaMaxDeltaVersions = 64
+  private def mediaState(dir: String): graft.VersionedState =
+    new graft.VersionedState(dir, Seq(graft.VersionedState.Keyed("media",
+        "media_id", Seq("media_id", "path", "mtime", "len", "media_type", "sh"),
+        tombstone = Some("path"))),
+      massTable = Some("media"))
 
   /** Current roster `(media_id, path, mtime, len, media_type, sh)`. */
-  def readMediaState(s: SparkSession, dir: String): DataFrame = {
-    val (latest, base) = graft.StateFiles.readPointer(dir)
-    val f =
-      if (latest == base) s.read.parquet(s"$dir/media_v$base")
-      else (base to latest)
-        .map(v => s.read.parquet(s"$dir/media_v$v")
-          .select(col("media_id"), col("path"), col("mtime"), col("len"),
-            col("media_type"), col("sh"), lit(v).as("_v")))
-        .reduce(_ unionByName _)
-        .groupBy(col("media_id"))
-        .agg(max_by(struct(col("path"), col("mtime"), col("len"),
-          col("media_type"), col("sh")), col("_v")).as("r"))
-        .select(col("media_id"), col("r.path").as("path"),
-          col("r.mtime").as("mtime"), col("r.len").as("len"),
-          col("r.media_type").as("media_type"), col("r.sh").as("sh"))
-    f.filter(col("path").isNotNull)
-  }
+  def readMediaState(s: SparkSession, dir: String): DataFrame =
+    mediaState(dir).read(s, "media")
 
   /** Bring the media-print roster up to date with the CURRENT contents
     * of `mediaDir` and return it. First call decodes everything; later
@@ -527,17 +516,16 @@ object Multimodal {
     * An unchanged dir is a version-preserving no-op.
     */
   def syncMediaState(s: SparkSession, dir: String, mediaDir: String,
-      glob: String = "*",
-      maxDeltaVersions: Int = MediaMaxDeltaVersions): DataFrame =
+      glob: String = "*"): DataFrame =
     graft.StateFiles.withWriterLock(dir) {
-      syncMediaLocked(s, dir, mediaDir, glob, maxDeltaVersions)
+      syncMediaLocked(s, dir, mediaDir, glob)
     }
 
   private def syncMediaLocked(s: SparkSession, dir: String, mediaDir: String,
-      glob: String, maxDeltaVersions: Int): DataFrame = {
+      glob: String): DataFrame = {
       import s.implicits._
-      val inited = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "_LATEST"))
+      val state = mediaState(dir)
+      val inited = state.initialized
       // byte-free listing: content is not selected, so binaryFile
       // builds rows from file status alone
       val listing = s.read.format("binaryFile")
@@ -613,24 +601,9 @@ object Multimodal {
           lit(null).cast("long").as("mtime"), lit(null).cast("long").as("len"),
           lit(null).cast("string").as("media_type"),
           lit(null).cast("long").as("sh"))
-      val (latest, base) = graft.StateFiles.readPointer(dir)
-      val v = latest + 1
-      decoded.unionByName(tombstones)
-        .write.mode("overwrite").parquet(s"$dir/media_v$v")
-      graft.StateFiles.writePointer(dir, v, if (inited) base else v)
-      // mass/version compaction + one-generation-grace gc (the shared
-      // LSM knobs); counts come from parquet footers
-      if (inited) {
-        val deltaRows = (base + 1 to v)
-          .map(x => s.read.parquet(s"$dir/media_v$x").count()).sum
-        if (deltaRows > 0.3 * s.read.parquet(s"$dir/media_v$base").count() ||
-          v - base >= maxDeltaVersions) {
-          val nv = v + 1
-          readMediaState(s, dir).write.mode("overwrite")
-            .parquet(s"$dir/media_v$nv")
-          graft.StateFiles.writePointer(dir, nv, nv)
-          graft.StateFiles.gcVersions(dir, Seq("media"), base)
-        }
+      state.commit(s) { v =>
+        decoded.unionByName(tombstones)
+          .write.mode("overwrite").parquet(state.path("media", v))
       }
       readMediaState(s, dir)
   }

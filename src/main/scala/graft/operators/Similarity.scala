@@ -531,7 +531,7 @@ object Similarity {
   private def q55(s: SparkSession, d: String): DataFrame =
     semanticDedup(Tables.embeddings(s, d))
 
-  // ---- persistent semantic-dedup state (round 16) -------------------------
+  // ---- persistent semantic-dedup state -----------------------------------
   // The stage-1b cost was the last per-run non-incremental piece of
   // Curate's dedup head (~13% of the sf10 wall, and the LARGEST
   // recurring stage once the cluster/survivor heads went incremental).
@@ -547,12 +547,11 @@ object Similarity {
   //     and, worse, shifts every cell boundary, invalidating the whole
   //     index). A refit = delete the state dir and re-init.
   //   - members_v* holds the current survivor set's cell assignments
-  //     (vec_id, cid, v, nrm) LSM-style; verdicts_v* the q55 verdicts;
-  //     tombstones (null cid / null kept) mark exits, latest version
-  //     wins, same pointer/lock/commit discipline as the cluster state
-  //     (every version-v artifact before the atomic flip; the batch
+  //     (vec_id, cid, v, nrm); verdicts_v* the q55 verdicts; both are
+  //     keyed tables of one graft.VersionedState: tombstones (null cid
+  //     / null kept) mark exits, latest version wins, and the batch
   //     derives from the COMMITTED members, so crash replays overwrite
-  //     orphans and post-flip replays are no-ops).
+  //     orphans and post-flip replays are no-ops.
   //   - per sync, ONLY the cells touched by an entry or exit recompute
   //     — from their FULL current membership, through the exact q55
   //     kernel — so the result is BY CONSTRUCTION identical to a
@@ -566,14 +565,12 @@ object Similarity {
   //     size²) with cell size bounded by TargetCellSize/CellCap —
   //     batch-proportional at production cell counts (k ~ n/target).
 
-  private val SemMaxDeltaVersions = 64
-
-  // The knobs a sync verdicts under are PINNED at init (round-16
-  // ADVICE): the state re-verdicts only touched cells, so a later sync
-  // under a different threshold/cellCap would silently mix verdict
-  // generations in one dir — touched cells judged under the new knobs,
-  // untouched ones still carrying the old — breaking the pinned
-  // equality to a from-scratch q55. The fit params (k/iters/seed) are
+  // The knobs a sync verdicts under are PINNED at init: the state
+  // re-verdicts only touched cells, so a later sync under a different
+  // threshold/cellCap would silently mix verdict generations in one
+  // dir — touched cells judged under the new knobs, untouched ones
+  // still carrying the old — breaking the pinned equality to a
+  // from-scratch q55. The fit params (k/iters/seed) are
   // recorded for the audit trail; they are frozen with the centroids
   // parquet itself and no update-path argument can contradict them.
   private def semParamsLine(threshold: Double, cellCap: Int, k: Int): String =
@@ -582,8 +579,7 @@ object Similarity {
 
   private def requireSemParams(dir: String, threshold: Double,
       cellCap: Int): Unit = {
-    if (!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "_LATEST"))) return
+    if (!semState(dir).initialized) return
     val meta = graft.StateFiles.readMeta(dir, "_PARAMS").getOrElse(
       throw new IllegalStateException(
         s"semantic state dir $dir has a pointer but no _PARAMS stamp: " +
@@ -601,32 +597,26 @@ object Similarity {
       }
   }
 
-  private def semVersions(dir: String): (Int, Int) =
-    graft.StateFiles.readPointer(dir)
+  /** `marker`: the `_PARAMS` line the first commit pins. */
+  private def semState(dir: String,
+      marker: Option[String] = None): graft.VersionedState =
+    new graft.VersionedState(dir, Seq(
+        graft.VersionedState.Keyed("members", "vec_id",
+          Seq("vec_id", "cid", "v", "nrm"), tombstone = Some("cid")),
+        graft.VersionedState.Keyed("verdicts", "vec_id",
+          Seq("vec_id", "cid", "kept", "dup_of"), tombstone = Some("kept"))),
+      massTable = Some("verdicts"), marker = marker.map("_PARAMS" -> _))
 
   /** Current survivor cell assignments `(vec_id, cid, v, nrm)`. */
-  private[graft] def readSemMembers(s: SparkSession, dir: String): DataFrame = {
-    val (latest, base) = semVersions(dir)
-    val f =
-      if (latest == base) s.read.parquet(s"$dir/members_v$base")
-      else (base to latest)
-        .map(v => s.read.parquet(s"$dir/members_v$v")
-          .select(col("vec_id"), col("cid"), col("v"), col("nrm"),
-            lit(v).as("_v")))
-        .reduce(_ unionByName _)
-        .groupBy(col("vec_id"))
-        .agg(max_by(struct(col("cid"), col("v"), col("nrm")), col("_v")).as("r"))
-        .select(col("vec_id"), col("r.cid").as("cid"), col("r.v").as("v"),
-          col("r.nrm").as("nrm"))
-    f.filter(col("cid").isNotNull)
-  }
+  private[graft] def readSemMembers(s: SparkSession, dir: String): DataFrame =
+    semState(dir).read(s, "members")
 
   /** Current q55 verdicts `(vec_id, cid, kept, dup_of)` for the stored
     * survivor set — equal by construction to a from-scratch
     * [[semanticDedup]] of that set under the stored frozen centroids.
     */
   def readSemVerdicts(s: SparkSession, dir: String): DataFrame =
-    semVerdictsFold(s, dir).filter(col("kept").isNotNull)
+    semState(dir).read(s, "verdicts")
 
   /** [[readSemVerdicts]] INCLUDING exit tombstones (`cid`/`kept`/
     * `dup_of` all null): the streaming leg emits a removed doc's
@@ -634,22 +624,7 @@ object Similarity {
     * micro-batch records the removal instead of going silent.
     */
   def readSemVerdictsWithTombstones(s: SparkSession, dir: String): DataFrame =
-    semVerdictsFold(s, dir)
-
-  private def semVerdictsFold(s: SparkSession, dir: String): DataFrame = {
-    val (latest, base) = semVersions(dir)
-    if (latest == base) s.read.parquet(s"$dir/verdicts_v$base")
-    else (base to latest)
-      .map(v => s.read.parquet(s"$dir/verdicts_v$v")
-        .select(col("vec_id"), col("cid"), col("kept"), col("dup_of"),
-          lit(v).as("_v")))
-      .reduce(_ unionByName _)
-      .groupBy(col("vec_id"))
-      .agg(max_by(struct(col("cid"), col("kept"), col("dup_of")),
-        col("_v")).as("r"))
-      .select(col("vec_id"), col("r.cid").as("cid"),
-        col("r.kept").as("kept"), col("r.dup_of").as("dup_of"))
-  }
+    semState(dir).fold(s, "verdicts")
 
   /** Bring the persistent semantic-dedup state up to date with the
     * CURRENT survivor embedding set and return its verdicts. First
@@ -658,13 +633,11 @@ object Similarity {
     * centroids, and re-verdict ONLY the touched cells.
     */
   def syncSemanticState(s: SparkSession, dir: String, embeddings: DataFrame,
-      threshold: Double = SemThreshold, cellCap: Int = CellCap,
-      maxDeltaVersions: Int = SemMaxDeltaVersions): DataFrame =
+      threshold: Double = SemThreshold, cellCap: Int = CellCap): DataFrame =
     graft.StateFiles.withWriterLock(dir) {
       requireSemParams(dir, threshold, cellCap)
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_LATEST")))
-        semUpdateLocked(s, dir, embeddings, threshold, cellCap,
-          maxDeltaVersions)
+      if (semState(dir).initialized)
+        semUpdateLocked(s, dir, embeddings, threshold, cellCap)
       else semInitLocked(s, dir, embeddings, threshold, cellCap)
     }
 
@@ -673,19 +646,21 @@ object Similarity {
     val k = derivedNumCells(emb)
     kmeansCentroids(emb, k = k, iters = 2, seed = 7L)
       .write.mode("overwrite").parquet(s"$dir/centroids")
-    cellAssignments(emb, s.read.parquet(s"$dir/centroids"))
-      .write.mode("overwrite").parquet(s"$dir/members_v1")
-    verdictsOfAssigned(s.read.parquet(s"$dir/members_v1"), threshold, cellCap)
-      .write.mode("overwrite").parquet(s"$dir/verdicts_v1")
-    // params before the pointer: once a reader resolves v1 the pin holds
-    graft.StateFiles.writeMeta(dir, "_PARAMS",
-      semParamsLine(threshold, cellCap, k))
-    graft.StateFiles.writePointer(dir, 1, 1)
+    // the params land before the pointer: once a reader resolves the
+    // first version the pin holds
+    val state = semState(dir, Some(semParamsLine(threshold, cellCap, k)))
+    state.commit(s, full = true) { v =>
+      cellAssignments(emb, s.read.parquet(s"$dir/centroids"))
+        .write.mode("overwrite").parquet(state.path("members", v))
+      verdictsOfAssigned(s.read.parquet(state.path("members", v)), threshold,
+          cellCap)
+        .write.mode("overwrite").parquet(state.path("verdicts", v))
+    }
     readSemVerdicts(s, dir)
   }
 
   private def semUpdateLocked(s: SparkSession, dir: String, emb: DataFrame,
-      threshold: Double, cellCap: Int, maxDeltaVersions: Int): DataFrame = {
+      threshold: Double, cellCap: Int): DataFrame = {
     val members = readSemMembers(s, dir)
     // exits and entries vs the COMMITTED membership (pointer-bounded —
     // the crash-replay anchor); both are batch-sized, localCheckpoint
@@ -695,8 +670,7 @@ object Similarity {
       .localCheckpoint()
     val entered = emb
       .join(members.select("vec_id"), Seq("vec_id"), "left_anti")
-    semDeltaLocked(s, dir, members, entered, exited, threshold, cellCap,
-      maxDeltaVersions)
+    semDeltaLocked(s, dir, members, entered, exited, threshold, cellCap)
   }
 
   /** Fold an EXPLICIT (entries, exits) delta into the semantic state —
@@ -714,11 +688,9 @@ object Similarity {
     */
   def updateSemanticStateDelta(s: SparkSession, dir: String,
       entries: DataFrame, exitIds: DataFrame,
-      threshold: Double = SemThreshold, cellCap: Int = CellCap,
-      maxDeltaVersions: Int = SemMaxDeltaVersions): DataFrame =
+      threshold: Double = SemThreshold, cellCap: Int = CellCap): DataFrame =
     graft.StateFiles.withWriterLock(dir) {
-      require(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(dir, "_LATEST")),
+      require(semState(dir).initialized,
         s"semantic state dir $dir is not initialized — seed it with " +
           "syncSemanticState over the historical corpus first")
       requireSemParams(dir, threshold, cellCap)
@@ -729,13 +701,12 @@ object Similarity {
       val entered = entries
         .join(exitIds.select("vec_id"), Seq("vec_id"), "left_anti")
         .join(members.select("vec_id"), Seq("vec_id"), "left_anti")
-      semDeltaLocked(s, dir, members, entered, exited, threshold, cellCap,
-        maxDeltaVersions)
+      semDeltaLocked(s, dir, members, entered, exited, threshold, cellCap)
     }
 
   private def semDeltaLocked(s: SparkSession, dir: String,
       members: DataFrame, entered: DataFrame, exited: DataFrame,
-      threshold: Double, cellCap: Int, maxDeltaVersions: Int): DataFrame = {
+      threshold: Double, cellCap: Int): DataFrame = {
     if (exited.isEmpty && entered.isEmpty) return readSemVerdicts(s, dir)
     val eAsg = cellAssignments(entered, s.read.parquet(s"$dir/centroids"))
       .localCheckpoint()
@@ -746,33 +717,20 @@ object Similarity {
       .unionByName(eAsg)
       .join(affected, Seq("cid"), "left_semi")
     val affVerdicts = verdictsOfAssigned(affMembers, threshold, cellCap)
-    val (latest, base) = semVersions(dir)
-    val v = latest + 1
-    affVerdicts
-      .unionByName(exited.select(col("vec_id"),
-        lit(null).cast("long").as("cid"),
-        lit(null).cast("boolean").as("kept"),
-        lit(null).cast("long").as("dup_of")))
-      .write.mode("overwrite").parquet(s"$dir/verdicts_v$v")
-    eAsg
-      .unionByName(exited.select(col("vec_id"),
-        lit(null).cast("long").as("cid"),
-        lit(null).cast("array<double>").as("v"),
-        lit(null).cast("double").as("nrm")))
-      .write.mode("overwrite").parquet(s"$dir/members_v$v")
-    graft.StateFiles.writePointer(dir, v, base)
-    // LSM compaction + one-generation-grace gc, the cluster-state knobs
-    val deltaRows = (base + 1 to v)
-      .map(x => s.read.parquet(s"$dir/verdicts_v$x").count()).sum
-    if (deltaRows > 0.3 * s.read.parquet(s"$dir/verdicts_v$base").count() ||
-      v - base >= maxDeltaVersions) {
-      val nv = v + 1
-      readSemVerdicts(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/verdicts_v$nv")
-      readSemMembers(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/members_v$nv")
-      graft.StateFiles.writePointer(dir, nv, nv)
-      gcSemanticState(dir, below = Some(base))
+    val state = semState(dir)
+    state.commit(s) { v =>
+      affVerdicts
+        .unionByName(exited.select(col("vec_id"),
+          lit(null).cast("long").as("cid"),
+          lit(null).cast("boolean").as("kept"),
+          lit(null).cast("long").as("dup_of")))
+        .write.mode("overwrite").parquet(state.path("verdicts", v))
+      eAsg
+        .unionByName(exited.select(col("vec_id"),
+          lit(null).cast("long").as("cid"),
+          lit(null).cast("array<double>").as("v"),
+          lit(null).cast("double").as("nrm")))
+        .write.mode("overwrite").parquet(state.path("members", v))
     }
     readSemVerdicts(s, dir)
   }
@@ -781,8 +739,7 @@ object Similarity {
     * base); the in-update janitor passes the previous base (grace).
     */
   def gcSemanticState(dir: String, below: Option[Int] = None): Int =
-    graft.StateFiles.gcVersions(dir, Seq("members", "verdicts"),
-      below.getOrElse(semVersions(dir)._2))
+    semState(dir).gc(below)
 
   private val o55 =
     s"""WITH v AS (

@@ -49,45 +49,28 @@ object TextAnalysis {
           explode(split(coalesce(col("text"), lit("")), " ")).as("w"))
         .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("cnt")))
 
-  // ---- incremental token-count state (round 15) ---------------------------
+  // ---- incremental token-count state --------------------------------------
   // The (doc_id, w, cnt) artifact is a PURE PER-DOC function of text,
   // so a grown corpus only needs its NEW docs tokenized — while the
   // fingerprint-keyed session stage above re-tokenizes the whole corpus
   // whenever the dir changes (the right behavior for ad-hoc registry
   // reads, the wrong cost for a pipeline that re-runs on every
   // snapshot: the full tokenize was the second-largest recompute in
-  // Curate's dedup stage after the cluster loop). Layout mirrors the
-  // Dedup cluster state minus the fold: versioned part dirs
-  // tokens_v1..vN and ids_v1..vN (each one batch, complete parquet
-  // dirs), one pointer file written LAST — a crash at any point
-  // replays the batch into an OVERWRITE of the same version (the
-  // version is derived from the un-flipped pointer), so no duplicate
-  // rows can ever enter the union. Reads union the parts: no fold
-  // needed because a doc's rows never change.
+  // Curate's dedup stage after the cluster loop). The store is a
+  // graft.VersionedState of two union tables, tokens and ids (each
+  // version one batch): a crash at any point replays the batch into an
+  // OVERWRITE of the same version (the version is derived from the
+  // un-flipped pointer), so no duplicate rows can ever enter the union.
+  // Reads union the parts: no fold needed because a doc's rows never
+  // change, and no mass rule — only the part count costs a read.
 
-  /** `(latest, base)` part versions; base = the most recent COMPACTED
-    * part (holds every doc up to its version), parts above it are
-    * per-batch appends. Reads union base..latest. Pointer I/O goes
-    * through [[graft.StateFiles]]: published by atomic rename, so a
-    * reader racing the flip sees the previous pointer or the new one,
-    * never a torn/empty file.
-    */
-  private def tokenVersions(dir: String): (Int, Int) =
-    graft.StateFiles.readPointer(dir, baseDefault = _ => 1)
-
-  private def writeTokenPointer(dir: String, latest: Int, base: Int): Unit =
-    graft.StateFiles.writePointer(dir, latest, base)
-
-  // parts compact into one merged part past this count: rows never
-  // change (pure union), but the fold's read cost is per part DIR, and
-  // a micro-batch stream stacks parts fast
-  private val MaxTokenParts = 64
+  private def tokenState(dir: String): graft.VersionedState =
+    new graft.VersionedState(dir, Seq(
+      graft.VersionedState.Union("tokens"), graft.VersionedState.Union("ids")))
 
   /** The stored token-count artifact: union of all committed parts. */
-  def readTokenState(s: SparkSession, dir: String): DataFrame = {
-    val (latest, base) = tokenVersions(dir)
-    s.read.parquet((base to latest).map(v => s"$dir/tokens_v$v"): _*)
-  }
+  def readTokenState(s: SparkSession, dir: String): DataFrame =
+    tokenState(dir).read(s, "tokens")
 
   private def tokenCountsOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
@@ -99,9 +82,11 @@ object TextAnalysis {
     * calls tokenize ONLY the docs absent from the id roster (exact —
     * the artifact is row-local per doc, so incremental append has no
     * divergence corner at all). Same snapshot ⇒ no version bump.
+    * `maxParts` counts the base part: that many live parts compact
+    * into one.
     */
   def syncTokenState(s: SparkSession, dir: String, docs: DataFrame,
-      maxParts: Int = MaxTokenParts): DataFrame =
+      maxParts: Int = graft.VersionedState.MaxDeltaVersions): DataFrame =
     graft.StateFiles.withWriterLock(dir) {
       syncTokenLocked(s, dir, docs, maxParts)
     }
@@ -113,34 +98,17 @@ object TextAnalysis {
   // silently drop one batch's rows (same contract as the cluster state)
   private def syncTokenLocked(s: SparkSession, dir: String, docs: DataFrame,
       maxParts: Int): DataFrame = {
+    val state = tokenState(dir)
     val d = docs.select(col("doc_id"), col("text"))
-    val (v, base) = tokenVersions(dir)
     val batch =
-      if (v == 0) d
-      else d.join(
-        s.read.parquet((base to v).map(x => s"$dir/ids_v$x"): _*),
-        Seq("doc_id"), "left_anti")
-    if (v > 0 && batch.isEmpty) return readTokenState(s, dir)
-    val nv = v + 1
-    tokenCountsOf(batch).write.mode("overwrite").parquet(s"$dir/tokens_v$nv")
-    batch.select("doc_id").write.mode("overwrite").parquet(s"$dir/ids_v$nv")
-    writeTokenPointer(dir, nv, if (v == 0) 1 else base)
-    // part-count compaction (pure union — rows never change, only the
-    // per-dir read cost does): merge base..nv into one part, same for
-    // the roster, pointer flips last so a crash leaves the un-compacted
-    // state live
-    if (nv - (if (v == 0) 1 else base) + 1 >= maxParts) {
-      val cv = nv + 1
-      readTokenState(s, dir).write.mode("overwrite")
-        .parquet(s"$dir/tokens_v$cv")
-      s.read.parquet((base to nv).map(x => s"$dir/ids_v$x"): _*)
-        .write.mode("overwrite").parquet(s"$dir/ids_v$cv")
-      writeTokenPointer(dir, cv, cv)
-      // janitor: parts below the PREVIOUS base were superseded by the
-      // compaction before this one — any reader that resolved the
-      // pointer since then never touches them (one-generation grace,
-      // the cluster-state gc discipline)
-      gcTokenState(dir, below = Some(if (v == 0) 1 else base))
+      if (!state.initialized) d
+      else d.join(state.read(s, "ids"), Seq("doc_id"), "left_anti")
+    if (state.initialized && batch.isEmpty) return readTokenState(s, dir)
+    state.commit(s, maxDeltas = maxParts - 1) { v =>
+      tokenCountsOf(batch).write.mode("overwrite")
+        .parquet(state.path("tokens", v))
+      batch.select("doc_id").write.mode("overwrite")
+        .parquet(state.path("ids", v))
     }
     readTokenState(s, dir)
   }
@@ -149,8 +117,7 @@ object TextAnalysis {
     * current base). Returns the number of part directories removed.
     */
   def gcTokenState(dir: String, below: Option[Int] = None): Int =
-    graft.StateFiles.gcVersions(dir, Seq("tokens", "ids"),
-      below.getOrElse(tokenVersions(dir)._2))
+    tokenState(dir).gc(below)
 
   /** The `(doc_id, g, c)` ADJACENT-BIGRAM pre-aggregate, staged once per
     * session ([[graft.Stage]]) — the round-14 extension of the staged

@@ -115,7 +115,7 @@ object StreamingDedup {
       .option("checkpointLocation", checkpoint)
       .start()
 
-  /** The persistent CLUSTER STATE fed by a stream (round 15): every
+  /** The persistent CLUSTER STATE fed by a stream: every
     * micro-batch folds into the same `Dedup.writeClusterState` /
     * `updateClusterState` artifacts the batch Curate head reads — ONE
     * dedup state serving both execution modes, which is how a real
@@ -138,14 +138,7 @@ object StreamingDedup {
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
         val d = batch.toDF().select(col("doc_id"), col("text"))
-        val map =
-          if (java.nio.file.Files.exists(
-            java.nio.file.Paths.get(stateDir, "_LATEST")))
-            Dedup.updateClusterState(spark, stateDir, d)
-          else {
-            Dedup.writeClusterState(d, stateDir)
-            Dedup.readClusterState(spark, stateDir)
-          }
+        val map = Dedup.syncClusterState(spark, stateDir, d)
         // verdicts for THIS batch's docs (semi-join keeps the output
         // batch-sized; docs with no candidate pair have no map row and
         // are their own singleton cluster by the q44/q53 convention)

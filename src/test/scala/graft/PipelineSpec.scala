@@ -1,12 +1,10 @@
 package graft
 
 import graft.tools.Pipeline
-import graft.operators.SkewTools
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
-/** End-to-end domain pipeline (SURVEY.md §3) + skew tooling. */
+/** End-to-end domain pipeline (SURVEY.md §3). */
 class PipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -68,19 +66,5 @@ class PipelineSpec extends AnyFunSuite {
     val m1 = top.map(r => r.getAs[String]("mint") -> r).toMap.apply("MINT1")
     assert(m1.getAs[Long]("total_transfers") == 4) // dup copies dropped, not 6
     assert(spark.read.parquet(s"$dir/cleaned_parquet").count() == 9)
-  }
-
-  test("salted aggregation equals plain aggregation") {
-    val events = Tables.events(spark, TestSpark.sf0001)
-    val plain = events.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    val salted = SkewTools.saltedCountSum(events, col("user_id"), col("value"), 8)
-      .collect().map(r => r.getAs[Long]("k") -> (r.getAs[Long]("n"), r.getAs[Double]("total"))).toMap
-    assert(salted.keySet == plain.keySet)
-    salted.foreach { case (k, (n, total)) =>
-      assert(n == plain(k)._1)
-      assert(math.abs(total - plain(k)._2) < 1e-6) // fp order differs by design
-    }
   }
 }
