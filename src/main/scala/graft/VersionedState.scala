@@ -67,11 +67,6 @@ private[graft] final class VersionedState(dir: String,
   /** A keyed table's latest version per key, tombstones kept. A store
     * whose latest version is its base reads as one scan, no shuffle.
     */
-  def fold(s: SparkSession, table: String): DataFrame = spec(table) match {
-    case t: Keyed => fold(s, t)
-    case t => throw new IllegalArgumentException(s"${t.name} is not keyed")
-  }
-
   private def fold(s: SparkSession, t: Keyed): DataFrame = {
     val (latest, base) = versions
     if (latest == base) return s.read.parquet(path(t.name, base))

@@ -24,20 +24,6 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Append rows to an existing bucketed table with the SAME bucket
-    * spec (Spark validates the spec against the catalog) — the index
-    * growth path: each ingest batch's survivors land in their buckets
-    * without touching existing files.
-    */
-  def appendBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit =
-    df.write
-      .mode("append")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-
   /** Join two same-bucketed tables on the bucket key. With matching
     * bucket specs the physical plan contains no ShuffleExchange on
     * either side (asserted in BucketingSpec).

@@ -246,22 +246,6 @@ object DomainCuration {
       pctUpper(regexp_replace(rest, "/$", "")))
   }
 
-  /** Persist a canonical-URL first-sighting index from a `(doc_id,
-    * url)` frame, bucketed on the canonical key — the seen-set the
-    * streaming URL-dedup leg joins arriving batches against with no
-    * index-side exchange and grows by appending each batch's new URLs
-    * ([[graft.operators.Bucketing.appendBucketed]]); the
-    * `writeGramIndex`/`writeBandIndex` pattern. Schema: `(canon_url,
-    * first_doc_id)`.
-    */
-  def writeUrlIndex(docs: DataFrame, table: String, buckets: Int): Unit =
-    Bucketing.writeBucketed(
-      docs.select(col("doc_id"),
-          canonicalizeUrl(col("url")).as("canon_url"))
-        .groupBy(col("canon_url"))
-        .agg(min(col("doc_id")).as("first_doc_id")),
-      table, "canon_url", buckets)
-
   /** URL-level dedup groups of a `(doc_id, url)` frame: one row per
     * canonical URL — `(canon_url, keep_id, n_docs, n_raw)`.
     */

@@ -226,7 +226,7 @@ object Similarity {
     * CellCap² within-cell bound once the corpus outgrows it) as code
     * instead of doc. Costs one count() — parquet footer metadata for
     * an unfiltered table, one cheap job otherwise. Used by Curate's
-    * semantic stage and the streaming cell index seeding; the REGISTRY
+    * semantic stage and [[syncSemanticState]]'s first commit; the REGISTRY
     * queries keep the pinned demo constant because the DuckDB oracle
     * must derive identical cells from SQL. At extreme cell counts the
     * flat centroid scan itself becomes the cost (k cosines per row) —
@@ -374,16 +374,6 @@ object Similarity {
       embeddings.select(col("vec_id"), asDouble(col("embedding")).as("v"))
         .withColumn("nrm", norm(col("v"))),
       centroids)
-
-  // The append-only cell-survivor index (`writeCellIndex` /
-  // `indexRowsOf` / `cellIndexVerdicts`, rounds 12-16) is GONE as of
-  // round 17: the streaming semantic legs were its only consumers, and
-  // it carried the exit-invalidation hole the LSM semantic state below
-  // fixes (a survivor that left the corpus kept dropping newcomers
-  // forever). One discipline now serves both execution modes —
-  // [[syncSemanticState]] / [[updateSemanticStateDelta]]. The
-  // zero-norm total-cosine guarantee the index kernels pinned lives on
-  // in [[assignToCells]] + [[guardedCosine]] (spec-covered).
 
   /** IVF approximate top-k cosine neighbors for each query vector.
     * `centroids` (shape `(cid, cv, cn)`, e.g. from [[kmeansCentroids]])
@@ -618,14 +608,6 @@ object Similarity {
   def readSemVerdicts(s: SparkSession, dir: String): DataFrame =
     semState(dir).read(s, "verdicts")
 
-  /** [[readSemVerdicts]] INCLUDING exit tombstones (`cid`/`kept`/
-    * `dup_of` all null): the streaming leg emits a removed doc's
-    * tombstone into its batch's verdict partition, so an exit-carrying
-    * micro-batch records the removal instead of going silent.
-    */
-  def readSemVerdictsWithTombstones(s: SparkSession, dir: String): DataFrame =
-    semState(dir).fold(s, "verdicts")
-
   /** Bring the persistent semantic-dedup state up to date with the
     * CURRENT survivor embedding set and return its verdicts. First
     * call fits + freezes the centroids and verdicts everything; later
@@ -670,43 +652,6 @@ object Similarity {
       .localCheckpoint()
     val entered = emb
       .join(members.select("vec_id"), Seq("vec_id"), "left_anti")
-    semDeltaLocked(s, dir, members, entered, exited, threshold, cellCap)
-  }
-
-  /** Fold an EXPLICIT (entries, exits) delta into the semantic state —
-    * the micro-batch form [[graft.streaming.StreamingCurate]]'s
-    * semantic leg rides (the snapshot form above derives the delta by
-    * diffing; a stream carries it). Contract, built for at-least-once
-    * replay: entries already in the membership and exit ids already
-    * absent both fold to NOTHING (anti/semi-join against the committed
-    * members), so a redelivered micro-batch is a version-preserving
-    * no-op; an id appearing in both sides of one batch is treated as
-    * an exit (the conservative direction — a consumer that re-ingests
-    * a deleted doc re-enters it next batch). Requires an initialized
-    * state (seed via [[syncSemanticState]] over the historical corpus);
-    * the knob pin applies exactly as on the snapshot path.
-    */
-  def updateSemanticStateDelta(s: SparkSession, dir: String,
-      entries: DataFrame, exitIds: DataFrame,
-      threshold: Double = SemThreshold, cellCap: Int = CellCap): DataFrame =
-    graft.StateFiles.withWriterLock(dir) {
-      require(semState(dir).initialized,
-        s"semantic state dir $dir is not initialized — seed it with " +
-          "syncSemanticState over the historical corpus first")
-      requireSemParams(dir, threshold, cellCap)
-      val members = readSemMembers(s, dir)
-      val exited = members.select(col("vec_id"), col("cid"))
-        .join(exitIds.select("vec_id"), Seq("vec_id"), "left_semi")
-        .localCheckpoint()
-      val entered = entries
-        .join(exitIds.select("vec_id"), Seq("vec_id"), "left_anti")
-        .join(members.select("vec_id"), Seq("vec_id"), "left_anti")
-      semDeltaLocked(s, dir, members, entered, exited, threshold, cellCap)
-    }
-
-  private def semDeltaLocked(s: SparkSession, dir: String,
-      members: DataFrame, entered: DataFrame, exited: DataFrame,
-      threshold: Double, cellCap: Int): DataFrame = {
     if (exited.isEmpty && entered.isEmpty) return readSemVerdicts(s, dir)
     val eAsg = cellAssignments(entered, s.read.parquet(s"$dir/centroids"))
       .localCheckpoint()

@@ -265,18 +265,6 @@ object TextAnalysis {
             .otherwise(lit(0L))).as("n_stop")),
         "doc_id"))
 
-  /** Streaming-safe quality gate: score with the shared q28 kernel and
-    * keep docs at or above a FIXED threshold. The percentile forms
-    * (q45 / `qualityFilterApprox`) need a corpus-wide aggregate, which a
-    * row-local streaming stage cannot run — production computes the
-    * threshold offline on a batch sample and this gate applies it in
-    * flight (see streaming.StreamingCurate).
-    */
-  def qualityAtLeast(docs: DataFrame, minQuality: Double): DataFrame =
-    withQuality(docs, "text", "lang", "source")
-      .filter(col("quality") >= minQuality)
-      .drop("w")
-
   private def q28(s: SparkSession, d: String): DataFrame =
     withQuality(Tables.documents(s, d))
       .select("doc_id", "n_words", "n_uniq", "n_stop",
@@ -1194,10 +1182,10 @@ object TextAnalysis {
     * empty-string token, which hashes to a ±1 bucket like any other
     * word (spec-pinned in DedupSimilaritySpec). Building the dense
     * frame from the sparse rows alone would silently drop cancelled
-    * docs, and a downstream consumer like
-    * `hashedSemanticVerdictStream` would then never issue them a
-    * verdict; Similarity's guarded cosine keeps the zero vectors they
-    * DO emit from crashing or poisoning any consumer.
+    * docs, and a downstream consumer like [[Similarity.semanticDedup]]
+    * would then never give them a verdict; Similarity's guarded cosine
+    * keeps the zero vectors they DO emit from crashing or poisoning any
+    * consumer.
     */
   def hashEmbedDense(docs: DataFrame, dim: Int = HashDim): DataFrame = {
     val m = hashEmbed(docs, dim)
@@ -1896,10 +1884,8 @@ object TextAnalysis {
     * computable; the standalone-kernel composition drops them at the
     * same join) but still count into the corpus n_docs that sets the
     * hot-gram threshold.
-    * Batch-only by nature (the corpus-frequency legs aggregate the
-    * whole input, and the shared pre-aggregates persist); the
-    * streaming path applies the row-local gate (`qualityAtLeast`)
-    * with thresholds computed offline, see streaming.StreamingCurate.
+    * Batch-only by nature: the corpus-frequency legs aggregate the
+    * whole input, and the shared pre-aggregates persist.
     *
     * Cache lifecycle: the word/gram pre-aggregates and the 1-row
     * totals persist for the SESSION (CacheManager dedups repeat

@@ -313,41 +313,23 @@ object TrainingData {
       |SELECT t.doc_id, count(*) AS n_shared_grams
       |FROM t JOIN tr USING (gh) GROUP BY 1""".stripMargin
 
-  // ---- stream-static decontamination index (q43 in flight) ---------------
-  // The persisted-train-gram twin of Dedup.writeBandIndex: seed once
-  // from the historical train
-  // corpus, then every ingest batch verdicts its test-split arrivals
-  // and grows the index by its train-split arrivals' fresh grams —
-  // cross-batch memory lives in the bucketed table, never in stream
-  // state. Used by StreamingCurate.decontamVerdictStream.
+  // ---- persisted train-gram index (q43) -----------------------------------
+  // The persisted-train-gram twin of Dedup.writeBandIndex.
 
-  /** Distinct long-n-gram hashes of `docs` as `(gh)` rows — the seed
-    * and growth unit of the persisted train-gram index. One uniform
-    * 64-bit-hash shuffle (the distinct); linear at any corpus size.
+  /** Distinct long-n-gram hashes of `docs` as `(gh)` rows — the rows
+    * of the persisted train-gram index. One uniform 64-bit-hash shuffle
+    * (the distinct); linear at any corpus size.
     */
   def gramRowsOf(docs: DataFrame): DataFrame =
     docs.select(explode(graft.functions.GramHashesLong(col("text"), 8)).as("gh"))
       .distinct()
 
-  /** Persist the train corpus's distinct gram hashes gh-BUCKETED:
-    * ingest-time verdicts and freshness anti-joins co-locate on the
-    * bucket key with no index-side exchange, and the index grows by
-    * appended batches, never by re-reading the corpus.
+  /** Persist the train corpus's distinct gram hashes gh-BUCKETED, so
+    * joins against it co-locate on the bucket key with no index-side
+    * exchange.
     */
   def writeGramIndex(docs: DataFrame, table: String, buckets: Int): Unit =
     Bucketing.writeBucketed(gramRowsOf(docs), table, "gh", buckets)
-
-  /** q43's leakage verdict against the persisted index: distinct
-    * shared-gram count per arriving doc; clean docs are absent. Cost ∝
-    * batch × gram fan-out — the index side never shuffles.
-    */
-  def gramIndexVerdicts(docs: DataFrame, index: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-        explode(graft.functions.GramHashesLong(col("text"), 8)).as("gh"))
-      .dropDuplicates("doc_id", "gh")
-      .join(index, "gh")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_shared_grams"))
 
   // ---- q46: sharded next-fit sequence packing ----------------------------
   // Batch assembly for training: pack documents into fixed-capacity

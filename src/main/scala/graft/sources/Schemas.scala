@@ -24,16 +24,6 @@ object Schemas {
     StructField("name", StringType),
     StructField("symbol", StringType)))
 
-  /** A corpus document arriving over a stream (the fixture `documents`
-    * table minus `n_chars`, which is derived at parse time — a live
-    * producer does not pre-count characters).
-    */
-  val document: StructType = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("text", StringType),
-    StructField("lang", StringType),
-    StructField("source", StringType)))
-
   /** tokenTransfers element (clean_data.py:55-60,106-112). */
   val tokenTransfer: StructType = StructType(Seq(
     StructField("fromUserAccount", StringType),

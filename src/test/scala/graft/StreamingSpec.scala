@@ -1,8 +1,8 @@
 package graft
 
-import graft.operators.Similarity
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -450,80 +450,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(verdicts()(6L) == (6L, 0L))
   }
 
-  test("windowed ingest stats: per-(window, source) counts finalize on watermark, state stays bounded") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, String, Long)]
-    val docs = mem.toDF().toDF("doc_id", "text", "source", "sec")
-      .select(col("doc_id"), col("text"), col("source"),
-        length(col("text")).cast("long").as("n_chars"),
-        timestamp_seconds(col("sec")).as("ts"))
-    val q = graft.streaming.StreamingCurate
-      .statsStream(docs, "ts", "1 minute", minQuality = 0.0,
-        watermark = "10 seconds")
-      .writeStream.format("memory").queryName("ingest_stats")
-      .outputMode("append").start()
-    // window [60,120): two srcA docs + one srcB doc; then advance the
-    // watermark far past it so the window finalizes and emits
-    mem.addData((1L, "alpha beta gamma delta", "srcA", 70L),
-      (2L, "epsilon zeta", "srcA", 80L),
-      (3L, "unique words entirely here", "srcB", 90L))
-    q.processAllAvailable()
-    mem.addData((4L, "watermark mover", "srcA", 600L))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("ingest_stats").collect()
-      .map(r => (r.getAs[java.sql.Timestamp]("win_start").toInstant.getEpochSecond,
-        r.getAs[String]("source")) ->
-        (r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"),
-          r.getAs[Double]("gate_pass_rate"))).toMap
-    // only the finalized [60,120) window is emitted (append mode); the
-    // 600s window is still open
-    assert(rows.keySet == Set((60L, "srcA"), (60L, "srcB")))
-    assert(rows((60L, "srcA")) == ((2L, 6L, 1.0)))
-    assert(rows((60L, "srcB")) == ((1L, 4L, 1.0)))
-  }
-
-  test("drift leg: a spam wave tops its window's movers with exact scaled deltas") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Long)]
-    val docs = mem.toDF().toDF("doc_id", "text", "sec")
-      .select(col("doc_id"), col("text"),
-        timestamp_seconds(col("sec")).as("ts"))
-    // historical baseline: alpha and beta each half the mass (tot 10)
-    val baseline = Seq(("alpha", 5L), ("beta", 5L)).toDF("w", "cnt")
-    val out = Files.createTempDirectory("driftout").toString
-    val q = graft.streaming.StreamingCurate.driftStream(
-      docs, baseline, "ts", "1 minute", out,
-      Files.createTempDirectory("driftck").toString,
-      watermark = "10 seconds", topK = 10)
-    // window [60,120): 2×alpha + 3×spamtoken (tot 5); then advance the
-    // watermark far past it so the window finalizes
-    mem.addData((1L, "alpha spamtoken spamtoken", 70L),
-      (2L, "alpha spamtoken", 80L))
-    q.processAllAvailable()
-    mem.addData((3L, "watermark mover", 600L))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.read.parquet(out).collect()
-      .map(r => (r.getAs[java.sql.Timestamp]("win_start").toInstant.getEpochSecond,
-        r.getAs[String]("w")) ->
-        (r.getAs[Long]("cnt"), r.getAs[Long]("cnt_base"), r.getAs[Long]("dp_scaled")))
-      .toMap
-    // only the finalized [60,120) window reports; the 600s window is
-    // open. beta VANISHED from the feed (baseline mass, zero arrivals)
-    // and must surface in the report — the round-15 reconciliation leg
-    assert(rows.keySet ==
-      Set((60L, "alpha"), (60L, "spamtoken"), (60L, "beta")))
-    // spamtoken: 3/5 arriving vs 0 baseline -> +600000000
-    assert(rows((60L, "spamtoken")) == ((3L, 0L, 600000000L)))
-    // alpha: 2/5 arriving vs 5/10 baseline -> 400000000 - 500000000
-    assert(rows((60L, "alpha")) == ((2L, 5L, -100000000L)))
-    // beta: 0/5 arriving vs 5/10 baseline -> the negated baseline share
-    assert(rows((60L, "beta")) == ((0L, 5L, -500000000L)))
-  }
-
   test("stream-static incremental dedup verdicts micro-batches against the persisted index") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -548,218 +474,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(r.get(9L).contains(1L))  // flagged against the historical corpus
     assert(r.get(14L).contains(1L)) // later micro-batch, same index
     assert(!r.contains(10L))        // novel doc passes
-  }
-
-  test("streaming semantic dedup rides the LSM state: paraphrases verdict " +
-      "against earlier batches, an exited survivor stops dropping " +
-      "newcomers, and a redelivery is a version-preserving no-op") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dim = 8
-    def axis(i: Int, scale: Float) = {
-      val a = Array.fill(dim)(0.01f); a(i) = scale; a
-    }
-    // static embeddings for every doc that may arrive
-    val embeddings = Seq(
-      (1L, axis(0, 0.9f)), (2L, axis(1, 0.9f)),
-      (20L, axis(0, 0.85f)),           // near-identical to seeded doc 1
-      (21L, axis(2, 0.9f)),            // novel direction: a new survivor
-      (30L, axis(2, 0.88f)),           // paraphrase of 21, arrives later
-      (31L, axis(3, 0.9f)),            // novel again
-      (41L, axis(3, 0.87f)))           // paraphrase of 31, arrives AFTER 31 exits
-      .toDF("vec_id", "embedding")
-    // seed the semantic state with the historical corpus (docs 1 and 2)
-    // — the SAME state a batch Curate --state run reads (one state, two
-    // execution modes); its frozen centroids score every arrival
-    val semState = Files.createTempDirectory("semstate-leg").toString
-    Similarity.syncSemanticState(spark, semState,
-      embeddings.filter(col("vec_id") <= 2L), threshold = 0.8)
-    val mem = MemoryStream[(Long, String, String)]
-    val out = Files.createTempDirectory("semvout").toString
-    val q = graft.streaming.StreamingCurate.semanticVerdictStream(
-      mem.toDF().toDF("doc_id", "text", "op"), embeddings, semState,
-      out, Files.createTempDirectory("semvck").toString, threshold = 0.8)
-    // batch 1: 20 dups against the seeded state; 21 enters as a survivor
-    mem.addData((20L, "ignored", ""), (21L, "ignored", ""))
-    q.processAllAvailable()
-    // batch 2: 30 is a paraphrase of batch-1 survivor 21 — the state
-    // remembered it with no stream state store; 31 is novel
-    mem.addData((30L, "ignored", ""), (31L, "ignored", ""))
-    q.processAllAvailable()
-    // batch 3: survivor 31 EXITS the corpus (op = del) — against the
-    // round-16 append-only cell index this record would keep dropping
-    // newcomers forever; the state tombstones it
-    mem.addData((31L, "", "del"))
-    q.processAllAvailable()
-    // batch 4: newcomer 41 is a paraphrase of the EXITED 31 — it must
-    // be verdicted KEPT (the test that fails against the cell index)
-    mem.addData((41L, "ignored", ""))
-    q.processAllAvailable()
-    // redelivery: doc 41 re-arrives (at-least-once upstream). The state
-    // folds nothing (version-preserving no-op) and the verdict is
-    // re-emitted unchanged into the new batch's partition.
-    val ptr = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(semState, "_LATEST"))
-    mem.addData((41L, "ignored", ""))
-    q.processAllAvailable()
-    assert(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(semState, "_LATEST")) == ptr,
-      "a redelivered doc must not bump the state version")
-    // this leg keeps NO streaming state store: cross-batch memory is
-    // the shared LSM state dir
-    assert(q.lastProgress.stateOperators.isEmpty,
-      "semantic leg must not grow a state store")
-    q.stop()
-    val r = spark.read.parquet(out)
-      .select(col("doc_id"), col("kept"), col("dup_of"),
-        col("batch_id").cast("long").as("batch_id"))
-      .collect()
-      .map(x => (x.getLong(0), x.getLong(3)) ->
-        ((Option(x.get(1)).map(_.asInstanceOf[Boolean]),
-          Option(x.get(2)).map(_.asInstanceOf[Long]))))
-      .toMap
-    assert(r((20L, 0L)) == ((Some(false), Some(1L))),
-      s"historical-corpus duplicate: $r")
-    assert(r((21L, 0L)) == ((Some(true), None)))
-    assert(r((30L, 1L)) == ((Some(false), Some(21L))),
-      "batch-2 paraphrase vs batch-1 survivor")
-    assert(r((31L, 1L)) == ((Some(true), None)))
-    assert(r.get((31L, 2L)).contains((None, None)),
-      s"exit must emit a tombstone row; got keys ${r.keySet.toSeq.sorted}")
-    assert(r((41L, 3L)) == ((Some(true), None)),
-      "a newcomer near an EXITED survivor must be KEPT")
-    assert(r((41L, 4L)) == ((Some(true), None)),
-      "a redelivered doc re-emits its verdict into its own partition")
-    // the state agrees with a from-scratch q55 of the current corpus
-    // under the stored centroids — the batch↔stream equivalence
-    val current = embeddings.filter(col("vec_id").isin(1L, 2L, 20L, 21L, 30L, 41L))
-    val scratch = Similarity.semanticDedup(current, threshold = 0.8,
-        centroids = Some(spark.read.parquet(s"$semState/centroids")))
-      .select("vec_id", "kept").collect()
-      .map(x => x.getLong(0) -> x.getBoolean(1)).toMap
-    val stored = Similarity.readSemVerdicts(spark, semState)
-      .select("vec_id", "kept").collect()
-      .map(x => x.getLong(0) -> x.getBoolean(1)).toMap
-    assert(stored == scratch,
-      "streamed state diverged from a from-scratch q55 of the current set")
-    // and the BATCH pipeline path (Curate --state) syncs the very same
-    // dir: one state, two execution modes, serialized by the writer lock
-    val viaBatch = Similarity.syncSemanticState(spark, semState, current,
-        threshold = 0.8)
-      .filter(col("kept")).select("vec_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(viaBatch == stored.filter(_._2).keySet,
-      "the batch sync must read the state the stream wrote")
-  }
-
-  test("hashed semantic leg dedups a re-arriving text with no embedding table at all") {
-    import spark.implicits._
-    import graft.operators.TextAnalysis
-    implicit val sqlCtx = spark.sqlContext
-    // historical corpus: two docs with disjoint vocabularies; centroids
-    // = their own hash embeddings (each doc anchors a cell), index
-    // seeded from the same frame — everything lives in the q95 space
-    val hist = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (2L, "one two three four five six seven eight nine"))
-      .toDF("doc_id", "text")
-    val histEmb = TextAnalysis.hashEmbedDense(hist)
-    val semState = Files.createTempDirectory("hsemstate").toString
-    Similarity.syncSemanticState(spark, semState, histEmb, threshold = 0.95)
-    val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("hsemout").toString
-    val q = graft.streaming.StreamingCurate.hashedSemanticVerdictStream(
-      mem.toDF().toDF("doc_id", "text"), semState, out,
-      Files.createTempDirectory("hsemck").toString, threshold = 0.95)
-    // batch 1: doc 10 is doc 1's text verbatim (cosine ~1 in hash
-    // space); doc 11 is novel vocabulary and survives into the index
-    mem.addData((10L, "alpha beta gamma delta epsilon zeta eta theta"),
-      (11L, "red orange yellow green blue indigo violet amber"))
-    q.processAllAvailable()
-    // batch 2: doc 20 re-sends batch-1 survivor 11's text — the state
-    // remembered it, still with zero model embeddings anywhere
-    mem.addData((20L, "red orange yellow green blue indigo violet amber"))
-    q.processAllAvailable()
-    q.stop()
-    val r = spark.read.parquet(out)
-      .select("doc_id", "kept", "dup_of").collect()
-      .map(x => x.getLong(0) ->
-        ((x.getBoolean(1), Option(x.get(2)).map(_.asInstanceOf[Long]))))
-      .toMap
-    assert(r(10L) == ((false, Some(1L))), s"verbatim re-arrival must dup: $r")
-    assert(r(20L) == ((false, Some(11L))), s"batch-2 vs batch-1 survivor: $r")
-    assert(r(11L)._1, s"novel vocabulary must survive: $r")
-  }
-
-  test("stream-static decontamination verdicts test arrivals against a growing train-gram index") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // hash-split facts (md5 of doc_id): 1,2 train; 3,44,49,64 test
-    def words(p: String) = (1 to 8).map(i => s"$p$i").mkString(" ")
-    val (g, h, c) = (words("g"), words("h"), words("c"))
-    // seed: historical train corpus = doc 1 carrying gram G
-    graft.operators.TrainingData.writeGramIndex(
-      Seq((1L, g)).toDF("doc_id", "text"), "gram_idx_stream", 4)
-    val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("dcvout").toString
-    val q = graft.streaming.StreamingCurate.decontamVerdictStream(
-      mem.toDF().toDF("doc_id", "text"), "gram_idx_stream", out,
-      Files.createTempDirectory("dcvck").toString, buckets = 4)
-    // batch 1: test doc 3 leaks G (flagged), test doc 44 is clean,
-    // train doc 2 arrives carrying NEW gram H (appended to the index)
-    mem.addData((3L, g), (44L, c), (2L, h))
-    q.processAllAvailable()
-    // batch 2: test doc 49 leaks H — known only from batch 1's train
-    // arrival; test doc 64 leaks the seeded G
-    mem.addData((49L, h), (64L, g))
-    q.processAllAvailable()
-    assert(q.lastProgress.stateOperators.isEmpty,
-      "decontamination leg must not grow a state store")
-    q.stop()
-    val r = spark.read.parquet(out).collect()
-      .map(x => x.getAs[Long]("doc_id") -> x.getAs[Long]("n_shared_grams")).toMap
-    assert(r == Map(3L -> 1L, 49L -> 1L, 64L -> 1L)) // 44 clean, 2 is train
-    // the index grew by exactly doc 2's fresh gram
-    assert(spark.table("gram_idx_stream").count() == 2L)
-  }
-
-  test("stream-static URL dedup verdicts arrivals against a growing canonical-URL index") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // seed: the frontier has already fetched page /p/1 (via a messy
-    // spelling — the index stores the CANONICAL form)
-    graft.operators.DomainCuration.writeUrlIndex(
-      Seq((1L, "http://www.ex.com/p/1?utm_source=a")).toDF("doc_id", "url"),
-      "url_idx_stream", 4)
-    val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("urlvout").toString
-    val q = graft.streaming.StreamingCurate.urlVerdictStream(
-      mem.toDF().toDF("doc_id", "url"), "url_idx_stream", out,
-      Files.createTempDirectory("urlvck").toString, buckets = 4)
-    // batch 1: doc 10 respells the seeded page (dup of 1); docs 11/12
-    // are the SAME new page within one batch (12 dups 11); doc 13 new
-    mem.addData(
-      (10L, "https://ex.com/p/1#frag"),
-      (11L, "https://ex.com/p/2"),
-      (12L, "http://WWW.EX.com/p/2/"),
-      (13L, "https://ex.com/p/3?id=7&utm_campaign=x"))
-    q.processAllAvailable()
-    // batch 2: doc 20 hits batch 1's new page — known only from the
-    // appended index; doc 21 re-sends the semantic-param page
-    mem.addData((20L, "http://ex.com/p/2"), (21L, "https://ex.com/p/3?id=7"))
-    q.processAllAvailable()
-    assert(q.lastProgress.stateOperators.isEmpty,
-      "URL-dedup leg must not grow a state store")
-    q.stop()
-    val r = spark.read.parquet(out).collect()
-      .map(x => x.getAs[Long]("doc_id") -> Option(x.getAs[java.lang.Long]("dup_of"))).toMap
-    assert(r(10L).contains(1L), s"respelled seeded page must dup: $r")
-    assert(r(11L).isEmpty && r(12L).contains(11L), s"within-batch dup: $r")
-    assert(r(13L).isEmpty)
-    assert(r(20L).contains(11L), s"batch-2 vs batch-1 first sighting: $r")
-    assert(r(21L).contains(13L), s"semantic-param page remembered: $r")
-    // index grew by exactly the two new canonical pages
-    assert(spark.table("url_idx_stream").count() == 3L)
   }
 
   test("cluster-state stream: micro-batches fold into the SAME persistent map the batch head reads") {
@@ -797,61 +511,6 @@ class StreamingSpec extends AnyFunSuite {
       "streamed cluster state diverged from the from-scratch re-cluster")
   }
 
-  test("URL dedup: a redelivered first sighting never forms a mutual dup_of cycle") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // index records doc 5 as the page's first sighting
-    graft.operators.DomainCuration.writeUrlIndex(
-      Seq((5L, "https://cyc.com/p/1")).toDF("doc_id", "url"),
-      "url_idx_cycle", 4)
-    val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("urlcout").toString
-    val q = graft.streaming.StreamingCurate.urlVerdictStream(
-      mem.toDF().toDF("doc_id", "url"), "url_idx_cycle", out,
-      Files.createTempDirectory("urlcck").toString, buckets = 4)
-    // at-least-once redelivery: the indexed first sighting (doc 5)
-    // arrives AGAIN, alongside a LOWER-id copy of the same page. The
-    // old coalesce gave 5 dup_of=3 (batch rep) and 3 dup_of=5 — a
-    // cycle where dropping dup_of-non-null rows loses every copy. The
-    // index must rule: 5 stays canonical, 3 dups onto 5.
-    mem.addData((5L, "https://cyc.com/p/1"), (3L, "http://www.cyc.com/p/1/"))
-    q.processAllAvailable()
-    q.stop()
-    val r = spark.read.parquet(out).collect()
-      .map(x => x.getAs[Long]("doc_id") -> Option(x.getAs[java.lang.Long]("dup_of"))).toMap
-    assert(r(5L).isEmpty, s"redelivered first sighting must stay canonical: $r")
-    assert(r(3L).contains(5L), s"lower-id copy must dup onto the INDEXED rep: $r")
-    // and the index did not grow a second entry for the page
-    assert(spark.table("url_idx_cycle").count() == 1L)
-  }
-
-  test("stream-static span excision cleans leaked spans in flight, stateless and replay-idempotent") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val leak = (1 to 8).map(i => s"b$i").mkString(" ")
-    val bench = Seq((900L, s"pre $leak post")).toDF("doc_id", "text")
-    val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("excout").toString
-    val q = graft.streaming.StreamingCurate.exciseStream(
-      mem.toDF().toDF("doc_id", "text"), bench, out,
-      Files.createTempDirectory("excck").toString)
-    mem.addData((1L, s"t1 t2 $leak t11"), (2L, "all clean words here"))
-    q.processAllAvailable()
-    mem.addData((3L, s"$leak")) // whole doc is the leak: fully excised
-    q.processAllAvailable()
-    assert(q.lastProgress.stateOperators.isEmpty,
-      "excision leg must not grow a state store")
-    q.stop()
-    val r = spark.read.parquet(out).collect()
-      .map(x => x.getAs[Long]("doc_id") ->
-        ((x.getAs[Long]("n_removed"), x.getAs[String]("clean_text")))).toMap
-    assert(r(1L) == ((8L, "t1 t2 t11")))
-    assert(r(2L) == ((0L, "all clean words here")))
-    assert(r(3L) == ((8L, "")))
-    // every arriving doc is accounted for, across batches
-    assert(r.keySet == Set(1L, 2L, 3L))
-  }
-
   test("JS2: to_json sink round-trips through from_json losslessly") {
     import spark.implicits._
     val events = Seq(
@@ -870,116 +529,49 @@ class StreamingSpec extends AnyFunSuite {
     assert(back.exceptAll(events).isEmpty && events.exceptAll(back).isEmpty)
   }
 
-  test("streaming curation: quality-gates, redacts PII, and drops near-dups in flight") {
-    val work = Files.createTempDirectory("scur").toString
-    val goodText = "spark plans broadcast joins across partitioned parquet scans contact admin@example.com"
-    graft.sources.FeedRegistry.clear("wscur")
-    graft.sources.FeedRegistry.post("wscur",
-      s"""{"doc_id":1,"text":"$goodText","lang":"en","source":"s"}""",
-      s"""{"doc_id":2,"text":"$goodText","lang":"en","source":"s"}""", // near-dup of 1
-      """{"doc_id":3,"text":"the the the of of and and a a to to in","lang":"en","source":"s"}""", // low quality
-      """{"doc_id":4,"text":"columnar executors fuse vectorized operators into pipelined stages","lang":"en","source":"s"}""")
-    val out = graft.streaming.StreamingCurate.runFromFeed(
-      spark, "wscur", work, minQuality = 50.0)
-    val byId = out.collect().map(r =>
-      r.getAs[Long]("doc_id") -> r.getAs[String]("text")).toMap
-    // doc 2 fell to the dedup leg, doc 3 to the quality gate
-    assert(byId.keySet == Set(1L, 4L))
-    // the survivor's email is redacted; PII-free text is untouched
-    assert(byId(1L).endsWith("contact <EMAIL>") && !byId(1L).contains("@"))
-    assert(byId(4L).startsWith("columnar executors"))
-    // quality scores ride along for downstream percentile audits
-    assert(out.columns.contains("quality"))
-  }
-
-  test("composition: ALL streaming legs run concurrently over one feed in one session") {
-    import spark.implicits._
-    import graft.operators.{Similarity, TextAnalysis, TrainingData}
-    // historical corpus seeds the semantic state + stream-static indexes
-    val histDoc = "alpha beta gamma delta epsilon zeta eta theta"
-    val hist = Seq((1L, histDoc)).toDF("doc_id", "text")
-    val histEmb = TextAnalysis.hashEmbedDense(hist)
-    val semState = Files.createTempDirectory("allegs-semstate").toString
-    Similarity.syncSemanticState(spark, semState, histEmb, threshold = 0.95)
-    TrainingData.writeGramIndex(hist, "all_legs_gram_idx", 4)
-    graft.operators.DomainCuration.writeUrlIndex(
-      hist.select(col("doc_id"),
-        graft.operators.DomainCuration.messyUrl(col("doc_id")).as("url")),
-      "all_legs_url_idx", 4)
-    val work = Files.createTempDirectory("allegs").toString
-    val good = "spark plans broadcast joins across partitioned parquet scans"
-    graft.sources.FeedRegistry.clear("wsall")
-    graft.sources.FeedRegistry.post("wsall",
-      s"""{"doc_id":10,"text":"$good","lang":"en","source":"sA"}""",
-      s"""{"doc_id":11,"text":"$good","lang":"en","source":"sA"}""", // near-dup of 10
-      s"""{"doc_id":12,"text":"$histDoc","lang":"en","source":"sB"}""", // semantic dup of seed 1
-      """{"doc_id":13,"text":"the the the of of and and a a to to in","lang":"en","source":"sB"}""", // low quality
-      """{nope""") // malformed: dead-letter only
-    val rep = graft.streaming.StreamingCurate.runAllLegs(
-      spark, "wsall", work, minQuality = 50.0,
-      semState, "all_legs_gram_idx",
-      urlIndexTable = Some("all_legs_url_idx"))
-    // curation + near-dup assembly: 11 fell to dedup, 13 to quality,
-    // malformed never enters the doc legs
-    val curated = spark.read.parquet(s"$work/curated")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(curated.contains(10L) && !curated.contains(11L) &&
-      !curated.contains(13L), s"curated=$curated")
-    // semantic leg: 12 verdicted against the seeded survivor 1 (held in
-    // the shared LSM state, not an append-only table)
-    val sem = spark.read.parquet(s"$work/sem_verdicts")
-      .filter(col("dup_of").isNotNull).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("dup_of")).toMap
-    assert(sem.get(12L).contains(1L), s"sem=$sem")
-    // dead-letter: exactly the malformed payload quarantined, the four
-    // parseable ones delivered
-    assert(rep.counts("quarantined") == 1L, rep.counts.toString)
-    assert(rep.counts("delivered") == 4L, rep.counts.toString)
-    // stats leg emitted nothing yet (windows still open — append mode);
-    // the near-dup leg is the only one holding state
-    assert(rep.dedupStateRows > 0L, "dedup leg must hold watermarked state")
-    // decontam: doc splits are md5(doc_id)-derived; just assert the leg
-    // ran and produced a readable (possibly empty) verdict set
-    assert(rep.counts.contains("dc_verdicts"))
-    // URL leg: one verdict row per parseable arrival (the messy-url
-    // fixture derives spellings from doc_id, so dup hits depend on the
-    // seeded ids — presence and volume are the wiring pin here; the
-    // dedicated URL-leg test pins the verdict semantics)
-    assert(rep.counts("url_verdicts") == 4L, rep.counts.toString)
-    assert(rep.wallSec > 0)
-  }
-
   test("failure injection: killed mid-feed, uncommitted batches replay and every leg reconciles exactly-once") {
-    // The crash the batch_id-overwrite discipline exists for: the
-    // foreachBatch sink WROTE its batch but the checkpoint commit never
-    // landed. Simulated faithfully — run the soak, then delete the
-    // LATEST commit file from the dead-letter and semantic legs'
-    // checkpoints (data written, commit lost), post more feed traffic
-    // while the session is "down", and resume into the same workDir.
-    // The deleted-commit batches replay; reconciliation must show no
-    // double-delivery anywhere.
-    import spark.implicits._
-    import graft.operators.{Similarity, TextAnalysis, TrainingData}
-    val histDoc = "alpha beta gamma delta epsilon zeta eta theta"
-    val hist = Seq((1L, histDoc)).toDF("doc_id", "text")
-    val histEmb = TextAnalysis.hashEmbedDense(hist)
-    val semState = Files.createTempDirectory("restart-semstate").toString
-    Similarity.syncSemanticState(spark, semState, histEmb, threshold = 0.95)
-    TrainingData.writeGramIndex(hist, "restart_gram_idx", 4)
+    // The crash the batch_id-overwrite discipline exists for: a leg
+    // WROTE its batch but the checkpoint commit never landed. Simulated
+    // on the two legs of the reference's stages 1-2 (the dead-letter
+    // split and the near-dup verdicts): drain the feed, delete the
+    // LATEST commit file from both legs' checkpoints (data written,
+    // commit lost), post more feed traffic while the session is "down",
+    // and resume into the same workDir. The deleted-commit batches
+    // replay; reconciliation must show no double-delivery anywhere.
     val work = Files.createTempDirectory("restartsoak").toString
-    val good = "spark plans broadcast joins across partitioned parquet scans"
-    val good2 = "columnar executors fuse vectorized operators into pipelined stages"
+    def ev(mint: String) =
+      s"""{"mint":"$mint","txType":"buy","solAmount":1.0,"name":"n","symbol":"s"}"""
+    def drain(): Unit = {
+      val dl = StreamingIngest.feedEventStreamAnnotated(spark, "wsrst",
+          maxMessagesPerTrigger = Some(2L))
+        .writeStream
+        .option("checkpointLocation", s"$work/ckpt_dl")
+        .foreachBatch { (b: DataFrame, id: Long) =>
+          StreamingIngest.writeQuarantineBatch(b, id,
+            s"$work/delivered", s"$work/quarantine")
+        }
+        .start()
+      val dup = graft.streaming.StreamingDedup.nearDupVerdicts(
+          StreamingIngest.readFeedStream(spark, "wsrst",
+              maxMessagesPerTrigger = Some(2L))
+            .select(col("offset").as("doc_id"), col("value").as("text"),
+              timestamp_seconds(col("offset") + lit(86400)).as("ts")),
+          "ts", retentionMs = 3600L * 1000)
+        .writeStream.format("parquet")
+        .option("path", s"$work/verdicts")
+        .option("checkpointLocation", s"$work/ckpt_verdicts")
+        .start()
+      val legs = Seq(dl, dup)
+      legs.foreach(_.processAllAvailable())
+      legs.foreach(_.stop())
+    }
     graft.sources.FeedRegistry.clear("wsrst")
     graft.sources.FeedRegistry.post("wsrst",
-      s"""{"doc_id":10,"text":"$good","lang":"en","source":"sA"}""",
-      s"""{"doc_id":12,"text":"$histDoc","lang":"en","source":"sB"}""", // semantic dup of seed 1
-      """{nope""") // malformed: quarantine
-    graft.streaming.StreamingCurate.runAllLegs(
-      spark, "wsrst", work, minQuality = 50.0,
-      semState, "restart_gram_idx")
+      ev("K1"), ev("K2"), """{nope""", ev("K3")) // offsets 0-3
+    drain()
     // crash injection: batch written, commit lost — the at-least-once
     // window a real executor/driver death opens
-    def uncommit(ck: String): Unit = {
+    def uncommit(ck: String): java.io.File = {
       val dir = new java.io.File(s"$work/$ck/commits")
       val latest = Option(dir.listFiles()).get
         .filter(_.getName.forall(_.isDigit)).maxBy(_.getName.toLong)
@@ -988,6 +580,7 @@ class StreamingSpec extends AnyFunSuite {
       // rewrite on recovery fails as a phantom concurrent writer
       val crc = new java.io.File(dir, s".${latest.getName}.crc")
       if (crc.exists()) { crc.delete(); () }
+      latest
     }
     // the kill: wait out the stopped legs' async deregistration so the
     // "restarted session" does not race the dying one (stop() returns
@@ -996,144 +589,39 @@ class StreamingSpec extends AnyFunSuite {
     while (spark.streams.active.nonEmpty && System.currentTimeMillis() < deadline)
       Thread.sleep(100)
     assert(spark.streams.active.isEmpty, "legs did not stop in 30s")
-    uncommit("ckpt_dl")
-    uncommit("ckpt_sem")
-    // traffic that arrived while the session was down (64 is a
-    // test-split doc — the md5 hash-split facts from the decontam leg
-    // test — and it leaks the seeded train gram AND is a semantic twin
-    // of seed 1, so it exercises the dc and sem legs post-restart)
+    val lost = Seq(uncommit("ckpt_dl"), uncommit("ckpt_verdicts"))
+    // traffic that arrived while the session was down: a re-sent K1
+    // payload (offset 5, the near-dup of offset 0) and one more
+    // malformed payload (offsets 4-6)
     graft.sources.FeedRegistry.post("wsrst",
-      s"""{"doc_id":20,"text":"$good2","lang":"en","source":"sA"}""",
-      s"""{"doc_id":11,"text":"$good","lang":"en","source":"sA"}""", // near-dup of 10
-      s"""{"doc_id":64,"text":"$histDoc","lang":"en","source":"sB"}""",
-      """not json at all""") // malformed: quarantine
-    val rep = graft.streaming.StreamingCurate.runAllLegs(
-      spark, "wsrst", work, minQuality = 50.0,
-      semState, "restart_gram_idx")
+      ev("K4"), ev("K1"), """not json at all""")
+    drain()
+    lost.foreach(f => assert(f.exists(), s"$f: the lost batch did not replay"))
     // dead-letter leg: the replayed batch overwrote its own batch_id
-    // partition — every parseable payload delivered EXACTLY once,
-    // every malformed payload quarantined exactly once
+    // partition — every parseable payload delivered EXACTLY once, every
+    // malformed payload quarantined exactly once
     val delivered = spark.read.parquet(s"$work/delivered")
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(delivered.sorted == Seq(10L, 11L, 12L, 20L, 64L),
+      .select("mint").collect().map(_.getString(0)).toSeq
+    assert(delivered.sorted == Seq("K1", "K1", "K2", "K3", "K4"),
       s"delivered must be exactly-once: $delivered")
-    assert(rep.counts("quarantined") == 2L, rep.counts.toString)
-    // semantic leg: replayed verdicts rewrote their partition, not
-    // appended — one verdict row per verdicted doc, correct dup_of
-    val sem = spark.read.parquet(s"$work/sem_verdicts").collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("dup_of"))
-    assert(sem.length == sem.distinct.length && sem.map(_._1).distinct.length == sem.length,
-      s"semantic verdicts double-delivered: ${sem.toSeq}")
-    val semMap = sem.toMap
-    assert(semMap.get(12L).contains(1L), s"sem=$semMap")  // vs seeded survivor
-    assert(semMap.get(11L).contains(10L), s"sem=$semMap") // vs batch-1 survivor
-    assert(semMap.get(64L).contains(1L), s"sem=$semMap")  // post-restart arrival
-    // the replayed batch folded NOTHING into the state (entries already
-    // members anti-join to empty — the exactly-once contract lives in
-    // the state, not in append tolerance): survivors are exactly the
-    // novel identities, never a replay artifact
-    val keptIds = Similarity.readSemVerdicts(spark, semState)
-      .filter(col("kept")).select("vec_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(keptIds == Set(1L, 10L, 20L), s"state survivors drifted: $keptIds")
-    // exactly-once legs (streaming parquet sinks commit via their
-    // manifest): near-dup verdicts and curated docs carry no dup rows
-    val dup = spark.read.parquet(s"$work/verdicts").select("doc_id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(dup.sorted == dup.distinct.sorted, s"dup verdicts duplicated: $dup")
-    val curated = spark.read.parquet(s"$work/curated")
-      .select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(curated.length == curated.distinct.length, s"curated duplicated: $curated")
-    assert(curated.contains(10L) && !curated.contains(11L), s"curated=$curated")
-    // decontam leg: replay-safe by the same overwrite discipline, and
-    // the post-restart test-split arrival is verdicted against the
-    // seeded train gram exactly once
-    val dc = spark.read.parquet(s"$work/dc_verdicts").select("doc_id")
-      .collect().map(_.getLong(0)).toSeq
-    assert(dc.sorted == dc.distinct.sorted, s"dc verdicts duplicated: $dc")
-    assert(dc.contains(64L), s"dc=$dc")
-  }
-
-  test("streaming gate verdicts match the batch ensemble's row-local legs on a replayed corpus") {
-    // drift check between the two production gates: StreamingCurate
-    // applies the row-local quality kernel with an OFFLINE threshold,
-    // the batch ensemble applies the same kernel inside its fused
-    // multi-leg plan. Replaying the whole sf0.001 corpus through the
-    // streaming path must keep EXACTLY the docs the ensemble's quality
-    // leg keeps, with bit-identical scores — any divergence means the
-    // fused plan and the streaming projection no longer share one
-    // kernel. Threshold = the corpus median, so the gate genuinely
-    // discriminates (~half each side).
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = graft.Tables.documents(spark, TestSpark.sf0001)
-      .select("doc_id", "text", "lang", "source", "n_chars").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3), r.getLong(4)))
-    val ensAll = graft.operators.TextAnalysis
-      .qualityEnsemble(graft.Tables.documents(spark, TestSpark.sf0001),
-        0.0, 1.0, 1.0, 0.0)
-      .select("doc_id", "quality", "dup_frac").collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Double]("quality"), r.getAs[Double]("dup_frac")))).toMap
-    // thresholds at the corpus median quality and p75 dup_frac
-    val theta = ensAll.values.map(_._1).toSeq.sorted.apply(ensAll.size / 2)
-    val delta = ensAll.values.map(_._2).toSeq.sorted.apply(ensAll.size * 3 / 4)
-    // ground truth: the ensemble's OWN keep verdict with only its two
-    // row-local legs armed (corpus legs wide open)
-    val batchKept = graft.operators.TextAnalysis
-      .qualityEnsemble(graft.Tables.documents(spark, TestSpark.sf0001),
-        theta, delta, 1.0, 0.0)
-      .collect().filter(_.getAs[Boolean]("keep"))
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Double]("quality"), r.getAs[Double]("dup_frac")))).toMap
-    val mem = MemoryStream[(Long, String, String, String, Long)]
-    mem.addData(docs.toIndexedSeq: _*)
-    val q = graft.streaming.StreamingCurate.curate(
-        mem.toDF.toDF("doc_id", "text", "lang", "source", "n_chars"),
-        theta, delta)
-      .writeStream.format("memory").queryName("gate_drift").start()
-    q.processAllAvailable(); q.stop()
-    val streamed = spark.table("gate_drift").collect()
-      .map(r => r.getAs[Long]("doc_id") ->
-        ((r.getAs[Double]("quality"), r.getAs[Double]("dup_frac")))).toMap
-    assert(streamed.keySet == batchKept.keySet,
-      s"streaming gate kept ${streamed.size}, ensemble row-local legs ${batchKept.size}")
-    batchKept.foreach { case (id, v) =>
-      assert(streamed(id) == v, s"doc $id: streaming ${streamed(id)} vs batch $v")
-    }
-    assert(streamed.nonEmpty && streamed.size < docs.length,
-      "median/p75 thresholds must discriminate")
-  }
-
-  test("offline threshold derivation gates the expected fractions, end to end") {
-    // the other half of the offline-threshold contract: derive
-    // (minQuality, maxDupFrac) from the batch sample in one scan, feed
-    // them to the row-local gate, and the kept set must be exactly the
-    // docs inside both thresholds — with the kept fraction in the
-    // neighborhood the keep-fractions asked for (approx percentiles,
-    // discrete score ties -> loose band, exact containment strict)
-    val docs = graft.Tables.documents(spark, TestSpark.sf0001)
-    val (minQ, maxDup) = graft.streaming.StreamingCurate
-      .offlineGateThresholds(docs, keepQualityFrac = 0.5, keepDupFrac = 0.95)
-    val kept = graft.streaming.StreamingCurate.curate(docs, minQ, maxDup)
-      .select("doc_id", "quality", "dup_frac").collect()
-    assert(kept.forall(r => r.getAs[Double]("quality") >= minQ &&
-      r.getAs[Double]("dup_frac") <= maxDup))
-    val total = docs.count().toDouble
-    assert(kept.length / total > 0.3 && kept.length / total < 0.65,
-      s"~half by quality x ~95% by dup expected, got ${kept.length}/$total")
-    // keep-everything fractions must gate nothing out
-    val (qAll, dAll) = graft.streaming.StreamingCurate
-      .offlineGateThresholds(docs, keepQualityFrac = 1.0, keepDupFrac = 1.0)
-    val all = graft.streaming.StreamingCurate.curate(docs, qAll, dAll).count()
-    assert(all == total.toLong, s"keep-all thresholds must pass every doc, got $all")
+    val quarantined = spark.read.parquet(s"$work/quarantine")
+      .select("payload").collect().map(_.getString(0)).toSeq
+    assert(quarantined.sorted == Seq("not json at all", "{nope"),
+      s"quarantined must be exactly-once: $quarantined")
+    // near-dup leg (a streaming parquet sink commits via its manifest):
+    // one verdict row per message, and the keyed state survived the
+    // restart — the re-sent K1 maps to its first sighting
+    val verdicts = spark.read.parquet(s"$work/verdicts")
+      .select("doc_id", "dup_of").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    assert(verdicts.map(_._1).sorted == (0L until 7L),
+      s"dup verdicts must be exactly-once: $verdicts")
+    assert(verdicts.toMap.apply(5L) == 0L, s"verdicts=$verdicts")
   }
 
   test("q81 composes in-flight: unicode normalization runs inside the micro-batch before the gate") {
-    // the integration the StreamingCurate scaladoc prescribes: map
-    // normalizeText over the stream BEFORE the gate, so signals and
-    // any downstream byte-level dedup see canonical bytes. Two
+    // map normalizeText over the stream BEFORE any gate, so signals
+    // and any downstream byte-level dedup see canonical bytes. Two
     // visually-identical arrivals (one decomposed + NBSP/ZWSP-ridden,
     // one clean) must leave the micro-batch byte-identical.
     import spark.implicits._
@@ -1144,13 +632,12 @@ class StreamingSpec extends AnyFunSuite {
     mem.addData((1L, dirty, "en", "s", 24L), (2L, clean, "en", "s", 23L))
     val normalized = mem.toDF.toDF("doc_id", "text", "lang", "source", "n_chars")
       .withColumn("text", graft.operators.TextAnalysis.normalizeText(col("text")))
-    val q = graft.streaming.StreamingCurate
-      .curate(normalized, minQuality = -1e9, maxDupFrac = 1.0)
+    val q = normalized
       .writeStream.format("memory").queryName("norm_inflight").start()
     q.processAllAvailable(); q.stop()
     val texts = spark.table("norm_inflight").select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(texts.size == 2, "wide-open gate must pass both docs")
+    assert(texts.size == 2, "both docs must leave the micro-batch")
     assert(texts(1L) == clean && texts(2L) == clean,
       "in-flight normalization must make the pair byte-identical")
   }

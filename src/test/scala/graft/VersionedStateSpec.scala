@@ -55,10 +55,6 @@ class VersionedStateSpec extends AnyFunSuite {
     assert(vs.versions == (3, 1))
     assert(kvOf(vs.read(spark, "kv")) ==
       Map(2L -> ("b2", 21L), 3L -> ("c3", 33L), 4L -> ("a4", 40L)))
-    val folded = vs.fold(spark, "kv").collect()
-    assert(folded.map(_.getAs[Long]("k")).toSet == Set(1L, 2L, 3L, 4L))
-    assert(folded.exists(r => r.getAs[Long]("k") == 1L && r.isNullAt(1)),
-      "fold must keep the tombstone of key 1")
     assert(vs.read(spark, "kv").columns.toSeq == keyed.columns)
     assert(unionOf(vs.read(spark, "u")) == Set(1L, 2L, 3L))
   }
