@@ -75,7 +75,8 @@ private[graft] object StateFiles {
     * does not carry the expected format/parameter stamp — a legacy
     * layout or a sync under different knobs would otherwise surface as
     * an opaque parquet path error (or worse, silently mix verdict
-    * generations). A dir with no pointer passes: init will stamp it.
+    * generations). A dir with no pointer passes: it is the empty
+    * store, and the first sync's commit stamps it.
     */
   def requireMeta(dir: String, name: String, expected: String): Unit = {
     if (!hasPointer(dir)) return

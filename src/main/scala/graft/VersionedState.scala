@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, max_by, struct}
+import org.apache.spark.sql.types.StructType
 
 /** The versioned on-disk store of one persistent state dir: the cluster
   * state of [[graft.operators.Dedup]], the token state of
@@ -24,6 +25,12 @@ import org.apache.spark.sql.functions.{col, lit, max_by, struct}
   * addition: a new full version and a flip, then versions below the
   * PREVIOUS base are garbage-collected, so a reader that resolved the
   * pointer since the previous compaction still finds its versions.
+  *
+  * A dir with no pointer is the EMPTY store: every table reads as an
+  * empty `LocalRelation` of its declared schema, so a family's first
+  * sync runs the same update as every later one (Catalyst's
+  * empty-relation pruning drops the anti-joins against it), and its
+  * first commit becomes the base.
   *
   * `massTable` drives the mass rule of the compaction (no mass rule
   * without it); `marker` is a `(file, content)` stamp written before
@@ -51,28 +58,44 @@ private[graft] final class VersionedState(dir: String,
     tables.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"no table $name in $dir"))
 
-  /** The current rows of `table`: the union of the live versions, or
-    * for a keyed table the latest version per key, tombstones dropped.
+  /** Versions `vs` of `t`, read with the declared schema: no footer
+    * job to infer it.
     */
-  def read(s: SparkSession, table: String): DataFrame = spec(table) match {
-    case Union(name, distinct) =>
-      val (latest, base) = versions
-      val all = s.read.parquet((base to latest).map(path(name, _)): _*)
-      if (distinct) all.distinct() else all
-    case t: Keyed =>
-      val f = fold(s, t)
-      t.tombstone.fold(f)(c => f.filter(col(c).isNotNull))
+  private def scan(s: SparkSession, t: Table, vs: Int*): DataFrame =
+    s.read.schema(t.schema).parquet(vs.map(path(t.name, _)): _*)
+
+  /** Version `v` of `table` alone, e.g. a slice the current commit
+    * just wrote.
+    */
+  def version(s: SparkSession, table: String, v: Int): DataFrame =
+    scan(s, spec(table), v)
+
+  /** The current rows of `table`: the union of the live versions, or
+    * for a keyed table the latest version per key, tombstones dropped;
+    * before the first commit, no rows of the table's schema.
+    */
+  def read(s: SparkSession, table: String): DataFrame = {
+    val t = spec(table)
+    val (latest, base) = versions
+    if (latest == 0) s.createDataFrame(java.util.List.of[Row](), t.schema)
+    else t match {
+      case u: Union =>
+        val all = scan(s, u, base to latest: _*)
+        if (u.distinct) all.distinct() else all
+      case k: Keyed =>
+        val f = fold(s, k, latest, base)
+        k.tombstone.fold(f)(c => f.filter(col(c).isNotNull))
+    }
   }
 
   /** A keyed table's latest version per key, tombstones kept. A store
     * whose latest version is its base reads as one scan, no shuffle.
     */
-  private def fold(s: SparkSession, t: Keyed): DataFrame = {
-    val (latest, base) = versions
-    if (latest == base) return s.read.parquet(path(t.name, base))
+  private def fold(s: SparkSession, t: Keyed, latest: Int,
+      base: Int): DataFrame = {
+    if (latest == base) return scan(s, t, base)
     val grouped = (base to latest)
-      .map(v => s.read.parquet(path(t.name, v))
-        .select(t.columns.map(col) :+ lit(v).as("_v"): _*))
+      .map(v => scan(s, t, v).select(t.columns.map(col) :+ lit(v).as("_v"): _*))
       .reduce(_ unionByName _)
       .groupBy(col(t.key))
     t.columns.filter(_ != t.key) match {
@@ -115,9 +138,9 @@ private[graft] final class VersionedState(dir: String,
 
   private def outgrown(s: SparkSession, base: Int, latest: Int,
       maxDeltas: Int): Boolean =
-    latest - base >= maxDeltas || massTable.exists { t =>
-      (base + 1 to latest).map(x => s.read.parquet(path(t, x)).count()).sum >
-        CompactFraction * s.read.parquet(path(t, base)).count()
+    latest - base >= maxDeltas || massTable.map(spec).exists { t =>
+      (base + 1 to latest).map(scan(s, t, _).count()).sum >
+        CompactFraction * scan(s, t, base).count()
     }
 
   /** Remove every table's versions below `below` (default: the current
@@ -137,19 +160,28 @@ private[graft] final class VersionedState(dir: String,
 }
 
 private[graft] object VersionedState {
-  sealed trait Table { def name: String }
+  /** A table of the store; `ddl` states its columns and their types
+    * once (e.g. `"doc_id BIGINT, cluster_id BIGINT"`).
+    */
+  sealed trait Table {
+    def name: String
+    def ddl: String
+    def schema: StructType = StructType.fromDDL(ddl)
+  }
 
   /** Rows never change: a read is the union of the live versions,
     * deduplicated when `distinct`.
     */
-  final case class Union(name: String, distinct: Boolean = false)
+  final case class Union(name: String, ddl: String, distinct: Boolean = false)
     extends Table
 
-  /** Rows `(columns)` keyed by `key`: the latest version wins per key,
-    * and a row whose `tombstone` column is null deletes its key.
+  /** Rows keyed by `key`: the latest version wins per key, and a row
+    * whose `tombstone` column is null deletes its key.
     */
-  final case class Keyed(name: String, key: String, columns: Seq[String],
-      tombstone: Option[String] = None) extends Table
+  final case class Keyed(name: String, key: String, ddl: String,
+      tombstone: Option[String] = None) extends Table {
+    def columns: Seq[String] = schema.fieldNames.toSeq
+  }
 
   /** Deltas compact into a new full version once they exceed this
     * share of the mass table's base rows: the read/write balance knob.

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * on it):
   *   - dot is [[ArrayDot]]'s left-to-right fold, bit-identical;
   *   - csim = dot / (nrm * cn), and any non-finite 0/0 (zero-norm
-  *     vector or centroid — hashEmbedDense emits real zero vectors)
+  *     vector or centroid — hashed embeddings can be real zero vectors)
   *     pins to -1, the `guardedCosine` totalization, so zero-norm rows
   *     land deterministically in the lowest cid;
   *   - a dimension mismatch or a null ELEMENT in either array also

@@ -717,14 +717,24 @@ object Dedup {
     val edges = snap(raw
       .repartition(np, col("src")).sortWithinPartitions(col("src")))
     free(raw)
+    // A one-partition edge set (<= 131072 rows) is BROADCAST into the
+    // neighbor join: one partition cannot meet the join's distribution
+    // at the session width (EnsureRequirements re-shuffles it every
+    // round), and the broadcast then hangs on the snapshot's static
+    // size estimate — which an input derived through joins (the
+    // incremental head's contracted edges) inflates to the product of
+    // its inputs, so each round paid two shuffle stages AQE then threw
+    // away. The measured count decides instead.
+    val edgeSide = if (np == 1) broadcast(edges) else edges
     var labels = snap(edges.select(col("src").as("doc_id")).distinct()
       .withColumn("label", col("doc_id"))
       .repartition(np, col("doc_id")).sortWithinPartitions(col("doc_id")))
     var converged = false
     var round = 0
     while (!converged && round < MaxLabelRounds) {
-      val viaNeighbors = edges.join(labels, edges("src") === labels("doc_id"))
-        .select(edges("dst").as("doc_id"), labels("label"))
+      val viaNeighbors = edgeSide
+        .join(labels, edgeSide("src") === labels("doc_id"))
+        .select(edgeSide("dst").as("doc_id"), labels("label"))
       // the self rows carry their current label through the aggregation
       // (`old`), so convergence needs no per-round compare join — and
       // since round 17 no second JOB either: a per-round accumulator
@@ -1401,9 +1411,9 @@ object Dedup {
     * corpus-wide size after this batch is within [[BandCap]] — exactly
     * the eligibility a from-scratch rebuild of the grown corpus
     * applies, so the merge proposes exactly the rebuild's connectivity
-    * (the scope-local rules of [[starEdgesFromBands]] — batch-slice
-    * caps and the index-hub exemption — are the opt-in `permissive`
-    * recall mode). Per eligible bucket the star spans the batch
+    * (unlike the scope-local rules of [[starEdgesFromBands]] —
+    * batch-slice caps and the index-hub exemption — that the q116
+    * fixture head runs). Per eligible bucket the star spans the batch
     * members plus ONE stored member (the index min): prior members of
     * a never-saturated bucket are already mutually connected in the
     * map — each arrived in a batch whose star spanned the bucket at
@@ -1444,23 +1454,9 @@ object Dedup {
   private def mergePieces(oldClusters: DataFrame, newEdges: DataFrame,
       checkpointDir: Option[String]): (DataFrame, DataFrame, DataFrame) = {
     val cl = oldClusters.select(col("doc_id"), col("cluster_id"))
-    // materialize the edge frame ONCE: it is referenced by the
-    // contraction below AND the first-seen branch, and its subtree
-    // (batch signing + the star aggregate) would otherwise re-plan —
-    // and re-scan the batch — per reference (the branch-duplication
-    // trap; caught by ScanBudgetSpec at 3 documents scans). Edge
-    // volume is star-LINEAR in the batch's band rows, so the snapshot
-    // is small; durability mirrors dupClusters' contract.
-    val snap: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        newEdges.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint()
-    }
-    val edges = snap(newEdges)
     // contract endpoints to stored reps (self when unclustered); a
     // within-component edge contracts to a self-loop and drops here
-    val contracted = edges
+    val contracted = newEdges
       .join(cl.select(col("doc_id").as("doc_a"), col("cluster_id").as("ra")),
         Seq("doc_a"), "left")
       .join(cl.select(col("doc_id").as("doc_b"), col("cluster_id").as("rb")),
@@ -1476,18 +1472,15 @@ object Dedup {
       .join(repMap, cl("cluster_id") === repMap("rep"), "left")
       .select(col("doc_id"), col("cluster_id").as("old_id"),
         coalesce(col("merged_id"), col("cluster_id")).as("cluster_id"))
-    // docs the map has never seen enter with their merged label (every
-    // such doc is its own rep; the coalesce covers an edge whose twin
-    // endpoint contracted it away as a self-loop — impossible for
-    // distinct unclustered ids, kept as a structural guard)
-    val newRows = edges.select(col("doc_a").as("doc_id"))
-      .union(edges.select(col("doc_b").as("doc_id"))).distinct()
-      .join(cl.select("doc_id"), Seq("doc_id"), "left_anti")
-      .join(repMap, col("doc_id") === repMap("rep"), "left")
-      .select(col("doc_id"),
-        coalesce(col("merged_id"), col("doc_id")).as("cluster_id"))
-    (relabeled, newRows,
-      repMap.select(col("rep"), col("merged_id")))
+    // docs the map has never seen enter with their merged label: every
+    // such endpoint is its own rep, and no edge of one contracts to a
+    // self-loop (edges join distinct ids, and the other end is a stored
+    // label or another unseen doc), so they are exactly the reps that
+    // are not stored docs — stored labels are stored docs
+    val newRows = repMap
+      .join(cl.select(col("doc_id").as("rep")), Seq("rep"), "left_anti")
+      .select(col("rep").as("doc_id"), col("merged_id").as("cluster_id"))
+    (relabeled, newRows, repMap)
   }
 
   /** Merge verified `(doc_a, doc_b)` edges into a stored `(doc_id,
@@ -1504,7 +1497,7 @@ object Dedup {
   }
 
   /** The merge's DELTA only: rows whose label actually changed plus
-    * first-seen rows — what [[updateClusterState]] persists per batch,
+    * first-seen rows — what [[syncClusterState]] persists per batch,
     * so the per-ingest WRITE is O(touched + batch), never O(corpus).
     * Returns `(delta, newRows, repMap)`; the latter two feed the
     * survivor-state update.
@@ -1571,13 +1564,15 @@ object Dedup {
   private def clusterState(dir: String): graft.VersionedState =
     new graft.VersionedState(dir, Seq(
         graft.VersionedState.Keyed("clusters", "doc_id",
-          Seq("doc_id", "cluster_id")),
+          "doc_id BIGINT, cluster_id BIGINT"),
         graft.VersionedState.Keyed("survivors", "cluster_id",
-          Seq("doc_id", "cluster_id", "cluster_size", "quality"),
+          "doc_id BIGINT, cluster_id BIGINT, cluster_size BIGINT, " +
+            "quality DOUBLE",
           tombstone = Some("doc_id")),
-        graft.VersionedState.Union("band_index"),
-        graft.VersionedState.Union("saturated", distinct = true),
-        graft.VersionedState.Union("ids")),
+        graft.VersionedState.Union("band_index",
+          "bk STRING, idx_id BIGINT, sig STRING"),
+        graft.VersionedState.Union("saturated", "bk STRING", distinct = true),
+        graft.VersionedState.Union("ids", "doc_id BIGINT, quality DOUBLE")),
       massTable = Some("clusters"),
       marker = Some("_FORMAT" -> ClusterStateFormat))
 
@@ -1636,12 +1631,13 @@ object Dedup {
     * clusters the batch touched. An absorbed old cluster contributes
     * exactly its stored survivor row (which dominates and counts all
     * its members); first-seen docs contribute themselves, scored from
-    * the roster∪batch lookup; labels that vanished get tombstones.
+    * the roster∪batch lookup; stored labels that vanished get
+    * tombstones.
     */
   private def survivorDelta(oldSurv: DataFrame, repMap: DataFrame,
       newRows: DataFrame, qual: DataFrame): DataFrame = {
-    val absorbed = oldSurv
-      .join(repMap, oldSurv("cluster_id") === repMap("rep"))
+    val hit = oldSurv.join(repMap, oldSurv("cluster_id") === repMap("rep"))
+    val absorbed = hit
       .select(col("merged_id").as("cluster_id"), col("doc_id"),
         col("quality"), col("cluster_size"))
     val entered = newRows
@@ -1655,11 +1651,9 @@ object Dedup {
           struct(col("quality"), -col("doc_id"))).as("keep"))
       .select(col("keep.doc_id").as("doc_id"), col("cluster_id"),
         col("cluster_size"), col("keep.quality").as("quality"))
-    // tombstone every contracted rep whose label lost the merge; reps
-    // that were never cluster ids (first-seen endpoints) produce
-    // harmless tombstones for labels that never existed — bounded by
-    // the batch and swept at the next compaction
-    val tombstones = repMap
+    // tombstone every stored label that lost the merge (first-seen
+    // endpoints were never labels, so a first sync writes none)
+    val tombstones = hit
       .filter(col("rep") =!= col("merged_id"))
       .select(lit(null).cast("long").as("doc_id"),
         col("rep").as("cluster_id"),
@@ -1669,170 +1663,86 @@ object Dedup {
       col("quality")).unionByName(tombstones)
   }
 
-  /** Init-path band bookkeeping: `(index slice, saturated buckets)`
-    * from ONE signing pass. Bucket sizes come from a groupBy aggregate
-    * joined back — NOT `count(*) over (partition by bk)`: the window
-    * form lands every row of a degenerate hot band key (100 TB of
-    * shared boilerplate hashing to one bk) on a single task carrying
-    * the sig payloads, where the aggregate/join shape partial-combines
-    * map-side and joins only the bucket-count frame (the same reason
-    * the update path uses [[bucketStatsOf]]). InitPlanShape in
-    * ClusterMergeSpec pins the no-WindowExec plan.
-    */
-  private[graft] def initBandFrames(d: DataFrame): (DataFrame, DataFrame) = {
-    // one banding pass feeds both consumers (localCheckpoint: tiny rows)
-    val bands = sigBandRows(d.select(col("doc_id"), col("text")))
-      .localCheckpoint()
-    val sizes = bands.groupBy("bk").agg(count(lit(1)).as("bsz"))
-      .localCheckpoint()
-    (bands.join(sizes.filter(col("bsz") <= BandCap).select("bk"),
-        Seq("bk"), "left_semi")
-      .select(col("bk"), col("doc_id").as("idx_id"), col("sig")),
-      sizes.filter(col("bsz") > BandCap).select("bk"))
-  }
-
-  /** Initialize cluster state from a full corpus: the q44 cluster loop
-    * runs ONCE here; every later snapshot goes through
-    * [[updateClusterState]]'s batch-bounded merge instead. Also seeds
-    * the survivor table (the q53 selection, run once — incremental
-    * after this), the scored roster, and the saturation markers for
-    * buckets already over [[BandCap]]. `trackSurvivors = false` skips
-    * the survivor/roster-quality extras for callers that only need the
-    * map+index (the q116 fixture staging).
-    */
-  def writeClusterState(docs: DataFrame, dir: String,
-      checkpointDir: Option[String] = None,
-      trackSurvivors: Boolean = true): Unit =
-    graft.StateFiles.withWriterLock(dir) {
-      val s = docs.sparkSession
-      val d = ensureNChars(docs)
-      val state = clusterState(dir)
-      state.commit(s, full = true) { v =>
-        val (idxSlice, saturated) = initBandFrames(d)
-        idxSlice.write.mode("overwrite").parquet(state.path("band_index", v))
-        saturated.write.mode("overwrite").parquet(state.path("saturated", v))
-        val ids =
-          if (trackSurvivors) scoredIds(d)
-          else d.select(col("doc_id"), lit(null).cast("double").as("quality"))
-        ids.write.mode("overwrite").parquet(state.path("ids", v))
-        // the init CC loop rides star edges (clique→star connectivity
-        // equivalence, same capped-bucket eligibility as the pair
-        // explode), so the one O(corpus) clustering pass feeds Σ|bucket|
-        // edges instead of Σ|bucket|²/2 pairs; ClusterSurvivorSpec and
-        // IncrCluster pin the map against from-scratch
-        // dupClusters(candidatePairsOf(...)) results.
-        dupClusters(starEdgesOf(bandRows(d.select(col("doc_id"), col("text")))),
-            checkpointDir)
-          .write.mode("overwrite").parquet(state.path("clusters", v))
-        if (trackSurvivors)
-          canonicalDocsPreScored(s.read.parquet(state.path("ids", v)),
-              s.read.parquet(state.path("clusters", v)))
-            .filter(col("cluster_size") >= 2)
-            .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-              col("quality"))
-            .write.mode("overwrite").parquet(state.path("survivors", v))
-        else s.emptyDataFrame
-          .select(lit(null).cast("long").as("doc_id"),
-            lit(null).cast("long").as("cluster_id"),
-            lit(null).cast("long").as("cluster_size"),
-            lit(null).cast("double").as("quality"))
-          .write.mode("overwrite").parquet(state.path("survivors", v))
-      }
-    }
-
-  /** Bring stored cluster state up to date with a NEW corpus snapshot
+  /** Bring the stored cluster state up to date with a corpus snapshot
     * (the full current corpus — the batch is derived by anti-joining
-    * the ingested-id roster, so callers never hand-track deltas).
-    * Cost is proportional to the BATCH: the batch signs once and joins
-    * the capped index, the component loop runs on the contracted graph
-    * only, and every write — map delta, survivor delta, index slice,
-    * roster slice, saturation markers — is O(touched + batch). Returns
-    * the updated map. A snapshot with no new docs returns the stored
-    * map untouched (no version bump).
+    * the ingested-id roster, so callers never hand-track deltas) and
+    * return the current map. The first call on a dir is the same
+    * update against the empty store: the batch is the whole corpus and
+    * its commit becomes the base. Cost is proportional to the BATCH:
+    * the batch signs once and joins the capped index, the component
+    * loop runs on the contracted graph only, and every write — map
+    * delta, survivor delta, index slice, roster slice, saturation
+    * markers — is O(touched + batch). A snapshot with no new docs
+    * returns the stored map untouched (no version bump).
     *
-    * Cap semantics: GLOBAL by default — a bucket proposes
-    * edges iff its true corpus-wide size stays within [[BandCap]], the
-    * exact eligibility a from-scratch rebuild applies, so the merged
-    * map equals the rebuild everywhere except the inherent CROSSING
-    * corner (edges committed while a bucket was still under the cap
-    * persist after it crosses — incremental ingest never retroactively
-    * unlinks; tools/IncrCluster traces every residual diff row to a
-    * crossing bucket and fails otherwise). `permissive = true` opts
-    * into the scope-local rules ([[starEdgesFromBands]] —
-    * higher recall inside saturated buckets, the 8.9%-of-rows sf10
-    * drift documented in SCALE.md round 15). The index append and
-    * saturation bookkeeping are global-style under BOTH modes, so a
-    * dir stays coherent whichever mode each batch used.
+    * Cap semantics are GLOBAL: a bucket proposes edges iff its true
+    * corpus-wide size stays within [[BandCap]], the exact eligibility
+    * a from-scratch rebuild applies, so the merged map equals the
+    * rebuild everywhere except the inherent CROSSING corner (edges
+    * committed while a bucket was still under the cap persist after
+    * it crosses — incremental ingest never retroactively unlinks;
+    * tools/IncrCluster traces every residual diff row to a crossing
+    * bucket and fails otherwise). `maxDeltaVersions` is the store's
+    * version-count compaction bound.
     */
-  def updateClusterState(s: SparkSession, dir: String, docs: DataFrame,
+  def syncClusterState(s: SparkSession, dir: String, docs: DataFrame,
       checkpointDir: Option[String] = None,
-      permissive: Boolean = false,
       maxDeltaVersions: Int = graft.VersionedState.MaxDeltaVersions): DataFrame =
     graft.StateFiles.withWriterLock(dir) {
-      updateLocked(s, dir, docs, checkpointDir, permissive, maxDeltaVersions)
-    }
-
-  private def updateLocked(s: SparkSession, dir: String, docs: DataFrame,
-      checkpointDir: Option[String], permissive: Boolean,
-      maxDeltaVersions: Int): DataFrame = {
-    val state = clusterState(dir)
-    val d = ensureNChars(docs)
-    val roster = readIdQuality(s, dir)
-    // the batch is persisted because THREE kernels consume it (the
-    // signing pass, the quality scoring, the empty check) — without
-    // the cache each re-runs the corpus-vs-roster anti-join, i.e.
-    // three corpus scans per update instead of one
-    val batch = d.join(roster.select("doc_id"), Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (batch.isEmpty) {
+      val state = clusterState(dir)
+      val d = ensureNChars(docs)
+      val roster = readIdQuality(s, dir)
+      // the batch is persisted because THREE kernels consume it (the
+      // signing pass, the quality scoring, the empty check) — without
+      // the cache each re-runs the corpus-vs-roster anti-join, i.e.
+      // three corpus scans per update instead of one
+      val batch = d.join(roster.select("doc_id"), Seq("doc_id"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // a first sync commits even an empty corpus: no probe job
+      if (!state.initialized || !batch.isEmpty) {
+        val index = readBandIndex(s, dir)
+        // sign the batch ONCE: the same (doc_id, sig, bk) frame feeds the
+        // bucket stats, the edge proposal, and the index append — the
+        // naive three-kernel composition shingled+minhashed the batch
+        // text three times (measured at sf1: 11.8 → 7.4 s update wall).
+        // persist (not localCheckpoint): lineage survives executor loss.
+        val sb = sigBandRows(batch.select(col("doc_id"), col("text")))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // one bucket-bookkeeping frame, O(batch buckets), materialized
+        // once for its three consumers (eligibility, append, saturation)
+        val stats = bucketStatsOf(sb, index, readSaturated(s, dir))
+          .localCheckpoint()
+        val (delta, newRows, repMap) = mergeDelta(readClusterState(s, dir),
+          starEdgesGlobalCap(sb, stats), checkpointDir)
+        // the batch derives from the COMMITTED roster, so a crash before
+        // the flip replays into an overwrite of the same version and a
+        // crash after it makes the replay's anti-join empty
+        // (ClusterMergeSpec pins the rollback-replay fixpoint)
+        state.commit(s, maxDeltas = maxDeltaVersions) { v =>
+          delta.write.mode("overwrite").parquet(state.path("clusters", v))
+          // the roster slice lands first among the version-v writes so the
+          // survivor update's first-seen lookup READS IT BACK (a thin
+          // columnar read) instead of re-running the scoring pass; write
+          // order within a version is free — nothing resolves any v-file
+          // until the pointer flips
+          scoredIds(batch).write.mode("overwrite").parquet(state.path("ids", v))
+          survivorDelta(readSurvivorState(s, dir), repMap, newRows,
+              state.version(s, "ids", v).unionByName(roster))
+            .write.mode("overwrite").parquet(state.path("survivors", v))
+          // index slice: the batch's band rows for buckets whose true size
+          // stays within the cap (the index never grows a bucket past it)
+          sb.select(col("bk"), col("doc_id").as("idx_id"), col("sig"))
+            .join(stats.filter(!col("sat") && col("t") <= BandCap).select("bk"),
+              Seq("bk"))
+            .write.mode("overwrite").parquet(state.path("band_index", v))
+          stats.filter(!col("sat") && col("t") > BandCap).select("bk")
+            .write.mode("overwrite").parquet(state.path("saturated", v))
+        }
+        sb.unpersist(blocking = false)
+      }
       batch.unpersist(blocking = false)
-      return readClusterState(s, dir)
+      readClusterState(s, dir)
     }
-    val index = readBandIndex(s, dir)
-    // sign the batch ONCE: the same (doc_id, sig, bk) frame feeds the
-    // bucket stats, the edge proposal, and the index append — the
-    // naive three-kernel composition shingled+minhashed the batch text
-    // three times (measured at sf1: 11.8 → 7.4 s update wall).
-    // persist (not localCheckpoint): lineage survives executor loss.
-    val sb = sigBandRows(batch.select(col("doc_id"), col("text")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one bucket-bookkeeping frame, O(batch buckets), materialized
-    // once for its three consumers (eligibility, append, saturation)
-    val stats = bucketStatsOf(sb, index, readSaturated(s, dir))
-      .localCheckpoint()
-    val edges =
-      if (permissive) starEdgesFromBands(sb, index)
-      else starEdgesGlobalCap(sb, stats)
-    val (delta, newRows, repMap) =
-      mergeDelta(readClusterState(s, dir), edges, checkpointDir)
-    // the batch derives from the COMMITTED roster, so a crash before
-    // the flip replays into an overwrite of the same version and a
-    // crash after it makes the replay's anti-join empty
-    // (ClusterMergeSpec pins the rollback-replay fixpoint)
-    state.commit(s, maxDeltas = maxDeltaVersions) { v =>
-      delta.write.mode("overwrite").parquet(state.path("clusters", v))
-      // the roster slice lands first among the version-v writes so the
-      // survivor update's first-seen lookup READS IT BACK (a thin
-      // columnar read) instead of re-running the scoring pass; write
-      // order within a version is free — nothing resolves any v-file
-      // until the pointer flips
-      scoredIds(batch).write.mode("overwrite").parquet(state.path("ids", v))
-      survivorDelta(readSurvivorState(s, dir), repMap, newRows,
-          s.read.parquet(state.path("ids", v)).unionByName(roster))
-        .write.mode("overwrite").parquet(state.path("survivors", v))
-      // index slice: the batch's band rows for buckets whose true size
-      // stays within the cap (the index never grows a bucket past it)
-      sb.select(col("bk"), col("doc_id").as("idx_id"), col("sig"))
-        .join(stats.filter(!col("sat") && col("t") <= BandCap).select("bk"),
-          Seq("bk"))
-        .write.mode("overwrite").parquet(state.path("band_index", v))
-      stats.filter(!col("sat") && col("t") > BandCap).select("bk")
-        .write.mode("overwrite").parquet(state.path("saturated", v))
-    }
-    sb.unpersist(blocking = false)
-    batch.unpersist(blocking = false)
-    readClusterState(s, dir)
-  }
 
   /** Diagnostic for the mega-bucket corner: band buckets over
     * [[BandCap]] corpus-wide whose base or batch slice (split by
@@ -1921,38 +1831,17 @@ object Dedup {
         dupClusters(edges, checkpointDir)
           .write.mode("overwrite").parquet(state.path("clusters", v))
         val roster = readIdQuality(s, dir)
-        // trackSurvivors = false states carry a null-quality roster; they
-        // keep their placeholder survivor table through a reconcile
-        val tracked = roster.filter(col("quality").isNotNull)
-          .limit(1).count() > 0
-        val survivors =
-          if (tracked)
-            canonicalDocsPreScored(roster,
-                s.read.parquet(state.path("clusters", v)))
-              .filter(col("cluster_size") >= 2)
-              .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
-                col("quality"))
-          else readSurvivorState(s, dir)
-        survivors.write.mode("overwrite").parquet(state.path("survivors", v))
+        canonicalDocsPreScored(roster, state.version(s, "clusters", v))
+          .filter(col("cluster_size") >= 2)
+          .select(col("doc_id"), col("cluster_id"), col("cluster_size"),
+            col("quality"))
+          .write.mode("overwrite").parquet(state.path("survivors", v))
         readBandIndex(s, dir).write.mode("overwrite")
           .parquet(state.path("band_index", v))
         readSaturated(s, dir).write.mode("overwrite")
           .parquet(state.path("saturated", v))
         roster.write.mode("overwrite").parquet(state.path("ids", v))
       }
-      readClusterState(s, dir)
-    }
-
-  /** Idempotent head for a pipeline stage: first call on a state dir
-    * initializes it from the corpus, later calls fold in whatever the
-    * snapshot added. Always returns the map CURRENT for `docs`.
-    */
-  def syncClusterState(s: SparkSession, dir: String, docs: DataFrame,
-      checkpointDir: Option[String] = None): DataFrame =
-    if (clusterState(dir).initialized)
-      updateClusterState(s, dir, docs, checkpointDir)
-    else {
-      writeClusterState(docs, dir, checkpointDir)
       readClusterState(s, dir)
     }
 
@@ -1972,9 +1861,8 @@ object Dedup {
   // separately and honestly).
   private def stagedBaseState(s: SparkSession, d: String): String =
     graft.Stage.sessionDir(s, "graft-cstate", d)(out =>
-      writeClusterState(
-        Tables.documents(s, d).filter(col("doc_id") % 10 =!= 9), out,
-        trackSurvivors = false))
+      syncClusterState(s, out,
+        Tables.documents(s, d).filter(col("doc_id") % 10 =!= 9)))
 
   private def q116(s: SparkSession, d: String): DataFrame = {
     val dir = stagedBaseState(s, d)

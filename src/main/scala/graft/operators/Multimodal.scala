@@ -502,7 +502,8 @@ object Multimodal {
 
   private def mediaState(dir: String): graft.VersionedState =
     new graft.VersionedState(dir, Seq(graft.VersionedState.Keyed("media",
-        "media_id", Seq("media_id", "path", "mtime", "len", "media_type", "sh"),
+        "media_id", "media_id BIGINT, path STRING, mtime BIGINT, len BIGINT, " +
+          "media_type STRING, sh BIGINT",
         tombstone = Some("path"))),
       massTable = Some("media"))
 
@@ -533,15 +534,11 @@ object Multimodal {
         .select(col("path"), unix_millis(col("modificationTime")).as("mtime"),
           col("length").as("len"))
         .localCheckpoint()
-      val roster =
-        if (inited) readMediaState(s, dir).localCheckpoint()
-        else s.emptyDataFrame
-          .select(lit(null).cast("long").as("media_id"),
-            lit(null).cast("string").as("path"),
-            lit(null).cast("long").as("mtime"),
-            lit(null).cast("long").as("len"),
-            lit(null).cast("string").as("media_type"),
-            lit(null).cast("long").as("sh")).limit(0)
+      // an empty store's roster is an empty relation already: no job
+      val roster = {
+        val r = readMediaState(s, dir)
+        if (inited) r.localCheckpoint() else r
+      }
       val keyCols = Seq("path", "mtime", "len")
       val fresh = listing.join(roster, keyCols, "left_anti")
         .localCheckpoint()

@@ -46,12 +46,10 @@ object Similarity {
     * covers the ANSI-off deployment where the same pair yields NaN
     * (ordered above every double — it would otherwise WIN both).
     * Identity for every real cosine, so guarded call sites hash
-    * identically on real vectors. Total-input matters beyond
-    * streaming: [[graft.operators.TextAnalysis.hashEmbedDense]] is a
-    * documented drop-in input for cosineTopK / semanticDedup /
-    * ivfTopK, and it emits the all-zero vector for empty or
-    * weight-cancelled text — one empty doc must not kill (or poison)
-    * a corpus-wide job.
+    * identically on real vectors. Total input matters: any embedding
+    * source can emit the all-zero vector (e.g. a hashed embedding of
+    * weight-cancelled text), and one such row must not kill (or
+    * poison) a corpus-wide job.
     */
   private def guardedCosine(a: Column, b: Column, normProd: Column): Column =
     nanvl(coalesce(try_divide(dot(a, b), normProd), lit(-1.0)), lit(-1.0))
@@ -334,8 +332,8 @@ object Similarity {
     * the persisted cell-index path.
     *
     * Zero-norm guard (now inside [[graft.functions.CellArgmax]], same
-    * contract as [[guardedCosine]]): a zero-norm vector (hashEmbedDense
-    * emits one for empty / weight-cancelled text) or a zero-norm
+    * contract as [[guardedCosine]]): a zero-norm vector (a hashed
+    * embedding of weight-cancelled text is one) or a zero-norm
     * centroid makes the cosine 0/0 = NaN, which would otherwise win
     * every comparison (NaN orders above every double). The kernel pins
     * such pairs to cosine -1 (identity for every real cosine), so
@@ -592,9 +590,11 @@ object Similarity {
       marker: Option[String] = None): graft.VersionedState =
     new graft.VersionedState(dir, Seq(
         graft.VersionedState.Keyed("members", "vec_id",
-          Seq("vec_id", "cid", "v", "nrm"), tombstone = Some("cid")),
+          "vec_id BIGINT, cid BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE",
+          tombstone = Some("cid")),
         graft.VersionedState.Keyed("verdicts", "vec_id",
-          Seq("vec_id", "cid", "kept", "dup_of"), tombstone = Some("kept"))),
+          "vec_id BIGINT, cid BIGINT, kept BOOLEAN, dup_of BIGINT",
+          tombstone = Some("kept"))),
       massTable = Some("verdicts"), marker = marker.map("_PARAMS" -> _))
 
   /** Current survivor cell assignments `(vec_id, cid, v, nrm)`. */
@@ -610,19 +610,24 @@ object Similarity {
 
   /** Bring the persistent semantic-dedup state up to date with the
     * CURRENT survivor embedding set and return its verdicts. First
-    * call fits + freezes the centroids and verdicts everything; later
-    * calls tombstone exits, assign entries against the frozen
-    * centroids, and re-verdict ONLY the touched cells.
+    * call fits + freezes the centroids; every call (the first one
+    * against the empty store) tombstones exits, assigns entries
+    * against the frozen centroids, and re-verdicts ONLY the touched
+    * cells.
     */
   def syncSemanticState(s: SparkSession, dir: String, embeddings: DataFrame,
       threshold: Double = SemThreshold, cellCap: Int = CellCap): DataFrame =
     graft.StateFiles.withWriterLock(dir) {
       requireSemParams(dir, threshold, cellCap)
       if (semState(dir).initialized)
-        semUpdateLocked(s, dir, embeddings, threshold, cellCap)
+        semUpdateLocked(s, semState(dir), dir, embeddings, threshold, cellCap)
       else semInitLocked(s, dir, embeddings, threshold, cellCap)
     }
 
+  /** The once-per-dir steps — fit and write the frozen centroids, pin
+    * the `_PARAMS` line — then the update against the empty store,
+    * whose first commit is the base.
+    */
   private def semInitLocked(s: SparkSession, dir: String, emb: DataFrame,
       threshold: Double, cellCap: Int): DataFrame = {
     val k = derivedNumCells(emb)
@@ -630,39 +635,39 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$dir/centroids")
     // the params land before the pointer: once a reader resolves the
     // first version the pin holds
-    val state = semState(dir, Some(semParamsLine(threshold, cellCap, k)))
-    state.commit(s, full = true) { v =>
-      cellAssignments(emb, s.read.parquet(s"$dir/centroids"))
-        .write.mode("overwrite").parquet(state.path("members", v))
-      verdictsOfAssigned(s.read.parquet(state.path("members", v)), threshold,
-          cellCap)
-        .write.mode("overwrite").parquet(state.path("verdicts", v))
-    }
-    readSemVerdicts(s, dir)
+    val marker = semParamsLine(threshold, cellCap, k)
+    semUpdateLocked(s, semState(dir, Some(marker)), dir, emb, threshold,
+      cellCap)
   }
 
-  private def semUpdateLocked(s: SparkSession, dir: String, emb: DataFrame,
-      threshold: Double, cellCap: Int): DataFrame = {
-    val members = readSemMembers(s, dir)
+  private def semUpdateLocked(s: SparkSession, state: graft.VersionedState,
+      dir: String, emb: DataFrame, threshold: Double,
+      cellCap: Int): DataFrame = {
+    val inited = state.initialized
+    val members = state.read(s, "members")
     // exits and entries vs the COMMITTED membership (pointer-bounded —
     // the crash-replay anchor); both are batch-sized, localCheckpoint
-    // for their multiple consumers
-    val exited = members.select(col("vec_id"), col("cid"))
-      .join(emb.select("vec_id"), Seq("vec_id"), "left_anti")
-      .localCheckpoint()
+    // for their multiple consumers (an empty store's exits are an
+    // empty relation already: no job)
+    val exited = {
+      val e = members.select(col("vec_id"), col("cid"))
+        .join(emb.select("vec_id"), Seq("vec_id"), "left_anti")
+      if (inited) e.localCheckpoint() else e
+    }
     val entered = emb
       .join(members.select("vec_id"), Seq("vec_id"), "left_anti")
-    if (exited.isEmpty && entered.isEmpty) return readSemVerdicts(s, dir)
+    if (inited && exited.isEmpty && entered.isEmpty)
+      return readSemVerdicts(s, dir)
     val eAsg = cellAssignments(entered, s.read.parquet(s"$dir/centroids"))
       .localCheckpoint()
     val affected = eAsg.select("cid").union(exited.select("cid")).distinct()
     // the touched cells' FULL current membership → exact q55 verdicts
+    // (every entry's cell is touched, so only the stored side filters)
     val affMembers = members
       .join(exited.select("vec_id"), Seq("vec_id"), "left_anti")
-      .unionByName(eAsg)
       .join(affected, Seq("cid"), "left_semi")
+      .unionByName(eAsg)
     val affVerdicts = verdictsOfAssigned(affMembers, threshold, cellCap)
-    val state = semState(dir)
     state.commit(s) { v =>
       affVerdicts
         .unionByName(exited.select(col("vec_id"),
@@ -679,12 +684,6 @@ object Similarity {
     }
     readSemVerdicts(s, dir)
   }
-
-  /** Remove semantic-state versions below `below` (default: current
-    * base); the in-update janitor passes the previous base (grace).
-    */
-  def gcSemanticState(dir: String, below: Option[Int] = None): Int =
-    semState(dir).gc(below)
 
   private val o55 =
     s"""WITH v AS (

@@ -66,7 +66,9 @@ object TextAnalysis {
 
   private def tokenState(dir: String): graft.VersionedState =
     new graft.VersionedState(dir, Seq(
-      graft.VersionedState.Union("tokens"), graft.VersionedState.Union("ids")))
+      graft.VersionedState.Union("tokens",
+        "doc_id BIGINT, w STRING, cnt BIGINT"),
+      graft.VersionedState.Union("ids", "doc_id BIGINT")))
 
   /** The stored token-count artifact: union of all committed parts. */
   def readTokenState(s: SparkSession, dir: String): DataFrame =
@@ -99,10 +101,9 @@ object TextAnalysis {
   private def syncTokenLocked(s: SparkSession, dir: String, docs: DataFrame,
       maxParts: Int): DataFrame = {
     val state = tokenState(dir)
-    val d = docs.select(col("doc_id"), col("text"))
-    val batch =
-      if (!state.initialized) d
-      else d.join(state.read(s, "ids"), Seq("doc_id"), "left_anti")
+    val batch = docs.select(col("doc_id"), col("text"))
+      .join(state.read(s, "ids"), Seq("doc_id"), "left_anti")
+    // a first sync commits even an empty corpus: no probe job
     if (state.initialized && batch.isEmpty) return readTokenState(s, dir)
     state.commit(s, maxDeltas = maxParts - 1) { v =>
       tokenCountsOf(batch).write.mode("overwrite")
@@ -112,12 +113,6 @@ object TextAnalysis {
     }
     readTokenState(s, dir)
   }
-
-  /** Garbage-collect token/roster parts below `below` (default: the
-    * current base). Returns the number of part directories removed.
-    */
-  def gcTokenState(dir: String, below: Option[Int] = None): Int =
-    tokenState(dir).gc(below)
 
   /** The `(doc_id, g, c)` ADJACENT-BIGRAM pre-aggregate, staged once per
     * session ([[graft.Stage]]) — the round-14 extension of the staged
@@ -1149,9 +1144,8 @@ object TextAnalysis {
   // zero model cost and perfect reproducibility. Bucket and sign come
   // from md5 hex digits (the SimHash discipline), so the weights are
   // INTEGER-exact across engines; the query emits the sparse
-  // `(doc_id, bucket, weight)` form (zero-cancelled buckets absent) —
-  // the dense-array form for feeding Similarity ops is
-  // [[hashEmbedDense]], spec-tied to this one. One explode + one
+  // `(doc_id, bucket, weight)` form (zero-cancelled buckets absent).
+  // One explode + one
   // map-side-combined aggregate; dim is a constant, never a shuffle
   // axis.
   private val HashDim = 64
@@ -1171,34 +1165,6 @@ object TextAnalysis {
       .groupBy(col("doc_id"), col("bucket"))
       .agg(sum(col("sgn")).as("weight"))
       .filter(col("weight") =!= 0)
-
-  /** Dense `(vec_id, embedding)` form of [[hashEmbed]] — drop-in input
-    * for the Similarity operators (cosineTopK, semanticDedup, ...).
-    * Total over the input: every distinct `doc_id` in `docs` gets a
-    * row, including docs whose bucket weights all cancel (two tokens,
-    * same bucket, opposite signs) — those emit the all-zero vector
-    * (left join against the sparse frame; a null map element coalesces
-    * to 0). Note an empty-text doc is NOT zero: `split` yields the
-    * empty-string token, which hashes to a ±1 bucket like any other
-    * word (spec-pinned in DedupSimilaritySpec). Building the dense
-    * frame from the sparse rows alone would silently drop cancelled
-    * docs, and a downstream consumer like [[Similarity.semanticDedup]]
-    * would then never give them a verdict; Similarity's guarded cosine
-    * keeps the zero vectors they DO emit from crashing or poisoning any
-    * consumer.
-    */
-  def hashEmbedDense(docs: DataFrame, dim: Int = HashDim): DataFrame = {
-    val m = hashEmbed(docs, dim)
-      .groupBy(col("doc_id"))
-      .agg(map_from_entries(collect_list(
-        struct(col("bucket"), col("weight")))).as("m"))
-    docs.select(col("doc_id")).distinct()
-      .join(m, Seq("doc_id"), "left")
-      .select(col("doc_id").as("vec_id"),
-        transform(sequence(lit(0), lit(dim - 1)),
-          j => coalesce(element_at(col("m"), j.cast("long")), lit(0L))
-            .cast("float")).as("embedding"))
-  }
 
   /** IDF-weighted [[hashEmbed]] — the practical upgrade for dedup-grade
     * cosine: the unweighted form lets corpus-universal tokens dominate

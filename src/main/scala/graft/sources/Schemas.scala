@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
   * The reference's schema system is implicit — every record is built
   * with `dict.get(key, default)` so absent fields silently default
   * (clean_data.py:42-48,92-103). Here the schemas are explicit
-  * `StructType`s; the permissive-read behavior is reproduced by reading
+  * `StructType`s; the absent-field defaults are reproduced by reading
   * with these schemas (absent fields → null) and applying defaults in
   * the normalization projection (Normalize.scala).
   */

@@ -116,15 +116,16 @@ object StreamingDedup {
       .start()
 
   /** The persistent CLUSTER STATE fed by a stream: every
-    * micro-batch folds into the same `Dedup.writeClusterState` /
-    * `updateClusterState` artifacts the batch Curate head reads — ONE
+    * micro-batch folds, through `Dedup.syncClusterState`, into the
+    * same artifacts the batch Curate head reads — ONE
     * dedup state serving both execution modes, which is how a real
     * pipeline runs (continuous ingest keeps the map current; the
     * nightly batch build consumes it instead of re-clustering). Per
     * batch: the id-roster anti-join drops redelivered docs, new docs'
     * band collisions merge via the contracted CC, the map gains a
     * DELTA version, and the capped band index grows — all of
-    * updateClusterState's crash contract applies verbatim, and
+    * syncClusterState's crash contract applies verbatim (the first
+    * batch is the same update against the empty store), and
     * at-least-once redelivery is a documented fixpoint (the replayed
     * batch's delta is empty), so the leg needs no state store and no
     * dedup-specific checkpoint logic beyond the sink's own. Each

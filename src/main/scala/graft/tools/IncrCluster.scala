@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Scale receipt for the incremental cluster-map merge (round 15):
   * times the full from-scratch re-cluster of a corpus against the
-  * incremental path (stored state for 90% of the corpus, one +10%
-  * batch folded in with updateClusterState), asserts the two maps are
+  * incremental path (`init_s`: a first syncClusterState of 90% of the
+  * corpus, the same update against the empty store; `update_s`: a
+  * second sync folding in the +10% batch), asserts the two maps are
   * identical, and prints one JSON line. The `update_s` number is what
   * the Curate dedup head pays PER RUN once state exists — the full
   * re-cluster was 141 s of sf10's 183 s pipeline wall.
@@ -34,10 +35,10 @@ object IncrCluster {
     // incremental: init state on 90%, then fold the +10% batch in
     val dir = java.nio.file.Files.createTempDirectory("incr-cluster").toString
     val (_, initS) = timed {
-      Dedup.writeClusterState(docs.filter(col("doc_id") % 10 =!= 9), dir)
+      Dedup.syncClusterState(spark, dir, docs.filter(col("doc_id") % 10 =!= 9))
     }
     val (merged, updateS) = timed {
-      val m = Dedup.updateClusterState(spark, dir, docs)
+      val m = Dedup.syncClusterState(spark, dir, docs)
       m.count(); m
     }
 
@@ -45,7 +46,7 @@ object IncrCluster {
     // round-16 GLOBAL cap the only permitted divergence is the
     // CROSSING corner — edges committed while a bucket was still under
     // BandCap persist after the corpus growth pushes it over (never-
-    // retroactively-unlink ingest; see updateClusterState's scaladoc)
+    // retroactively-unlink ingest; see syncClusterState's scaladoc)
     // — and the gate is TRACEABILITY, not a mere corner count: every
     // differing doc_id must be a member of a corner bucket, so
     // arbitrary unrelated divergence fails even when corners exist

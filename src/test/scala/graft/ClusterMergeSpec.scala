@@ -27,28 +27,37 @@ class ClusterMergeSpec extends AnyFunSuite {
 
   test("one +10% increment reproduces the full from-scratch re-cluster") {
     val dir = java.nio.file.Files.createTempDirectory("cstate1").toString
-    Dedup.writeClusterState(docsAll.filter(col("doc_id") % 10 =!= 9), dir)
-    val merged = asMap(Dedup.updateClusterState(spark, dir, docsAll))
+    val (_, initJobs) = TestSpark.countJobs(Dedup.syncClusterState(spark,
+      dir, docsAll.filter(col("doc_id") % 10 =!= 9)))
+    val (map, updateJobs) = TestSpark.countJobs(
+      Dedup.syncClusterState(spark, dir, docsAll))
+    val merged = asMap(map)
     assert(merged == fullRebuild,
       "incremental merge diverged from the full rebuild")
+    // the job counts of a first sync and of a plain update, pinned at
+    // the counts measured when the first sync became the update of an
+    // empty store (local[4], 4 shuffle partitions)
+    info(s"jobs: first sync $initJobs, plain update $updateJobs")
+    assert(initJobs <= 113, s"first sync ran $initJobs jobs")
+    assert(updateJobs <= 66, s"plain update ran $updateJobs jobs")
   }
 
   test("chained increments (80% +10% +10%) converge to the same map") {
     val dir = java.nio.file.Files.createTempDirectory("cstate2").toString
-    Dedup.writeClusterState(docsAll.filter(col("doc_id") % 10 < 8), dir)
-    Dedup.updateClusterState(spark, dir,
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 8))
+    Dedup.syncClusterState(spark, dir,
       docsAll.filter(col("doc_id") % 10 < 9))
-    val merged = asMap(Dedup.updateClusterState(spark, dir, docsAll))
+    val merged = asMap(Dedup.syncClusterState(spark, dir, docsAll))
     assert(merged == fullRebuild,
       "two chained increments diverged from the full rebuild")
   }
 
   test("an unchanged snapshot is a no-op (no version bump, same map)") {
     val dir = java.nio.file.Files.createTempDirectory("cstate3").toString
-    Dedup.writeClusterState(docsAll, dir)
+    Dedup.syncClusterState(spark, dir, docsAll)
     val before = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "_LATEST"))
-    val again = asMap(Dedup.updateClusterState(spark, dir, docsAll))
+    val again = asMap(Dedup.syncClusterState(spark, dir, docsAll))
     val after = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "_LATEST"))
     assert(before == after, "no-op snapshot bumped the map version/base")
@@ -57,21 +66,21 @@ class ClusterMergeSpec extends AnyFunSuite {
 
   test("a crash-replayed batch is a fixpoint (map unchanged by the re-run)") {
     val dir = java.nio.file.Files.createTempDirectory("cstate4").toString
-    Dedup.writeClusterState(docsAll.filter(col("doc_id") % 10 =!= 9), dir)
-    val v1 = asMap(Dedup.updateClusterState(spark, dir, docsAll))
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 =!= 9))
+    val v1 = asMap(Dedup.syncClusterState(spark, dir, docsAll))
     // simulate the documented crash window: every version-2 artifact
     // landed but the pointer flip was LOST — roll the pointer back to
     // v1 with orphan v2 dirs on disk. The replay derives the batch
     // from the COMMITTED roster (which excludes it), recomputes the
     // same version, and overwrites the orphans with identical content.
     graft.StateFiles.writePointer(dir, 1, 1)
-    val v2 = asMap(Dedup.updateClusterState(spark, dir, docsAll))
+    val v2 = asMap(Dedup.syncClusterState(spark, dir, docsAll))
     assert(v2 == v1, "crash-replayed batch changed the merged map")
     assert(v2 == fullRebuild)
     // post-flip replay: the same snapshot again is a no-op
     val ptr = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "_LATEST"))
-    Dedup.updateClusterState(spark, dir, docsAll)
+    Dedup.syncClusterState(spark, dir, docsAll)
     assert(java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "_LATEST")) == ptr,
       "replay after a completed flip must not bump the version")
@@ -79,9 +88,9 @@ class ClusterMergeSpec extends AnyFunSuite {
 
   test("gc removes only versions below the base and readers still resolve") {
     val dir = java.nio.file.Files.createTempDirectory("cstate5").toString
-    Dedup.writeClusterState(docsAll.filter(col("doc_id") % 10 < 8), dir)
-    Dedup.updateClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 9))
-    Dedup.updateClusterState(spark, dir, docsAll)
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 8))
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 9))
+    Dedup.syncClusterState(spark, dir, docsAll)
     val (latest, base) = {
       val parts = java.nio.file.Files.readString(
         java.nio.file.Paths.get(dir, "_LATEST")).trim.split("\\s+")
@@ -133,9 +142,9 @@ class ClusterMergeSpec extends AnyFunSuite {
   test("reconciling compaction reproduces the rebuild and a mid-reconcile " +
       "crash replays to a fixpoint") {
     val dir = java.nio.file.Files.createTempDirectory("cstate-rec").toString
-    Dedup.writeClusterState(docsAll.filter(col("doc_id") % 10 < 8), dir)
-    Dedup.updateClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 9))
-    Dedup.updateClusterState(spark, dir, docsAll)
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 8))
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 9))
+    Dedup.syncClusterState(spark, dir, docsAll)
     val prePtr = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir, "_LATEST"))
     val rec = asMap(Dedup.reconcileClusterState(spark, dir))
@@ -182,19 +191,22 @@ class ClusterMergeSpec extends AnyFunSuite {
 
   test("init band bookkeeping runs as aggregate/join — no per-row window " +
       "over the band key (hot-bucket skew)") {
-    val (idx, sat) = Dedup.initBandFrames(docsAll)
-    Seq("index slice" -> idx, "saturated" -> sat).foreach { case (n, df) =>
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("Window"),
-        s"init $n plan must not contain a WindowExec:\n$plan")
-    }
-    // and the shapes still agree with the state a full init writes
     val dir = java.nio.file.Files.createTempDirectory("cstate-init").toString
-    Dedup.writeClusterState(docsAll, dir)
+    val (_, plans) = TestSpark.executedPlans(
+      Dedup.syncClusterState(spark, dir, docsAll))
+    assert(plans.nonEmpty, "the first sync must run its queries")
+    plans.map(_.toString).foreach(plan =>
+      assert(!plan.contains("Window"),
+        s"a first sync's plan must not contain a WindowExec:\n$plan"))
+    // and the stored index slice is the corpus' band rows in buckets
+    // of at most 100 (the band cap)
     val stored = spark.read.parquet(s"$dir/band_index_v1")
       .select("bk", "idx_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
-    val fresh = idx.select("bk", "idx_id").collect()
+    val bands = Dedup.sigBandRows(docsAll)
+    val fresh = bands
+      .join(bands.groupBy("bk").count().filter(col("count") <= 100), "bk")
+      .select("bk", "doc_id").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSet
     assert(stored == fresh)
   }

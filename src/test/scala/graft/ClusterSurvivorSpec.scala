@@ -11,8 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * bit-exact quality scores — the from-scratch q53 selection over the
   * grown corpus, across single and chained increments, label-absorbing
   * merges (tombstones), and crash-replayed batches. Plus the writer
-  * lock, the GC grace window, and the saturating-bucket fixture that
-  * separates the global cap from the round-15 permissive mode.
+  * lock, the GC grace window, and the saturating-bucket fixture of the
+  * global cap.
   */
 class ClusterSurvivorSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -33,8 +33,8 @@ class ClusterSurvivorSpec extends AnyFunSuite {
 
   test("one +10% increment reproduces the from-scratch survivor selection") {
     val dir = java.nio.file.Files.createTempDirectory("sstate1").toString
-    Dedup.writeClusterState(docsAll.filter(col("doc_id") % 10 =!= 9), dir)
-    val map = Dedup.updateClusterState(spark, dir, docsAll)
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 =!= 9))
+    val map = Dedup.syncClusterState(spark, dir, docsAll)
     val incr = survMap(Dedup.readSurvivorState(spark, dir))
     assert(incr == scratchSurvivors(docsAll, map),
       "incremental survivor table diverged from from-scratch canonicalDocs")
@@ -43,9 +43,9 @@ class ClusterSurvivorSpec extends AnyFunSuite {
   test("chained increments (80% +10% +10%) keep survivors exact, with " +
       "tombstoned labels absent") {
     val dir = java.nio.file.Files.createTempDirectory("sstate2").toString
-    Dedup.writeClusterState(docsAll.filter(col("doc_id") % 10 < 8), dir)
-    Dedup.updateClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 9))
-    val map = Dedup.updateClusterState(spark, dir, docsAll)
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 8))
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 < 9))
+    val map = Dedup.syncClusterState(spark, dir, docsAll)
     val surv = Dedup.readSurvivorState(spark, dir)
     assert(survMap(surv) == scratchSurvivors(docsAll, map))
     // every surviving label is a live cluster id — no absorbed label
@@ -69,10 +69,10 @@ class ClusterSurvivorSpec extends AnyFunSuite {
     val b1 = Seq((10L, t1), (11L, t1), (20L, t2), (21L, t2))
       .toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("sstate3").toString
-    Dedup.writeClusterState(b1, dir)
+    Dedup.syncClusterState(spark, dir, b1)
     val s1 = survMap(Dedup.readSurvivorState(spark, dir))
     assert(s1.keySet == Set(10L, 20L) && s1(10L)._2 == 2L)
-    val map = Dedup.updateClusterState(spark, dir,
+    val map = Dedup.syncClusterState(spark, dir,
       b1.unionByName(Seq((5L, tb)).toDF("doc_id", "text")))
     val s2 = survMap(Dedup.readSurvivorState(spark, dir))
     // family 1 re-labeled to 5 with size 3; family 2 untouched
@@ -87,24 +87,24 @@ class ClusterSurvivorSpec extends AnyFunSuite {
 
   test("a rolled-back (crash-replayed) batch leaves survivors identical") {
     val dir = java.nio.file.Files.createTempDirectory("sstate4").toString
-    Dedup.writeClusterState(docsAll.filter(col("doc_id") % 10 =!= 9), dir)
-    Dedup.updateClusterState(spark, dir, docsAll)
+    Dedup.syncClusterState(spark, dir, docsAll.filter(col("doc_id") % 10 =!= 9))
+    Dedup.syncClusterState(spark, dir, docsAll)
     val before = survMap(Dedup.readSurvivorState(spark, dir))
     graft.StateFiles.writePointer(dir, 1, 1) // lose the flip
-    val map = Dedup.updateClusterState(spark, dir, docsAll)
+    val map = Dedup.syncClusterState(spark, dir, docsAll)
     assert(survMap(Dedup.readSurvivorState(spark, dir)) == before)
     assert(before == scratchSurvivors(docsAll, map))
   }
 
   test("a second writer on a locked state dir fails loudly, not torn") {
     val dir = java.nio.file.Files.createTempDirectory("sstate5").toString
-    Dedup.writeClusterState(
-      docsAll.filter(col("doc_id") % 10 === 0), dir)
+    Dedup.syncClusterState(spark, dir,
+      docsAll.filter(col("doc_id") % 10 === 0))
     val err = intercept[IllegalStateException] {
       graft.StateFiles.withWriterLock(dir) {
         // the advertised two-writer hazard: a batch sync starting
         // while another writer holds the dir
-        Dedup.updateClusterState(spark, dir, docsAll)
+        Dedup.syncClusterState(spark, dir, docsAll)
       }
     }
     assert(err.getMessage.contains("locked by another writer"))
@@ -113,8 +113,7 @@ class ClusterSurvivorSpec extends AnyFunSuite {
     assert((latest, base) == (1, 1), "refused writer must not move state")
   }
 
-  test("saturating bucket: global cap proposes nothing, permissive merges " +
-      "through the hub, and the residual diff traces to the corner") {
+  test("saturating bucket: global cap, corner trace and reconcile") {
     import spark.implicits._
     // 80 identical base docs fill every band bucket to 80 (<= cap 100);
     // an 80-doc identical batch pushes the true size to 160 (> cap).
@@ -124,19 +123,12 @@ class ClusterSurvivorSpec extends AnyFunSuite {
       (0L until 80L).map(i => (1000L + i, text)).toDF("doc_id", "text"))
 
     val gDir = java.nio.file.Files.createTempDirectory("satg").toString
-    Dedup.writeClusterState(base, gDir)
-    val gMap = Dedup.updateClusterState(spark, gDir, full)
+    Dedup.syncClusterState(spark, gDir, base)
+    val gMap = Dedup.syncClusterState(spark, gDir, full)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val baseMap = Map((0L until 80L).map(i => (i * 2) -> 0L): _*)
     assert(gMap == baseMap,
       "global cap must refuse a saturated bucket's batch edges entirely")
-
-    val pDir = java.nio.file.Files.createTempDirectory("satp").toString
-    Dedup.writeClusterState(base, pDir)
-    val pMap = Dedup.updateClusterState(spark, pDir, full, permissive = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(pMap.size == 160 && pMap.values.toSet == Set(0L),
-      "permissive mode must merge the batch through the index hub")
 
     // the from-scratch rebuild of the grown corpus drops the
     // 160-member buckets entirely: its map is EMPTY, and the
@@ -167,11 +159,11 @@ class ClusterSurvivorSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("soak").toString
     def doc(i: Long): (Long, String) =
       (i, (1 to 20).map(w => s"d${i / 2}w$w").mkString(" "))
-    Dedup.writeClusterState(Seq(doc(0L)).toDF("doc_id", "text"), dir)
+    Dedup.syncClusterState(spark, dir, Seq(doc(0L)).toDF("doc_id", "text"))
     var snapshot = Seq(doc(0L))
     (1L to 100L).foreach { i =>
       snapshot = snapshot :+ doc(i)
-      Dedup.updateClusterState(spark, dir,
+      Dedup.syncClusterState(spark, dir,
         snapshot.toDF("doc_id", "text"), maxDeltaVersions = 6)
     }
     // bounded: live span <= maxDeltaVersions + compaction, plus ONE
@@ -187,7 +179,7 @@ class ClusterSurvivorSpec extends AnyFunSuite {
     // a reader from immediately before the LAST update (within the
     // grace window by construction) still collects
     val justBefore = Dedup.readClusterState(spark, dir)
-    Dedup.updateClusterState(spark, dir,
+    Dedup.syncClusterState(spark, dir,
       (snapshot :+ doc(101L)).toDF("doc_id", "text"), maxDeltaVersions = 6)
     assert(justBefore.count() >= 100L,
       "a reader from before the latest update must survive its gc")

@@ -541,26 +541,20 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (2L, "alpha beta gamma delta epsilon zeta eta theta"), // twin of 1
       (3L, "one two three four five six seven eight nine ten")
     ).toDF("doc_id", "text")
-    // dense form is exactly the sparse form scattered into 64 slots
+    // the sparse rows are the whole 64-slot embedding: twins at cosine
+    // 1.0, disjoint vocabulary well below the dedup bar
     val sparse = TextAnalysis.hashEmbed(d).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val dense = TextAnalysis.hashEmbedDense(d).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    assert(dense.values.forall(_.length == 64))
-    dense.foreach { case (id, v) =>
-      v.zipWithIndex.foreach { case (x, j) =>
-        assert(x == sparse.getOrElse((id, j.toLong), 0L).toFloat, s"doc $id slot $j")
-      }
+    assert(sparse.keys.forall { case (_, j) => j >= 0 && j < 64 })
+    def slots(id: Long) =
+      (0L until 64L).map(j => sparse.getOrElse((id, j), 0L).toDouble)
+    def cosine(a: Long, b: Long): Double = {
+      val (x, y) = (slots(a), slots(b))
+      x.zip(y).map { case (p, q) => p * q }.sum /
+        math.sqrt(x.map(v => v * v).sum * y.map(v => v * v).sum)
     }
-    // and it feeds the semantic stack: twins at cosine exactly 1.0,
-    // disjoint vocabulary well below the dedup bar
-    val topk = Similarity.cosineTopK(
-      TextAnalysis.hashEmbedDense(d), col("vec_id") === 1L, 2)
-      .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
-    // dot/(nrm*nrm) of identical vectors lands within 2 ulps of 1.0
-    // (sqrt-then-multiply rounding), not exactly on it
-    assert(topk(2L) > 1.0 - 1e-12, s"twin cosine ${topk(2L)}")
-    assert(math.abs(topk(3L)) < 0.5, s"disjoint cosine ${topk(3L)}")
+    assert(cosine(1L, 2L) > 1.0 - 1e-12, s"twin cosine ${cosine(1L, 2L)}")
+    assert(math.abs(cosine(1L, 3L)) < 0.5, s"disjoint cosine ${cosine(1L, 3L)}")
 
     // idf weighting: a token in every doc carries the minimum weight
     // (IdfScale), a doc-unique token the maximum (IdfScale * n_docs) —
@@ -724,35 +718,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
     val expected = (0L to 7L).sortBy(id => (h(id), id)).take(4).toSet
     assert(out == expected, s"got $out, expected md5-ranked sample $expected")
-  }
-
-  test("q95: hashEmbedDense is total — empty and weight-cancelled docs get the zero vector") {
-    import spark.implicits._
-    import graft.operators.TextAnalysis
-    // find two tokens that land in the same bucket with opposite signs,
-    // so their weights cancel and the doc has NO sparse rows at all
-    def bs(w: String) = {
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(w.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      (java.lang.Long.parseLong(h.substring(0, 2), 16) % 64,
-        if (h.charAt(2) >= '8') 1L else -1L)
-    }
-    val toks = (0 until 2000).map(i => s"t$i")
-    val (w1, w2) = toks.flatMap { a =>
-      toks.collectFirst {
-        case b if bs(a)._1 == bs(b)._1 && bs(a)._2 == -bs(b)._2 => (a, b)
-      }
-    }.head
-    val d = Seq((1L, "alpha beta"), (42L, s"$w1 $w2"), (43L, "")).toDF("doc_id", "text")
-    assert(TextAnalysis.hashEmbed(d).filter(col("doc_id") === 42L).isEmpty,
-      "fixture must cancel to zero sparse rows")
-    val dense = TextAnalysis.hashEmbedDense(d).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    // every input doc_id present; the cancelled and empty docs are all-zero
-    assert(dense.keySet == Set(1L, 42L, 43L))
-    assert(dense(42L).forall(_ == 0f) && dense(42L).length == 64)
-    assert(dense(43L).length == 64)
-    assert(dense(1L).exists(_ != 0f))
   }
 
   test("q88: span length is exact for a planted shared run and a lower bound under repetition") {
@@ -926,7 +891,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
   }
 
   test("zero-norm guard: NaN cosines never win a cell or a verdict") {
-    // hashEmbedDense emits an all-zero vector for empty text; its
+    // an embedding source can emit the all-zero vector (a hashed
+    // embedding of weight-cancelled text is one); its
     // cosine against anything is 0/0 = NaN, and Spark orders NaN above
     // every double — unguarded, NaN would win the cell argmax and pass
     // `sim >= threshold` with an arbitrary dup_of. (The append-only
@@ -965,33 +931,17 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assigned.unpersist()
   }
 
-  test("zero-norm guard: the whole cosine surface is total over hashEmbedDense output") {
-    // hashEmbedDense is the documented drop-in input for the
-    // similarity operators, and it emits the all-zero vector for empty
-    // text — under ANSI mode an unguarded cosine would kill the whole
-    // job with DIVIDE_BY_ZERO on that one row
-    import graft.operators.TextAnalysis
-    // a genuinely zero vector needs weight CANCELLATION (two tokens,
-    // same bucket, opposite signs — empty text still hashes the
-    // empty-string token to a ±1 bucket, the q95-spec fact)
-    def bs(w: String) = {
-      val h = java.security.MessageDigest.getInstance("MD5")
-        .digest(w.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      (java.lang.Long.parseLong(h.substring(0, 2), 16) % 64,
-        if (h.charAt(2) >= '8') 1L else -1L)
-    }
-    val toks = (0 until 2000).map(i => s"t$i")
-    val (w1, w2) = toks.flatMap { a =>
-      toks.collectFirst {
-        case b if bs(a)._1 == bs(b)._1 && bs(a)._2 == -bs(b)._2 => (a, b)
-      }
-    }.head
-    val d = Seq(
-      (0L, "alpha beta gamma delta"),
-      (1L, "alpha beta gamma delta"), // twin of 0
-      (2L, s"$w1 $w2")                // weights cancel: the zero vector
-    ).toDF("doc_id", "text")
-    val emb = TextAnalysis.hashEmbedDense(d)
+  test("zero-norm guard: cosine surface is total over zero vectors") {
+    // an all-zero vector (a hashed embedding of weight-cancelled text
+    // is one) must not break the similarity operators — under ANSI
+    // mode an unguarded cosine would kill the whole job with
+    // DIVIDE_BY_ZERO on that one row
+    def vec(xs: Double*) = xs.map(_.toFloat).toArray
+    val emb = Seq(
+      (0L, vec(1, -1, 2, 0)),
+      (1L, vec(1, -1, 2, 0)), // twin of 0
+      (2L, vec(0, 0, 0, 0))   // the zero vector
+    ).toDF("vec_id", "embedding")
     // exact top-k: runs, twin found, zero-norm doc never above -1
     val topk = Similarity.cosineTopK(emb, col("vec_id") === 0L, 2)
       .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap

@@ -619,7 +619,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(verdicts.toMap.apply(5L) == 0L, s"verdicts=$verdicts")
   }
 
-  test("q81 composes in-flight: unicode normalization runs inside the micro-batch before the gate") {
+  test("q81 normalizes unicode inside a micro-batch") {
     // map normalizeText over the stream BEFORE any gate, so signals
     // and any downstream byte-level dedup see canonical bytes. Two
     // visually-identical arrivals (one decomposed + NBSP/ZWSP-ridden,

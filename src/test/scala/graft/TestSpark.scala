@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One shared local session for all suites. */
 object TestSpark {
@@ -36,4 +40,38 @@ object TestSpark {
       df.collect() // drive AQE to the final plan
       df.queryExecution.executedPlan
     })
+
+  /** `f`'s result and the number of Spark jobs started while it ran. */
+  def countJobs[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        n.incrementAndGet()
+        ()
+      }
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try { val a = f; ListenerBusDrain(sc); (a, n.get) }
+    finally sc.removeSparkListener(l)
+  }
+
+  /** `f`'s result and the executed plan of every query it ran. */
+  def executedPlans[A](f: => A): (A, Seq[SparkPlan]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(name: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      val a = f
+      ListenerBusDrain(spark.sparkContext)
+      (a, plans.toArray(Array.empty[SparkPlan]).toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
 }

@@ -14,12 +14,14 @@ import VersionedState.{Keyed, Union}
 class VersionedStateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private val keyed = Keyed("kv", "k", Seq("k", "a", "b"), tombstone = Some("a"))
+  private val keyed =
+    Keyed("kv", "k", "k BIGINT, a STRING, b BIGINT", tombstone = Some("a"))
 
   private def store(massTable: Option[String] = None,
       marker: Option[(String, String)] = None): (String, VersionedState) = {
     val dir = Files.createTempDirectory("vstate").toString
-    (dir, new VersionedState(dir, Seq(keyed, Union("u")), massTable, marker))
+    (dir, new VersionedState(dir, Seq(keyed, Union("u", "x BIGINT")), massTable,
+      marker))
   }
 
   private def rows(kv: (Long, Option[String], Option[Long])*): DataFrame = {
@@ -43,8 +45,7 @@ class VersionedStateSpec extends AnyFunSuite {
   private def live(n: Long): (Long, Option[String], Option[Long]) =
     (n, Some(s"a$n"), Some(n * 10))
 
-  test("a keyed table folds latest-wins across 3 versions, tombstones " +
-      "dropped on read and kept by fold") {
+  test("keyed reads fold latest-wins and drop tombstones") {
     val (_, vs) = store()
     assert(!vs.initialized && vs.versions == (0, 0))
     vs.commit(spark)(write(vs, _, rows(live(1), live(2), live(3))))
@@ -57,6 +58,18 @@ class VersionedStateSpec extends AnyFunSuite {
       Map(2L -> ("b2", 21L), 3L -> ("c3", 33L), 4L -> ("a4", 40L)))
     assert(vs.read(spark, "kv").columns.toSeq == keyed.columns)
     assert(unionOf(vs.read(spark, "u")) == Set(1L, 2L, 3L))
+  }
+
+  test("a store with no pointer reads as empty relations of its schemas") {
+    val (_, vs) = store()
+    Seq("kv" -> keyed.schema, "u" -> Union("u", "x BIGINT").schema).foreach {
+      case (t, schema) =>
+        val df = vs.read(spark, t)
+        assert(df.schema == schema)
+        assert(df.queryExecution.optimizedPlan.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+        assert(df.collect().isEmpty)
+    }
   }
 
   test("the mass rule compacts every table into a new base and reads " +
