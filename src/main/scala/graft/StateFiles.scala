@@ -18,10 +18,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * order. (A plain truncate-in-place `Files.write` had a window where
   * a concurrent read observed zero bytes.)
   *
-  * Writer access is SINGLE-WRITER, enforced: both the batch pipeline
-  * (`Curate --state`) and the streaming leg (`clusterStateStream`)
-  * are advertised writers of one state dir, and two concurrent
-  * updates would both read the same pointer, compute the same next
+  * Writer access is SINGLE-WRITER, enforced: any two processes that
+  * sync one state dir (two `Curate --state` runs, say) would, updating
+  * concurrently, both read the same pointer, compute the same next
   * version, and overwrite each other's delta — silently losing one
   * batch's merges. [[withWriterLock]] takes an OS-level exclusive
   * lock on `_WRITER_LOCK` for the whole read-pointer → write-delta →

@@ -1,10 +1,9 @@
 package graft.operators
 
 /** Real, dependency-free audio codec for the multimodal path: RIFF/WAVE
-  * PCM 16-bit decode / encode / nearest-neighbor resample, pure JVM.
-  * This de-stubs the audio leg the way [[ImageCodec]] de-stubbed images
-  * (the reference environment ships no codec libraries); video feature
-  * extraction stays on the declared [[Multimodal.StubCodec]].
+  * PCM 16-bit decode / encode and the audio aHash, pure JVM — the
+  * audio twin of [[ImageCodec]] (the reference environment ships no
+  * codec libraries).
   *
   * Executor-local by construction — byte array in, byte array out, no
   * driver involvement, so it runs unchanged inside `mapPartitions` at
@@ -161,34 +160,4 @@ object AudioCodec {
     }
     h
   }
-
-  /** Nearest-neighbor sample-rate conversion (the audio twin of
-    * [[ImageCodec.resize]] — deterministic, O(outputFrames), fine for
-    * feature pipelines; a production ASR path would low-pass first).
-    */
-  def resample(a: Audio, targetRate: Int): Audio = {
-    require(targetRate > 0, s"bad target rate $targetRate")
-    if (targetRate == a.sampleRate) a
-    else {
-      val outFrames = (a.nFrames.toLong * targetRate / a.sampleRate).toInt
-      val out = new Array[Short](outFrames * a.channels)
-      var f = 0
-      while (f < outFrames) {
-        val srcF = (f.toLong * a.sampleRate / targetRate).toInt
-        var c = 0
-        while (c < a.channels) {
-          out(f * a.channels + c) = a.samples(srcF * a.channels + c)
-          c += 1
-        }
-        f += 1
-      }
-      Audio(targetRate, a.channels, out)
-    }
-  }
-
-  /** decode → resample → encode, the bytes-to-bytes kernel the Spark
-    * stage calls.
-    */
-  def resampleWav(bytes: Array[Byte], targetRate: Int): Array[Byte] =
-    encode(resample(decode(bytes), targetRate))
 }

@@ -181,8 +181,7 @@ object CoreRelational {
     Tables.events(s, d).select(
       col("event_id"),
       date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_utc"),
-      date_format(from_utc_timestamp(col("ts"), "America/Los_Angeles"),
-        "yyyy-MM-dd HH:mm:ss").as("ts_pst"))
+      Normalize.renderPst(col("ts")).as("ts_pst"))
 
   private val o15 =
     """SELECT event_id,

@@ -1138,14 +1138,13 @@ object Dedup {
   // the index side caps degenerate buckets (BandCap — a hot index
   // bucket would otherwise fan every colliding new doc by |bucket|);
   // band rows shuffle once on the band key; the per-new-doc aggregate
-  // collapses map-side. In production the index is bucketed-by-band-key
-  // parquet (Bucketing.writeBucketed), so the join reads co-located
-  // buckets with NO index-side shuffle — the (small) new batch is the
-  // only mover, which is what makes incremental ingest cheap at 100 TB.
+  // collapses map-side. The persisted form of the index is the cluster
+  // state's `band_index` table ([[readBandIndex]]), maintained by
+  // [[syncClusterState]].
 
   /** Capped `(bk, idx_id, sig)` index rows of a `(doc_id, text)`
-    * corpus — the in-memory form of the band index; [[writeBandIndex]]
-    * persists the same rows bucketed by band key. Each row carries the
+    * corpus — the in-memory form of the band index; the cluster state's
+    * `band_index` table persists the same rows. Each row carries the
     * indexed doc's FULL 8-slice sketch so ingest can verify a collision
     * by signature agreement without re-reading any indexed text
     * ([[incrementalVerifiedAgainstIndex]]); the band-only join prunes
@@ -1157,8 +1156,7 @@ object Dedup {
     // form the batch×index band join inherits THIS side's band-key
     // partitioning, and its output (batch member × co-bucket member
     // pairs) dwarfs its input bytes, so the exchange must be
-    // coalesce-exempt. The production path (writeBandIndex + bucketed
-    // table) is unaffected — there the bucketing fixes parallelism.
+    // coalesce-exempt.
     val np = indexed.sparkSession.sessionState.conf.numShufflePartitions
     sigBandRows(indexed)
       .repartition(np, col("bk"))
@@ -1167,22 +1165,10 @@ object Dedup {
       .select(col("bk"), col("doc_id").as("idx_id"), col("sig"))
   }
 
-  /** Persist a corpus' capped band rows as a band-key-BUCKETED table —
-    * the on-disk MinHash index the production ingest path joins
-    * against. The mega-bucket cap is applied at WRITE time (amortized
-    * over every future ingest), and bucketing by `bk` means an
-    * ingest-time join reads co-located buckets with NO index-side
-    * exchange: only the (small) new batch shuffles, so per-ingest cost
-    * is proportional to the batch, not the corpus (BucketingSpec
-    * asserts the plan).
-    */
-  def writeBandIndex(docs: DataFrame, table: String, buckets: Int): Unit =
-    Bucketing.writeBucketed(cappedIndexRows(docs), table, "bk", buckets)
-
   /** Ingest-time verdicts of a new `(doc_id, text)` batch against a
-    * pre-signed `(bk, idx_id)` index frame (e.g. `spark.table` over a
-    * [[writeBandIndex]] table): the batch is signed and joined; the
-    * index is read as-is.
+    * pre-signed `(bk, idx_id)` index frame (e.g. the cluster state's
+    * [[readBandIndex]]): the batch is signed and joined; the index is
+    * read as-is.
     */
   def incrementalAgainstIndex(newDocs: DataFrame, index: DataFrame): DataFrame =
     bandRows(newDocs)
@@ -1200,9 +1186,8 @@ object Dedup {
     * collide at 2/8 agreement while a true near-duplicate agrees on
     * most slices — thresholding on `sig_agree` buys precision the band
     * count alone cannot (BucketingSpec plants exactly that contrast).
-    * Plan shape matches [[incrementalAgainstIndex]]: the batch side
-    * shuffles onto the index bucketing; both aggregates group batch-
-    * sized keys; the index side stays exchange-free.
+    * Plan shape matches [[incrementalAgainstIndex]]; both aggregates
+    * group batch-sized keys.
     */
   def incrementalVerifiedAgainstIndex(newDocs: DataFrame,
       index: DataFrame): DataFrame = {
@@ -1230,8 +1215,8 @@ object Dedup {
     * [[incrementalVerifiedAgainstIndex]], or Jaccard-verify survivors
     * with [[candidatePairs]]' machinery when text-level precision
     * matters). Both inputs are `(doc_id, text)` frames; this one-shot
-    * form signs the index in-query (the fixture/oracle path —
-    * production persists it once with [[writeBandIndex]]).
+    * form signs the index in-query (the fixture/oracle path — the
+    * persisted index is the cluster state's [[readBandIndex]]).
     */
   def incrementalDupCandidates(newDocs: DataFrame, indexed: DataFrame): DataFrame =
     incrementalAgainstIndex(newDocs, cappedIndexRows(indexed))
@@ -1241,11 +1226,9 @@ object Dedup {
   // the index side) because the DuckDB oracle needs the whole
   // computation expressible as one self-contained query over the raw
   // parquet. That index build dominates q57/q59's measured time and is
-  // ORACLE-HARNESS OVERHEAD, not the ingest cost: production persists
-  // the index ONCE with [[writeBandIndex]] (cap applied at write time,
-  // bucketed by bk), and a real ingest joins the new batch against the
-  // bucketed table with no index-side exchange and no window —
-  // BucketingSpec pins that plan (only the batch side shuffles).
+  // ORACLE-HARNESS OVERHEAD, not the ingest cost: the cluster state
+  // persists the capped index once ([[readBandIndex]]), and an ingest
+  // joins the new batch against it with no signing pass and no window.
   private def q57(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     incrementalDupCandidates(
@@ -1270,9 +1253,8 @@ object Dedup {
   // persisted index rows already carry each indexed doc's 8-slice
   // sketch, so agreement is computed entirely from index columns.
   // Same bench caveat as q57: the in-query index build (signing pass +
-  // BandCap window) is oracle-harness overhead — the production path
-  // reads a [[writeBandIndex]] table and pays only the batch-side
-  // shuffle (BucketingSpec pins the exchange-free index side).
+  // BandCap window) is oracle-harness overhead — an ingest reads the
+  // cluster state's persisted [[readBandIndex]] rows instead.
   private def q59(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     incrementalVerifiedAgainstIndex(
@@ -1550,11 +1532,10 @@ object Dedup {
   // flip means the batch is fully committed and the replay's anti-join
   // finds nothing. There is no partially-ingested state to reconcile.
   // Writers serialize through an OS-level exclusive lock
-  // (StateFiles.withWriterLock): the batch pipeline (Curate --state)
-  // and the streaming leg (clusterStateStream) are both advertised
-  // writers of ONE state dir, and a second concurrent writer FAILS
-  // LOUDLY instead of silently losing a batch's merges to a
-  // read-modify-write race. Readers never lock.
+  // (StateFiles.withWriterLock): a second concurrent writer of ONE
+  // state dir (two `Curate --state` runs, say) FAILS LOUDLY instead of
+  // silently losing a batch's merges to a read-modify-write race.
+  // Readers never lock.
 
   // The `_FORMAT` marker: a dir of an older layout (unversioned
   // band_index/ids, no survivors_v*) fails loudly at the first pointer

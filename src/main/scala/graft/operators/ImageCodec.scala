@@ -1,8 +1,8 @@
 package graft.operators
 
 /** Real, dependency-free image codec for the multimodal path: 24-bit
-  * uncompressed BMP (BITMAPINFOHEADER) decode / encode / nearest-
-  * neighbor resize, pure JVM — plus REAL JPEG decode/encode through the
+  * uncompressed BMP (BITMAPINFOHEADER) decode / encode, pure JVM —
+  * plus REAL JPEG decode/encode through the
   * JDK's built-in `javax.imageio` plugin (ships in every JRE, zero
   * added dependencies), which also powers [[VideoCodec]]'s
   * MJPEG-in-AVI frame decode. This de-stubs the image leg of the
@@ -102,7 +102,7 @@ object ImageCodec {
     b
   }
 
-  /** Nearest-neighbor resample (the thumbnailing kernel — deterministic,
+  /** Nearest-neighbor resample (the aHash downscale — deterministic,
     * O(outputPixels), no intermediate allocation beyond the raster).
     */
   def resize(img: Image, targetW: Int, targetH: Int): Image = {
@@ -125,12 +125,6 @@ object ImageCodec {
     Image(targetW, targetH, out)
   }
 
-  /** decode → resize → encode, the bytes-to-bytes kernel the Spark
-    * stage calls.
-    */
-  def resizeBmp(bytes: Array[Byte], targetW: Int, targetH: Int): Array[Byte] =
-    encode(resize(decode(bytes), targetW, targetH))
-
   // ---- JPEG via the JDK's ImageIO plugin ---------------------------------
 
   /** Cheap sniff: JPEG SOI marker (FF D8 FF). */
@@ -141,7 +135,7 @@ object ImageCodec {
   /** Decodes a JPEG payload to the same top-down BGR raster [[decode]]
     * produces, via the JDK's baseline-JPEG reader. Deterministic for a
     * given payload (one fixed decoder, integer IDCT path); throws on
-    * undecodable bytes so the Spark stages can fall back to the stub
+    * undecodable bytes so the Spark stages can skip the payload
     * instead of failing the task.
     */
   def decodeJpeg(b: Array[Byte]): Image = {
@@ -228,15 +222,8 @@ object ImageCodec {
       }
     }
 
-  /** decode → resize → re-encode for JPEG payloads — the compressed
-    * twin of [[resizeBmp]], same bytes-to-bytes contract.
-    */
-  def resizeJpeg(bytes: Array[Byte], targetW: Int, targetH: Int): Array[Byte] =
-    encodeJpeg(resize(decodeJpeg(bytes), targetW, targetH))
-
   /** Format-sniffing decode: BMP through the native parser, JPEG
-    * through ImageIO; anything else throws (callers fall back to the
-    * declared stub).
+    * through ImageIO; anything else throws (callers emit no print).
     */
   def decodeAny(bytes: Array[Byte]): Image =
     if (isBmp(bytes)) decode(bytes)
@@ -260,7 +247,7 @@ object ImageCodec {
 
   /** Decodes a PNG payload to the same top-down BGR raster [[decode]]
     * produces (alpha dropped — the dedup rasters are opaque). Throws
-    * on undecodable bytes so Spark stages fall back to the stub.
+    * on undecodable bytes so Spark stages skip the payload.
     */
   def decodePng(b: Array[Byte]): Image = {
     javax.imageio.ImageIO.setUseCache(false)
@@ -328,12 +315,6 @@ object ImageCodec {
         rs.next()
       }
     }
-
-  /** decode → resize → re-encode for PNG payloads — the lossless twin
-    * of [[resizeJpeg]], same bytes-to-bytes contract.
-    */
-  def resizePng(bytes: Array[Byte], targetW: Int, targetH: Int): Array[Byte] =
-    encodePng(resize(decodePng(bytes), targetW, targetH))
 
   /** Average-hash (aHash) perceptual fingerprint: decode, nearest-
     * neighbor resample to 8×8, integer grayscale (b+g+r per pixel —

@@ -145,9 +145,7 @@ object Integrity {
   // content hashes (md5 — the q22 exact-dedup fingerprint), verdicts
   // fold row-locally. Both sides must reach the join (unchanged can
   // only be decided after the hashes meet), but the shuffle carries
-  // (id, 16-byte hash), never the text — the fixed-width discipline;
-  // a bucketed layout on doc_id (operators/Bucketing) makes the join
-  // exchange-free across recurring runs.
+  // (id, 16-byte hash), never the text — the fixed-width discipline.
   //
   // The fixture has ONE documents table, so the "new" snapshot is
   // derived deterministically on both engines (the planted-dirt

@@ -6,22 +6,16 @@ import org.apache.spark.sql.functions._
 
 /** Multimodal column handling for a training-data pipeline: media
   * payloads are opaque `binary` columns with a typed metadata struct;
-  * decode / feature-extraction runs batched per partition.
+  * decode → perceptual hash (aHash) runs per partition.
   *
   * Codec note: all three modalities have REAL dependency-free codecs
-  * for their library-free flavors — 24bpp BMP decode / nearest-neighbor
-  * resize / encode ([[ImageCodec]]), PCM16 RIFF/WAVE decode / resample /
-  * encode ([[AudioCodec]]), and uncompressed 24bpp RIFF/AVI decode /
-  * frame-sample / encode ([[VideoCodec]]) — each engaged whenever the
-  * payload sniffs as that format. COMPRESSED video (H.264 etc.) remains
-  * a clearly-marked deterministic STUB ([[StubCodec.decode]]) because
-  * no av codec libraries ship in this
-  * environment. Everything around both — the schema contract, the
-  * Dataset[MediaRecord] → Dataset[MediaFeatures] signature, the
-  * per-partition batching, the partition-count control — is the real
-  * 100 TB plumbing: swap StubCodec for a JNI/JavaCV codec and nothing
-  * else changes. Binary payloads never shuffle here; features are
-  * extracted map-side and only the (tiny) feature rows flow on.
+  * for their library-free flavors — BMP / PNG / JPEG ([[ImageCodec]]),
+  * PCM16 RIFF/WAVE ([[AudioCodec]]) and uncompressed or MJPEG RIFF/AVI
+  * ([[VideoCodec]]) — each engaged whenever the payload sniffs as that
+  * format. Payloads no codec decodes (H.264 video etc., for which no av
+  * codec libraries ship in this environment) emit no print. Binary
+  * payloads never shuffle here; prints are computed map-side and only
+  * the 8-byte hash rows flow on.
   *
   * The metadata-level operators (q33) are pure column expressions and
   * are oracle-checked like any other query (payload := utf8 bytes of
@@ -32,159 +26,6 @@ object Multimodal {
   /** One media payload: id + opaque bytes + typed metadata. */
   final case class MediaRecord(media_id: Long, content: Array[Byte],
       media_type: String, source: String)
-
-  /** Extracted features (what a real codec would emit). */
-  final case class MediaFeatures(media_id: Long, media_type: String,
-      byte_len: Int, sample_rate_hz: Int, n_frames: Int,
-      frame_digest: String)
-
-  /** STUB CODEC — deterministic stand-in for an image/audio decoder.
-    * Real implementation would decode `content` with a native codec;
-    * this derives the same-shaped features from the raw bytes so the
-    * pipeline is testable end-to-end in this container.
-    */
-  object StubCodec {
-    def decode(r: MediaRecord): MediaFeatures = {
-      val len = r.content.length
-      val xor = r.content.foldLeft(0)((a, b) => (a ^ b) & 0xff)
-      // REAL decode when the payload parses as PCM16 WAVE: header-true
-      // sample rate and frame count. Try, don't trust the sniff: a
-      // WAV-magic payload in an unsupported flavor (float, ADPCM, 8-bit,
-      // truncated) must fall back to the stub, not fail the task — one
-      // malformed file in a 100 TB batch cannot kill the job.
-      val real: Option[MediaFeatures] =
-        if (r.media_type == "audio" && AudioCodec.isWav(r.content))
-          scala.util.Try(AudioCodec.decode(r.content)).toOption.map(a =>
-            MediaFeatures(r.media_id, r.media_type, len,
-              sample_rate_hz = a.sampleRate, n_frames = a.nFrames,
-              frame_digest = f"$xor%02x"))
-        else if (r.media_type == "video" && VideoCodec.isAvi(r.content))
-          // header-true frame count and rate for BOTH AVI flavors
-          // (uncompressed DIB and MJPEG — decodeAuto sniffs the
-          // fourcc); digest = byte-xor of the DECODED middle frame (a
-          // sampled-keyframe fingerprint, not the container's —
-          // re-muxing the same frames keeps the digest, and for MJPEG
-          // it fingerprints pixels, not entropy-coded bytes)
-          scala.util.Try(VideoCodec.decodeAuto(r.content)).toOption.map { v =>
-            val mid = v.frames(v.nFrames / 2)
-            val fxor = mid.foldLeft(0)((a, b) => (a ^ b) & 0xff)
-            MediaFeatures(r.media_id, r.media_type, len,
-              sample_rate_hz = v.fps, n_frames = v.nFrames,
-              frame_digest = f"$fxor%02x")
-          }
-        else None
-      real.getOrElse {
-        // Declared stub boundary: video codecs beyond BI_RGB/MJPEG
-        // (H.264 etc.) need native decoder libraries this environment
-        // does not ship — fake "frames" = 1KiB chunks, fake digest =
-        // hex of a rolling byte xor, so unsupported payloads still
-        // flow with the right SHAPE.
-        val frames = math.max(1, len / 1024)
-        MediaFeatures(r.media_id, r.media_type, len,
-          sample_rate_hz = if (r.media_type == "audio") 16000 else 0,
-          n_frames = frames,
-          frame_digest = f"$xor%02x")
-      }
-    }
-
-    /** Byte-stride fallback "resize" for payloads no real codec path
-      * handles (BMP and JPEG go through [[ImageCodec]] in
-      * [[resizeImages]]): keeps every stride-th byte, preserving the
-      * (id, smaller-binary) shape a real thumbnailer produces.
-      * Deterministic.
-      */
-    def resize(r: MediaRecord, targetBytes: Int): MediaRecord = {
-      val n = r.content.length
-      if (n <= targetBytes || targetBytes <= 0) r
-      else {
-        val stride = math.max(1, n / targetBytes)
-        r.copy(content = r.content.indices.collect {
-          case i if i % stride == 0 => r.content(i)
-        }.toArray)
-      }
-    }
-
-    /** Frame sampling: REAL for both AVI flavors — `k` evenly-spaced
-      * DECODED DIB frames ([[VideoCodec.sampleFrames]] over
-      * `decodeAuto`, which handles BI_RGB and MJPEG) — and the
-      * declared stub (evenly-spaced 1KiB chunks) for codecs the bare
-      * JVM cannot decode (H.264 etc., the documented boundary).
-      */
-    def sampleFrames(r: MediaRecord, k: Int): Seq[Array[Byte]] = {
-      if (r.media_type == "video" && VideoCodec.isAvi(r.content)) {
-        val real = scala.util.Try(
-          VideoCodec.sampleFrames(VideoCodec.decodeAuto(r.content), k)).toOption
-        real match {
-          case Some(fs) => return fs
-          case None => () // malformed AVI: fall through to the stub
-        }
-      }
-      val frames = math.max(1, r.content.length / 1024)
-      val picks = (0 until math.min(k, frames)).map(i => i * frames / math.min(k, frames))
-      picks.map { f =>
-        val start = f * 1024
-        r.content.slice(start, math.min(start + 1024, r.content.length))
-      }
-    }
-  }
-
-  /** Batched resize stage — binary in, smaller binary out, map-side. */
-  def resizeAll(records: Dataset[MediaRecord], targetBytes: Int): Dataset[MediaRecord] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions(_.map(StubCodec.resize(_, targetBytes)))
-  }
-
-  /** Image thumbnailing with the REAL codecs: BMP payloads decode /
-    * resample / re-encode through the native parser, JPEG payloads
-    * through the JDK's ImageIO ([[ImageCodec.resizeJpeg]]) — each
-    * format re-encodes as itself. Unsupported payloads fall back to
-    * the declared byte-stride stub so mixed media batches still flow.
-    * Map-side only — payload bytes never shuffle.
-    */
-  def resizeImages(records: Dataset[MediaRecord], targetW: Int,
-      targetH: Int): Dataset[MediaRecord] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions(_.map { r =>
-      // unsupported flavor (compressed BMP, non-24bpp, truncated,
-      // undecodable JPEG): fall back to the stub, never fail the task
-      if (r.media_type == "image" && ImageCodec.isBmp(r.content))
-        scala.util.Try(r.copy(content = ImageCodec.resizeBmp(r.content, targetW, targetH)))
-          .getOrElse(StubCodec.resize(r, targetW * targetH * 3))
-      else if (r.media_type == "image" && ImageCodec.isJpeg(r.content))
-        scala.util.Try(r.copy(content = ImageCodec.resizeJpeg(r.content, targetW, targetH)))
-          .getOrElse(StubCodec.resize(r, targetW * targetH * 3))
-      else if (r.media_type == "image" && ImageCodec.isPng(r.content))
-        scala.util.Try(r.copy(content = ImageCodec.resizePng(r.content, targetW, targetH)))
-          .getOrElse(StubCodec.resize(r, targetW * targetH * 3))
-      else StubCodec.resize(r, targetW * targetH * 3)
-    })
-  }
-
-  /** Audio resampling with the REAL codec: WAV payloads are decoded,
-    * nearest-neighbor rate-converted and re-encoded ([[AudioCodec]]);
-    * non-WAV payloads pass through untouched. Map-side only — payload
-    * bytes never shuffle.
-    */
-  def resampleAudio(records: Dataset[MediaRecord], targetRate: Int): Dataset[MediaRecord] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions(_.map { r =>
-      if (r.media_type == "audio" && AudioCodec.isWav(r.content))
-        // unsupported WAV flavor: pass through untouched, don't fail the task
-        scala.util.Try(r.copy(content = AudioCodec.resampleWav(r.content, targetRate)))
-          .getOrElse(r)
-      else r
-    })
-  }
-
-  /** Batched per-partition decode: the Scala twin of a pandas
-    * `mapInPandas` decode stage. Control parallelism with
-    * `repartition(n)` upstream; each partition decodes its batch
-    * without touching the driver.
-    */
-  def extractFeatures(records: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
-    import records.sparkSession.implicits._
-    records.mapPartitions(_.map(StubCodec.decode))
-  }
 
   /** Fixture adapter: documents.text as an opaque binary payload. */
   def mediaTable(s: SparkSession, d: String): DataFrame =

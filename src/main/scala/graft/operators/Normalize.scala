@@ -122,12 +122,6 @@ object Normalize {
   def renderPst(ts: Column): Column =
     date_format(from_utc_timestamp(ts, "America/Los_Angeles"), "yyyy-MM-dd HH:mm:ss")
 
-  /** Typed view of a canonical-schema DataFrame. */
-  def toTyped(cleaned: DataFrame): org.apache.spark.sql.Dataset[graft.sources.CleanedTransaction] = {
-    implicit val enc = org.apache.spark.sql.Encoders.product[graft.sources.CleanedTransaction]
-    cleaned.as[graft.sources.CleanedTransaction]
-  }
-
   /** Convenience readers with the explicit schemas. */
   def readShape2(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Schemas.heliusShape2).json(path)

@@ -1070,83 +1070,6 @@ object Similarity {
        |          - (n_old * $CellDriftScale) // tot_old AS BIGINT) AS dp_scaled
        |FROM j CROSS JOIN tot""".stripMargin
 
-  /** The operational verdict derived from the q73 observable: probe
-    * `nProbe` cells, or fall back to exact search when probing would
-    * scan too much of the corpus to beat brute force.
-    *
-    * @param nProbe           cells to probe per query
-    * @param useExact         true when the probed corpus share crosses
-    *                         `exactCostCutoff` — IVF no longer buys a
-    *                         meaningful scan reduction, use q26
-    * @param recallFloor      recall this plan guarantees under the
-    *                         structureless worst case (== probedShare
-    *                         when planned from balance alone; the
-    *                         measured value when a curve is supplied)
-    * @param probedShare      worst-case fraction of corpus vectors
-    *                         scanned per query (sum of the largest
-    *                         `nProbe` cells' shares) — the cost side
-    * @param maxLoadFactor    q73's skew bound: the largest single
-    *                         cell's load factor (worst one-cell probe)
-    */
-  final case class ProbePlan(nProbe: Int, useExact: Boolean,
-      recallFloor: Double, probedShare: Double, maxLoadFactor: Double)
-
-  /** Derives the nProbe lever from a MEASURED [[cellBalance]] frame,
-    * turning SCALE.md's operational prose into code.
-    *
-    * Planning model: without knowledge of the query workload, the
-    * honest assumption is the structureless floor SCALE.md records for
-    * the fixture embeddings — true neighbors spread across cells in
-    * proportion to cell share, so probing a set of cells recovers at
-    * most the sum of their shares. The plan therefore picks the
-    * smallest nProbe whose top-share cells sum to `targetRecall`
-    * (clustered corpora can only beat this floor). When a measured
-    * recall curve (SCALE.md round-9 re-baseline) is supplied, it
-    * overrides the floor: the smallest measured nProbe reaching the
-    * target wins (the sf1 story, where recall is 1.0 at nProbe 1).
-    *
-    * Either way the COST side comes from the balance: probing p cells
-    * scans at worst the p largest cells, and once that share crosses
-    * `exactCostCutoff` the probe is no longer meaningfully cheaper
-    * than the q26 brute-force scan — the verdict flips to `useExact`
-    * (also the right call for a degenerate mega-cell balance, where
-    * one probe IS most of the corpus).
-    *
-    * Driver-side by design: the balance frame is ≤ numCells rows.
-    */
-  def recommendNProbe(balance: DataFrame, targetRecall: Double = 0.9,
-      measuredCurve: Seq[(Int, Double)] = Nil,
-      exactCostCutoff: Double = 0.5): ProbePlan = {
-    require(targetRecall > 0 && targetRecall <= 1.0,
-      s"targetRecall must be in (0, 1], got $targetRecall")
-    val byShare = balance.select(col("share"), col("load_factor"))
-      .collect().map(r => (r.getDouble(0), r.getDouble(1)))
-      .sortBy(-_._1)
-    require(byShare.nonEmpty, "empty cell balance")
-    val numCells = byShare.length
-    val topShareSum = byShare.map(_._1).scanLeft(0.0)(_ + _).drop(1)
-    val p =
-      if (measuredCurve.nonEmpty)
-        measuredCurve.sortBy(_._1).find(_._2 >= targetRecall)
-          .map(_._1).getOrElse(numCells).min(numCells).max(1)
-      else
-        topShareSum.indexWhere(_ >= targetRecall - 1e-12) match {
-          case -1 => numCells // shares sum to 1, only float dust gets here
-          case i  => i + 1
-        }
-    // shares sum to 1 only up to float association dust — clamp so a
-    // full probe reports exactly 1.0
-    val probedShare = math.min(1.0, topShareSum(p - 1))
-    val floor =
-      if (measuredCurve.nonEmpty)
-        measuredCurve.sortBy(_._1).takeWhile(_._1 <= p).lastOption
-          .map(_._2).getOrElse(probedShare)
-      else probedShare
-    ProbePlan(p, useExact = probedShare >= exactCostCutoff,
-      recallFloor = floor, probedShare = probedShare,
-      maxLoadFactor = byShare.map(_._2).max)
-  }
-
   private val o73 =
     s"""WITH v AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v

@@ -94,10 +94,10 @@ object TextAnalysis {
     }
 
   // the whole read-pointer → write-part → flip critical section runs
-  // under the dir's exclusive writer lock: the streaming leg and a
-  // batch Curate run are both advertised writers of ONE token state,
-  // and two unserialized syncs would compute the same next version and
-  // silently drop one batch's rows (same contract as the cluster state)
+  // under the dir's exclusive writer lock: two unserialized syncs of
+  // ONE token state (two `Curate --state` runs, say) would compute the
+  // same next version and silently drop one batch's rows (same
+  // contract as the cluster state)
   private def syncTokenLocked(s: SparkSession, dir: String, docs: DataFrame,
       maxParts: Int): DataFrame = {
     val state = tokenState(dir)
@@ -323,28 +323,19 @@ object TextAnalysis {
       .filter(col("pr") <= keepFrac)
   }
 
-  /** Scale-safe variant of [[qualityFilter]] — the mega-language skew path.
+  /** Scale-safe variant of [[qualityFilter]] — the mega-language skew
+    * path — over an already-scored `(doc_id, lang, quality)` frame.
     * `percent_rank`'s window sorts each language on ONE partition, so a
-    * mega-language (English is ~half of any web corpus) becomes a straggler
-    * at 100 TB. This form replaces the window with a per-language
-    * `approx_percentile` THRESHOLD — a map-side-combining sketch aggregate,
-    * so nothing larger than the ≤|langs|-row threshold table ever reaches a
-    * single reducer — broadcast-joined back onto the scored docs. The
-    * force-broadcast is safe here because the build side is one row per
-    * LANGUAGE (hundreds at web scale), never near the 8 GB ceiling.
-    * Boundary docs within sketch error of the threshold may differ from the
-    * exact window (agreement is CI-asserted ≥95% at fixture scale); the
-    * exact form remains the q45 oracle. Costs a second pass over the scored
-    * projection (threshold branch + probe branch — Spark does not share
-    * scans across DataFrame branches), the same trade q37 makes.
-    */
-  def qualityFilterApprox(docs: DataFrame, keepFrac: Double,
-      accuracy: Int = 10000): DataFrame =
-    qualityFilterPreScored(withQuality(docs, "lang")
-      .select(col("doc_id"), col("lang"), col("quality")), keepFrac, accuracy)
-
-  /** The approx-percentile quality gate over an already-scored
-    * `(doc_id, lang, quality)` frame. A pipeline that persists the
+    * mega-language (English is ~half of any web corpus) becomes a
+    * straggler at 100 TB. This form replaces the window with a
+    * per-language `approx_percentile` THRESHOLD — a map-side-combining
+    * sketch aggregate, so nothing larger than the ≤|langs|-row threshold
+    * table ever reaches a single reducer — broadcast-joined back onto
+    * the scored docs. The force-broadcast is safe here because the build
+    * side is one row per LANGUAGE (hundreds at web scale). Boundary docs
+    * within sketch error of the threshold may differ from the exact
+    * window (agreement is CI-asserted ≥95% at fixture scale); the exact
+    * form remains the q45 oracle. A pipeline that persists the
     * (row-local, deterministic) quality score once — Curate stage 1
     * writes it into its artifacts — gates later stages here without
     * re-reading and re-tokenizing the text.
@@ -889,24 +880,9 @@ object TextAnalysis {
     * per-distinct-word replaces and the per-doc totals all derive from
     * the one artifact, zero corpus scans.
     */
-  def bpeApplyFromCounts(agg: DataFrame, k: Int = BpeMerges): DataFrame =
-    bpeApplyWithMerges(agg, agg, k)
-
-  /** [[bpeApplyFromCounts]] with the merge table TRAINED on a
-    * different `(doc_id, w, cnt)` frame than the one being counted —
-    * the real tokenizer contract (round 14): merges derive from the
-    * full corpus ONCE, then price whatever text a later stage actually
-    * holds (e.g. Curate's excise mode counts the post-excision train
-    * text under the corpus-trained table). `mergeAgg` and `agg` may be
-    * the same frame, which is [[bpeApplyFromCounts]].
-    */
-  def bpeApplyWithMerges(mergeAgg: DataFrame, agg: DataFrame,
-      k: Int = BpeMerges): DataFrame = {
+  def bpeApplyFromCounts(agg: DataFrame, k: Int = BpeMerges): DataFrame = {
     val vocab = agg.groupBy(col("w")).agg(sum(col("cnt")).as("freq"))
-    // same frame => one aggregation, the exact pre-r14 q99 plan
-    val mergeVocab = if (mergeAgg eq agg) vocab
-      else mergeAgg.groupBy(col("w")).agg(sum(col("cnt")).as("freq"))
-    val pairs = mergeVocab.filter(length(col("w")) >= 2)
+    val pairs = vocab.filter(length(col("w")) >= 2)
       .select(col("freq"), explode(expr(
         "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("pair"))
       .groupBy(col("pair")).agg(sum(col("freq")).as("n"))
@@ -1856,46 +1832,14 @@ object TextAnalysis {
     * Cache lifecycle: the word/gram pre-aggregates and the 1-row
     * totals persist for the SESSION (CacheManager dedups repeat
     * invocations on the same input — the desired warm-path behavior,
-    * but successive DIFFERENT batches each add three cache entries).
-    * Use [[withQualityEnsemble]] to bound them, or clear via
-    * `spark.catalog.clearCache()`.
+    * but successive DIFFERENT batches each add three cache entries);
+    * clear them via `spark.catalog.clearCache()`.
     */
   def qualityEnsemble(docs: DataFrame,
       minQuality: Double = EnsMinQuality,
       maxDupFrac: Double = EnsMaxDupFrac,
       maxBoilerFrac: Double = EnsMaxBoilerFrac,
-      minMeanProb: Double = EnsMinMeanProb): DataFrame =
-    buildQualityEnsemble(docs, minQuality, maxDupFrac, maxBoilerFrac,
-      minMeanProb)._1
-
-  /** Loan-pattern wrapper around [[qualityEnsemble]] for long-lived
-    * sessions: runs `body` with the ensemble frame, then unpersists
-    * the three internal pre-aggregate caches in a finally block
-    * (blocking, so the executor blocks are gone when this returns).
-    * Use this when gating successive distinct batches in one session —
-    * the bare `qualityEnsemble` leaves its caches alive for plan-level
-    * reuse, which is the right call for repeated reads of the SAME
-    * frame but accumulates for the session lifetime across different
-    * inputs. Any result that must outlive `body` has to be
-    * materialized inside it (collect / write / localCheckpoint): the
-    * returned plan recomputes from scratch once the caches drop.
-    */
-  def withQualityEnsemble[T](docs: DataFrame,
-      minQuality: Double = EnsMinQuality,
-      maxDupFrac: Double = EnsMaxDupFrac,
-      maxBoilerFrac: Double = EnsMaxBoilerFrac,
-      minMeanProb: Double = EnsMinMeanProb)(body: DataFrame => T): T = {
-    val (result, cached) = buildQualityEnsemble(docs, minQuality,
-      maxDupFrac, maxBoilerFrac, minMeanProb)
-    try body(result)
-    finally cached.foreach(_.unpersist(blocking = true))
-  }
-
-  private def buildQualityEnsemble(docs: DataFrame,
-      minQuality: Double,
-      maxDupFrac: Double,
-      maxBoilerFrac: Double,
-      minMeanProb: Double): (DataFrame, Seq[DataFrame]) = {
+      minMeanProb: Double = EnsMinMeanProb): DataFrame = {
     val base = docs.select(col("doc_id"), col("n_chars"),
       split(col("text"), " ").as("w"),
       graft.functions.WordGrams(col("text"), 3).as("grams"))
@@ -1944,7 +1888,7 @@ object TextAnalysis {
       .select(col("gram"))
     val boilerPerDoc = perDocG.join(hot, "gram")
       .groupBy(col("doc_id")).agg(sum(col("c")).as("n_boiler"))
-    val result = rowLocal
+    rowLocal
       .join(boilerPerDoc, Seq("doc_id"), "left")
       .withColumn("boiler_frac",
         when(col("n_grams") > 0,
@@ -1957,7 +1901,6 @@ object TextAnalysis {
       .withColumn("keep",
         col("quality") >= minQuality && col("dup_frac") <= maxDupFrac &&
           col("boiler_frac") <= maxBoilerFrac && col("mean_prob") >= minMeanProb)
-    (result, Seq(perDocW, totals, perDocG))
   }
 
   private def q61(s: SparkSession, d: String): DataFrame =
@@ -2010,9 +1953,10 @@ object TextAnalysis {
   // the rank window shuffles on lang, and the per-lang aggregate that
   // follows reuses that partitioning (no second exchange — CI-pinned).
   // Scale caveat (q45's, shared): a per-language window puts each
-  // language on one partition; the at-100 TB substitution is SHIPPED
-  // as [[lengthQuantilesApprox]] (sketch aggregate, no window,
-  // rank-error-bounded) — exact selection is the oracle semantic here.
+  // language on one partition; the at-100 TB substitution is a
+  // per-language `approx_percentile` sketch aggregate (no window,
+  // rank-error-bounded, the [[qualityFilterPreScored]] pattern) — exact
+  // selection is the oracle semantic here.
 
   /** Per-language exact discrete length quantiles over any frame with
     * `doc_id`, `lang`, `n_chars`: `(lang, n_docs, p25, p50, p75, p95)`.
@@ -2030,33 +1974,6 @@ object TextAnalysis {
       max(col("n")).as("n_docs"),
       at(1, 4, "p25"), at(1, 2, "p50"), at(3, 4, "p75"), at(19, 20, "p95"))
   }
-
-  /** Scale-safe variant of [[lengthQuantiles]] — the q45
-    * `qualityFilterApprox` pattern applied to the q68 caveat, AS CODE
-    * instead of prose. The exact form's per-language rank window puts
-    * each language on one partition (a mega-language straggles at
-    * 100 TB); this form is a pure sketch AGGREGATE —
-    * `approx_percentile` merges map-side, so nothing bigger than one
-    * sketch per language ever reaches a reducer, and there is no
-    * window anywhere (plan-pinned in spec). Error bound: the sketch
-    * guarantees a value within `n/accuracy` ranks of the target, so
-    * for any language with `n_docs <= accuracy` the discrete quantile
-    * is RANK-EXACT (CI-asserted against [[lengthQuantiles]] at fixture
-    * scale); at 100 TB with the default accuracy the p50 of a
-    * 50-billion-doc language is within 5M ranks ≈ 0.01% of mass.
-    * The exact form remains the q68 oracle semantic.
-    */
-  def lengthQuantilesApprox(docs: DataFrame,
-      accuracy: Int = 10000): DataFrame =
-    docs
-      .select(col("lang"), col("n_chars"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        expr(s"approx_percentile(n_chars, array(0.25D, 0.5D, 0.75D, 0.95D), $accuracy)")
-          .as("p"))
-      .select(col("lang"), col("n_docs"),
-        col("p")(0).as("p25"), col("p")(1).as("p50"),
-        col("p")(2).as("p75"), col("p")(3).as("p95"))
 
   private def q68(s: SparkSession, d: String): DataFrame =
     lengthQuantiles(Tables.documents(s, d))
@@ -2151,9 +2068,9 @@ object TextAnalysis {
   // rank <= ceil(2n/3), tail = rest, with the ceilings in pure integer
   // arithmetic. One exchange for the per-language window (the q68
   // scale caveat shared: per-language sort — the at-100 TB
-  // substitution is SHIPPED as [[lmBucketsApprox]], approx cutpoints
-  // broadcast back, ≥95% agreement CI-asserted; exact selection is
-  // the oracle semantic here). The LM side inherits q56's shapes
+  // substitution is approx cutpoints broadcast back, the
+  // [[qualityFilterPreScored]] pattern; exact selection is the oracle
+  // semantic here). The LM side inherits q56's shapes
   // unchanged.
   /** Per-doc CCNet-style LM bucket over any `(doc_id, text, lang)`
     * frame: `(doc_id, lang, mean_prob, bucket)` with bucket in
@@ -2178,33 +2095,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang"), col("mean_prob"),
         when(col("rk") <= expr("(n + 2) div 3"), lit("head"))
           .when(col("rk") <= expr("(2 * n + 2) div 3"), lit("middle"))
-          .otherwise(lit("tail")).as("bucket"))
-  }
-
-  /** Scale-safe variant of [[lmBuckets]] — the at-scale substitution
-    * the exact form's comment promises, AS CODE (the q45/q68 approx
-    * pattern): per-language tertile CUTPOINTS from one
-    * `approx_percentile` sketch aggregate (map-side mergeable, no
-    * per-language window, no single-partition language sort),
-    * broadcast back, bucket assigned row-locally by threshold
-    * compare. Differences vs exact: ties at a cutpoint all land in the
-    * higher bucket (the rank form splits them by doc_id), and sketch
-    * error can shift boundary docs — agreement is CI-asserted ≥95% at
-    * fixture scale (the q45 convention). Head = mean_prob ≥ p(1/3
-    * from top); exact selection remains the q86 oracle semantic.
-    */
-  def lmBucketsApprox(docs: DataFrame, accuracy: Int = 10000): DataFrame = {
-    val lm = unigramLm(docs).select(col("doc_id"), col("mean_prob"))
-    val base = docs.select(col("doc_id"), col("lang")).join(lm, "doc_id")
-    val cuts = base.groupBy(col("lang"))
-      .agg(expr(
-        s"approx_percentile(mean_prob, array(${2.0 / 3}D, ${1.0 / 3}D), $accuracy)")
-        .as("c"))
-      .select(col("lang"), col("c")(0).as("head_min"), col("c")(1).as("mid_min"))
-    base.join(broadcast(cuts), "lang")
-      .select(col("doc_id"), col("lang"), col("mean_prob"),
-        when(col("mean_prob") >= col("head_min"), lit("head"))
-          .when(col("mean_prob") >= col("mid_min"), lit("middle"))
           .otherwise(lit("tail")).as("bucket"))
   }
 

@@ -172,8 +172,8 @@ object TrainingData {
   // the cold write ≈ 1.4 raw queries — amortized from the second
   // consumer on. The honest cost axis is BYTES: the artifact measures
   // ~20× the compressed corpus (263 MB vs 13 MB at sf10), so at
-  // extreme scale it is a deliberate campaign artifact — exactly the
-  // posture of [[writeGramIndex]] — not a free lunch; the boundary
+  // extreme scale it is a deliberate campaign artifact, not a free
+  // lunch; the boundary
   // stays for the HIGHER-volume expansions (q50's 3-gram text grams,
   // q63/q104's positional grams), which this artifact's fixed-width
   // hashes cannot serve. DISTINCT (doc_id, gh) is the exact consumer
@@ -313,23 +313,15 @@ object TrainingData {
       |SELECT t.doc_id, count(*) AS n_shared_grams
       |FROM t JOIN tr USING (gh) GROUP BY 1""".stripMargin
 
-  // ---- persisted train-gram index (q43) -----------------------------------
-  // The persisted-train-gram twin of Dedup.writeBandIndex.
+  // ---- distinct train-gram rows (q43) -------------------------------------
 
-  /** Distinct long-n-gram hashes of `docs` as `(gh)` rows — the rows
-    * of the persisted train-gram index. One uniform 64-bit-hash shuffle
+  /** Distinct long-n-gram hashes of `docs` as `(gh)` rows — the train
+    * side of the contamination report. One uniform 64-bit-hash shuffle
     * (the distinct); linear at any corpus size.
     */
   def gramRowsOf(docs: DataFrame): DataFrame =
     docs.select(explode(graft.functions.GramHashesLong(col("text"), 8)).as("gh"))
       .distinct()
-
-  /** Persist the train corpus's distinct gram hashes gh-BUCKETED, so
-    * joins against it co-locate on the bucket key with no index-side
-    * exchange.
-    */
-  def writeGramIndex(docs: DataFrame, table: String, buckets: Int): Unit =
-    Bucketing.writeBucketed(gramRowsOf(docs), table, "gh", buckets)
 
   // ---- q46: sharded next-fit sequence packing ----------------------------
   // Batch assembly for training: pack documents into fixed-capacity
@@ -987,10 +979,8 @@ object TrainingData {
   // exact BIGINT on both engines.
   //
   // Scale shape: benchmark grams shuffle once on the gram hash against
-  // the DISTINCT train gram set (production joins the persisted
-  // [[writeGramIndex]] table exchange-free — the q43 index path);
-  // everything after is benchmark-doc-keyed, and the report is
-  // |benchmarks| rows.
+  // the DISTINCT train gram set; everything after is benchmark-doc-
+  // keyed, and the report is |benchmarks| rows.
 
   /** Per-benchmark contamination summary: `(source, n_docs, n_dirty,
     * dirty_frac, mean_leak_frac)` of `benchmark` docs (needs `doc_id`,
@@ -1002,11 +992,9 @@ object TrainingData {
 
   /** [[benchmarkContaminationReport]] against a PRE-BUILT distinct
     * train-gram set — the production supply (round 16): a pipeline
-    * that maintains the persisted [[writeGramIndex]] table (or stages
-    * `gramRowsOf` once, as Curate does) reports contamination for any
-    * number of benchmark suites without ever re-gramming the train
-    * corpus; with the gh-bucketed table the join is exchange-free on
-    * the index side. Spec-pinned row-identical to the text form
+    * that stages `gramRowsOf` once, as Curate does, reports
+    * contamination for any number of benchmark suites without ever
+    * re-gramming the train corpus. Spec-pinned row-identical to the text form
     * (TrainingDataSpec).
     */
   def benchmarkContaminationReportFromGrams(trainGrams: DataFrame,
@@ -1565,7 +1553,7 @@ object TrainingData {
   // so cross-bucket order IS score order, equal scores share a bucket,
   // and the within-bucket tiebreak (quality DESC, doc_id) matches the
   // global ordering. Costs a second pass over the scored projection
-  // (bucket-totals branch + probe branch — the q37/qualityFilterApprox
+  // (bucket-totals branch + probe branch — the q37/qualityFilterPreScored
   // trade). The oracle is the naive global window, fine at oracle
   // scale.
   private val TokenBudget = 10000L

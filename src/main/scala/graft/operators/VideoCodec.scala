@@ -12,10 +12,9 @@ package graft.operators
   *     every JRE) and lands in the same DIB frame layout, so frame
   *     sampling and fingerprinting downstream are format-blind.
   *
-  * Decode / encode / mux / nearest-neighbor frame sampling, pure JVM.
-  * Codecs beyond MJPEG (H.264 etc.) require native decoder libraries
-  * that do not ship in this environment and remain on the declared
-  * [[Multimodal.StubCodec]] fallback by design.
+  * Decode / encode / mux, pure JVM. Codecs beyond MJPEG (H.264 etc.)
+  * require native decoder libraries that do not ship in this
+  * environment; [[decodeAuto]] throws on them.
   *
   * Executor-local by construction — byte array in, byte array out, no
   * driver involvement, so it runs unchanged inside `mapPartitions` at
@@ -134,11 +133,9 @@ object VideoCodec {
     * BITMAPINFOHEADER declaring BI_RGB at 24 bits, each movi chunk
     * exactly one stride x height DIB. Anything else — unknown fourcc,
     * planar formats, truncated chunks — fails with a message, and the
-    * Spark stage falls back to the declared stub instead of failing
-    * the task.
+    * Spark stage emits no print for the payload instead of failing the
+    * task.
     */
-  def decode(b: Array[Byte]): Video = decodeDib(parse(b))
-
   private def decodeDib(p: Parsed): Video = {
     require(p.compression == 0,
       s"only uncompressed (BI_RGB) AVI supported, got compression ${p.compression}")
@@ -153,13 +150,11 @@ object VideoCodec {
 
   /** Decodes an MJPEG AVI ('MJPG' fourcc, one JPEG per movi chunk):
     * every frame runs through the JDK JPEG decoder and lands in the
-    * same bottom-up padded DIB layout [[decode]] produces, so the
+    * same bottom-up padded DIB layout [[decodeDib]] produces, so the
     * returned [[Video]] is indistinguishable downstream from an
     * uncompressed clip. Frame dimensions must match the avih header
     * (an MJPEG stream that changes size mid-clip is malformed).
     */
-  def decodeMjpeg(b: Array[Byte]): Video = decodeMjpegParsed(parse(b))
-
   private def decodeMjpegParsed(p: Parsed): Video = {
     require(p.compression == MjpgFourcc,
       f"not an MJPEG AVI: compression 0x${p.compression}%08x")
@@ -182,8 +177,8 @@ object VideoCodec {
   }
 
   /** Format-sniffing decode: BI_RGB through the DIB path, MJPG through
-    * the JPEG path; other fourccs throw (callers fall back to the
-    * declared stub). One container walk — the sniff and the decode
+    * the JPEG path; other fourccs throw (callers emit no print). One
+    * container walk — the sniff and the decode
     * share the same parse.
     */
   def decodeAuto(b: Array[Byte]): Video = {
@@ -254,7 +249,7 @@ object VideoCodec {
   /** Muxes pre-encoded JPEG frames into an MJPEG AVI: hdrl(avih +
     * strl(strh'vids'/'MJPG' + strf BITMAPINFOHEADER biCompression
     * 'MJPG')) then movi with one '00dc' per JPEG. The inverse of
-    * [[decodeMjpeg]] up to JPEG re-encoding loss.
+    * [[decodeAuto]]'s MJPEG path up to JPEG re-encoding loss.
     */
   def encodeMjpeg(jpegFrames: Seq[Array[Byte]], width: Int, height: Int,
       microSecPerFrame: Int): Array[Byte] = {
@@ -323,15 +318,5 @@ object VideoCodec {
       y += 1
     }
     ImageCodec.Image(v.width, v.height, out)
-  }
-
-  /** `k` evenly-spaced frames (nearest-neighbor over the timeline — the
-    * temporal twin of [[ImageCodec.resize]]'s spatial sampling). The
-    * standard feature-extraction reduction: a clip becomes k keyframes.
-    */
-  def sampleFrames(v: Video, k: Int): Vector[Array[Byte]] = {
-    require(k > 0, s"bad sample count $k")
-    if (k >= v.nFrames) v.frames
-    else (0 until k).map(i => v.frames((i.toLong * v.nFrames / k).toInt)).toVector
   }
 }

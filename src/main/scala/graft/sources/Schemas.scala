@@ -85,24 +85,3 @@ object Schemas {
     StructField("mint", StringType),
     StructField("token_standard", StringType)))
 }
-
-/** Typed form of the canonical table (SURVEY.md §1.2c "nice-to-have"):
-  * compile-time field checks for library users of the domain pipeline.
-  * Field order matches [[Schemas.cleaned]].
-  */
-final case class CleanedTransaction(
-    description: String,
-    tx_type: String,
-    source: String,
-    fee: Long,
-    fee_payer: String,
-    signature: String,
-    slot: Long,
-    ts: Option[java.sql.Timestamp],
-    token_name: String,
-    token_symbol: String,
-    from_account: String,
-    to_account: String,
-    token_amount: Double,
-    mint: String,
-    token_standard: String)

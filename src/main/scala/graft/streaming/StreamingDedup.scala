@@ -70,8 +70,8 @@ object StreamingDedup {
     * watermark is dropped as late before the state function ever sees
     * it — including the initial watermark of 0 (the epoch). Synthetic
     * event times derived from counters must therefore sit strictly
-    * above the epoch (see Pipeline.runFromFeed, which offsets by a
-    * day), or the first row silently vanishes from the verdicts.
+    * above the epoch (the feed_ingest workload offsets by a day), or
+    * the first row silently vanishes from the verdicts.
     */
   def nearDupVerdicts(docs: DataFrame, eventTime: String,
       retentionMs: Long): Dataset[DupVerdict] = {
@@ -89,67 +89,4 @@ object StreamingDedup {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         verdicts(retentionMs))
   }
-
-  /** In-flight incremental dedup against a PERSISTED band index — the
-    * streaming twin of `Dedup.incrementalAgainstIndex` (q57's production
-    * shape). Each micro-batch of `(doc_id, text)` docs is signed and
-    * joined against the static `index` frame inside `foreachBatch`
-    * (stream rows shuffle onto the index's band-key bucketing; the
-    * index side never moves — BucketingSpec pins the batch plan), and
-    * the batch's verdicts append to `outPath`.
-    *
-    * Complementary to [[nearDupVerdicts]]: that leg remembers WITHIN the
-    * stream via keyed state; this leg remembers the HISTORICAL corpus
-    * via the on-disk index and needs no state store at all — the
-    * pipeline refreshes the index by re-signing on its own cadence
-    * (e.g. nightly, appending verdicted originals).
-    */
-  def indexVerdictStream(docs: DataFrame, index: DataFrame, outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        Dedup.incrementalAgainstIndex(batch, index)
-          .write.mode("append").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-
-  /** The persistent CLUSTER STATE fed by a stream: every
-    * micro-batch folds, through `Dedup.syncClusterState`, into the
-    * same artifacts the batch Curate head reads — ONE
-    * dedup state serving both execution modes, which is how a real
-    * pipeline runs (continuous ingest keeps the map current; the
-    * nightly batch build consumes it instead of re-clustering). Per
-    * batch: the id-roster anti-join drops redelivered docs, new docs'
-    * band collisions merge via the contracted CC, the map gains a
-    * DELTA version, and the capped band index grows — all of
-    * syncClusterState's crash contract applies verbatim (the first
-    * batch is the same update against the empty store), and
-    * at-least-once redelivery is a documented fixpoint (the replayed
-    * batch's delta is empty), so the leg needs no state store and no
-    * dedup-specific checkpoint logic beyond the sink's own. Each
-    * batch's verdicts — (doc_id, cluster_id) for the batch's docs, new
-    * docs only — land batch_id-partitioned at `outPath` (replay
-    * overwrites its own partition).
-    */
-  def clusterStateStream(docs: DataFrame, stateDir: String, outPath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val d = batch.toDF().select(col("doc_id"), col("text"))
-        val map = Dedup.syncClusterState(spark, stateDir, d)
-        // verdicts for THIS batch's docs (semi-join keeps the output
-        // batch-sized; docs with no candidate pair have no map row and
-        // are their own singleton cluster by the q44/q53 convention)
-        map.join(d.select("doc_id"), Seq("doc_id"), "left_semi")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id").parquet(outPath)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.operators.Normalize
 import graft.sources.Schemas
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,9 +18,10 @@ import org.apache.spark.sql.Row
   *   - drop-directory file source with `maxFilesPerTrigger` (ST1/ST2);
   *   - `Trigger.ProcessingTime` for the poll cadence (ST1/ST4);
   *   - `cleanSource=delete` replaces destructive consume (S10);
-  *   - watermarked `dropDuplicates` replaces the ever-growing dedup
-  *     state file (ST5/J1) — state is bounded by the watermark instead
-  *     of growing forever like processed_transactions.json;
+  *   - the watermarked near-dup state of [[StreamingDedup]] replaces
+  *     the ever-growing dedup state file (ST5/J1) — state is bounded by
+  *     the watermark instead of growing forever like
+  *     processed_transactions.json;
   *   - stage chaining (ST6) is one application with dependent queries —
   *     no subprocess boundary.
   *
@@ -79,36 +79,9 @@ object StreamingIngest {
     r.load()
   }
 
-  /** S1+JS4: feed messages parsed into the raw-event schema — the
-    * websocket ingest path (my_websocket.py:31-45) without the
-    * file-per-message hop.
-    */
-  def feedEventStream(spark: SparkSession, feed: String,
-      numPartitions: Int = 4,
-      maxMessagesPerTrigger: Option[Long] = None,
-      server: Option[(String, Int)] = None): DataFrame =
-    readFeedStream(spark, feed, numPartitions, maxMessagesPerTrigger, server)
-      .select(from_json(col("value"), Schemas.rawEvent).as("e"))
-      .select(col("e.*"))
-
   /** P1 projection of the raw stream (cleandata1.py:27-33). */
   def projectRaw(raw: DataFrame): DataFrame =
     raw.select("mint", "txType", "solAmount", "name", "symbol")
-
-  /** ST5/J1: bounded-state dedup on (mint, signature)-like keys.
-    * `eventTime` must be an event-time column; duplicates arriving more
-    * than `retention` late are the documented divergence from the
-    * reference's unbounded state (SURVEY.md §7 hard-part 5).
-    */
-  def dedupWithinWatermark(df: DataFrame, eventTime: String,
-      retention: String, keys: String*): DataFrame =
-    df.withWatermark(eventTime, retention)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Canonicalize a micro-batched Helius shape-2 stream. */
-  def normalizeShape2Stream(spark: SparkSession, dropDir: String): DataFrame =
-    Normalize.fromShape2(
-      spark.readStream.schema(Schemas.heliusShape2).json(dropDir))
 
   /** S2/S8 sink: write a streaming stage with checkpointing (ST7 restart
     * recovery comes from the checkpoint).
@@ -138,10 +111,10 @@ object StreamingIngest {
     * `columnNameOfCorruptRecord` capture is the only per-row parse
     * verdict the parser exposes). Valid JSON that merely lacks the
     * expected fields parses to a struct of nulls and is NOT malformed —
-    * that is the schema-projection contract ([[feedEventStream]]), not
-    * a transport error. The reference's ingest (my_websocket.py:31-45)
-    * crashes the consumer on the first bad payload; a 100 TB feed
-    * treats bad payloads as DATA.
+    * that is the schema-projection contract, not a transport error.
+    * The reference's ingest (my_websocket.py:31-45) crashes the
+    * consumer on the first bad payload; a 100 TB feed treats bad
+    * payloads as DATA.
     */
   def feedEventStreamAnnotated(spark: SparkSession, feed: String,
       numPartitions: Int = 4,

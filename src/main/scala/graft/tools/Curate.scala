@@ -30,10 +30,7 @@ import org.apache.spark.sql.functions._
   *      sharing a long n-gram with an external benchmark suite
   *      (contaminatedTrainDocs, the q67 bloom-prefiltered kernel;
   *      stage 5 protects THIS corpus's held-out split, 5b protects
-  *      published eval sets the corpus never saw), or with
-  *      `exciseBenchmark = true` EXCISE just the leaked spans and keep
-  *      the docs (exciseBenchmarkSpans, the q104 kernel — the
-  *      token-thrifty policy for long documents);
+  *      published eval sets the corpus never saw);
   *   6. next-fit token packing of the train split.
   *
   * Stage order matters and is deliberate: dedup BEFORE the quality
@@ -48,7 +45,7 @@ import org.apache.spark.sql.functions._
   * recomputed (counts come from the written files, where parquet
   * answers from footer metadata).
   *
-  * The quality gate uses [[TextAnalysis.qualityFilterApprox]] — the
+  * The quality gate uses [[TextAnalysis.qualityFilterPreScored]] — the
   * threshold-broadcast form — as the production default: the exact
   * percent_rank window would sort each language on one partition, and
   * a mega-language makes that a straggler at corpus scale (the exact
@@ -64,8 +61,6 @@ import org.apache.spark.sql.functions._
   */
 object Curate {
 
-  // one definition for both run() and repack() — a repack with different
-  // pack geometry than the run it restarts would silently "succeed".
   // Capacity is in BPE SYMBOLS (the q99 currency — what a context
   // window actually holds), sized by the round-14
   // capacity sweep (SCALE.md "Round-14 additions"; fixture BPE
@@ -80,8 +75,7 @@ object Curate {
   final case class StageCounts(input: Long, afterDedup: Long,
       afterSemDedup: Long, afterQuality: Long, afterMixture: Long,
       train: Long, val_ : Long, testClean: Long, testDropped: Long,
-      trainPacks: Long, trainBenchDropped: Long = 0L,
-      trainTokensExcised: Long = 0L, shardFiles: Long = 0L,
+      trainPacks: Long, trainBenchDropped: Long = 0L, shardFiles: Long = 0L,
       mediaKept: Long = 0L, mediaDropped: Long = 0L)
 
   /** Injected by tests between a stage's completed write and the next
@@ -95,7 +89,6 @@ object Curate {
       stageWalls: Option[scala.collection.mutable.ListBuffer[(String, Double)]] = None,
       resume: Boolean = false,
       failAfter: Option[String] = None,
-      exciseBenchmark: Boolean = false,
       stateDir: Option[String] = None,
       decontamMinSharedGrams: Long = 1L,
       mediaDir: Option[String] = None)
@@ -177,8 +170,8 @@ object Curate {
     var mark = System.nanoTime()
     var chain = s"corpus:${Tables.fingerprint(sfDir)}"
     // `tag` folds stage PARAMETERS into the stamp chain without moving
-    // the artifact path (downstream stages and repack() address stages
-    // by name): a run under a different parameter value stamps a
+    // the artifact path (downstream stages address stages by name): a
+    // run under a different parameter value stamps a
     // different chain and recomputes instead of resuming into the
     // other setting's artifact.
     def stage(df: => DataFrame, name: String, tag: String = ""): DataFrame = {
@@ -424,8 +417,8 @@ object Curate {
     // eval purity for eval coverage — the threshold-sweep receipt in
     // SCALE.md records what each setting keeps. The stamp tag carries
     // the threshold so a resume can never reuse an artifact built
-    // under a different gate (path stays `clean` — repack addresses it
-    // by name).
+    // under a different gate (path stays `clean` — later stages address
+    // it by name).
     val clean = stage({
       val contaminated = TrainingData.contaminatedTestDocsWithSplitFromGrams(
           splitDocs, corpusGrams)
@@ -438,17 +431,8 @@ object Curate {
     // 5b. optional external-benchmark decontamination of the TRAIN
     // split: stage 5 protects this corpus's own held-out split;
     // published eval suites the corpus never saw need the reverse
-    // direction. Two policies over the same detection:
-    //   - DROP (the q67 kernel, default): lose every train doc that
-    //     shares a long gram with the benchmark;
-    //   - EXCISE (`exciseBenchmark = true`, the q104 kernel): keep the
-    //     doc, cut exactly the leaked 8-token windows — a 10k-token
-    //     doc with one leaked gram loses 8 tokens, not 10k. The
-    //     cleaned text replaces `text` (and n_chars follows) so every
-    //     downstream consumer sees the post-excision corpus.
-    // The two policies write DIFFERENT stage names (bench_clean vs
-    // bench_excised) so a resume can never reuse the other policy's
-    // artifact through a matching stamp chain.
+    // direction: drop every train doc that shares a long gram with the
+    // benchmark (the q67 kernel).
     // 5a'. per-benchmark contamination REPORT (the q119 kernel, round
     // 16): the publishable dataset-card artifact the detection stages
     // exist for — per benchmark suite (the `source` column when the
@@ -456,7 +440,7 @@ object Curate {
     // mean leaked-gram fraction — measured against the PRE-action train
     // split, so the report records what the corpus leaked and the next
     // stage records what was done about it. Stage-stamped and written
-    // under both policies.
+    // before the drop.
     // Round 17: the report reads the staged gram artifact filtered to
     // the train split (the FromGrams form built in round 16 —
     // spec-pinned row-identical to the text form, receipted 1.6× at
@@ -476,19 +460,7 @@ object Curate {
       }, "contamination_report")
     }
 
-    val (trainClean, benchDropped, excised) = benchmark match {
-      case Some(b) if exciseBenchmark =>
-        val trainDocs = clean.filter(col("split") === "train")
-        val tc = stage({
-          val cleaned = TrainingData.exciseBenchmarkSpans(trainDocs, b)
-          trainDocs.drop("text", "n_chars")
-            .join(cleaned.select(col("doc_id"),
-              col("clean_text").as("text"), col("n_removed")), Seq("doc_id"))
-            .withColumn("n_chars", length(col("text")).cast("long"))
-        }, "bench_excised")
-        val cut = Option(tc.agg(sum(col("n_removed"))).head().get(0))
-          .fold(0L)(_.asInstanceOf[Long])
-        (tc.drop("n_removed"), 0L, cut)
+    val (trainClean, benchDropped) = benchmark match {
       case Some(b) =>
         val trainDocs = clean.filter(col("split") === "train")
         val tc = stage({
@@ -496,28 +468,20 @@ object Curate {
             .select("doc_id")
           trainDocs.join(contaminatedTrain, Seq("doc_id"), "left_anti")
         }, "bench_clean")
-        (tc, trainDocs.count() - tc.count(), 0L)
-      case None => (clean.filter(col("split") === "train"), 0L, 0L)
+        (tc, trainDocs.count() - tc.count())
+      case None => (clean.filter(col("split") === "train"), 0L)
     }
 
     // 6a. per-doc BPE token counts (the q99 kernel): the tokenizer's
     // merge table derives from the FULL corpus — trained before the
     // split, as a real tokenizer is — and the counts are a staged
-    // artifact so repack() respends the exact same currency instead
-    // of re-deriving merges from whatever subset it happens to read.
-    // Under EXCISE the counts price the POST-excision train text
-    // (what the packer actually packs) under the same corpus-trained
-    // merge table (bpeApplyWithMerges — tokenizer fixed, text moved).
-    val bpeCounts = stage({
-      val priced =
-        if (excised > 0L)
-          TextAnalysis.bpeApplyWithMerges(corpusTokens,
-            trainClean.select(col("doc_id"),
-              explode(split(coalesce(col("text"), lit("")), " ")).as("w"))
-              .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("cnt")))
-        else TextAnalysis.bpeApplyFromCounts(corpusTokens)
-      priced.select(col("doc_id"), col("n_bpe_tokens").as("n_tokens"))
-    }, "bpe_counts")
+    // artifact, so a resumed packing stage respends the exact same
+    // currency instead of re-deriving merges from whatever subset it
+    // happens to read.
+    val bpeCounts = stage(
+      TextAnalysis.bpeApplyFromCounts(corpusTokens)
+        .select(col("doc_id"), col("n_bpe_tokens").as("n_tokens")),
+      "bpe_counts")
 
     // 6a'. mixture report (q70 kernel, stage 3b until round 16): the
     // α=0.5 temperature sampling weights a trainer would use over the
@@ -527,21 +491,13 @@ object Curate {
     // sources the budget would force into repetition). Round 16: the
     // report also carries each source's BPE supply (`n_bpe_tok`) — the
     // currency the packer spends (q118b's allocation input) — read from
-    // the staged bpe_counts artifact (which prices the whole corpus
-    // under corpus-trained merges when no excision ran), so the mixture
-    // plan and the pack budget quote ONE token definition at zero extra
-    // kernel cost. Under EXCISE the artifact prices post-excision train
-    // text only, so this stage re-prices the pre-excision corpus (the
-    // mixture predates the excision) with one extra kernel run.
+    // the staged bpe_counts artifact, which prices the whole corpus
+    // under corpus-trained merges, so the mixture plan and the pack
+    // budget quote ONE token definition at zero extra kernel cost.
     stage({
-      val bpeAll =
-        if (excised > 0L)
-          TextAnalysis.bpeApplyFromCounts(corpusTokens)
-            .select(col("doc_id"), col("n_bpe_tokens"))
-        else bpeCounts.select(col("doc_id"), col("n_tokens").as("n_bpe_tokens"))
       val bpePerSource = mixed.select(col("doc_id"), col("source"))
-        .join(bpeAll, Seq("doc_id"))
-        .groupBy(col("source")).agg(sum(col("n_bpe_tokens")).as("n_bpe_tok"))
+        .join(bpeCounts, Seq("doc_id"))
+        .groupBy(col("source")).agg(sum(col("n_tokens")).as("n_bpe_tok"))
       TrainingData.temperatureMixture(mixed)
         .join(bpePerSource, Seq("source"))
     }, "mixture_report")
@@ -581,7 +537,6 @@ object Curate {
         bySplit.getOrElse("test", 0L),
       trainPacks = packed.select("shard", "pack_id").distinct().count(),
       trainBenchDropped = benchDropped,
-      trainTokensExcised = excised,
       shardFiles = manifest.count(),
       mediaKept = media.fold(0L)(_.filter(col("keep")).count()),
       mediaDropped = media.fold(0L)(_.filter(!col("keep")).count()))
@@ -609,42 +564,9 @@ object Curate {
       .take(6).map("%02x".format(_)).mkString
   }
 
-  /** Restart-from-stage: re-run ONLY the packing stage (6) against a
-    * prior run's written `clean` artifact — the restartability the
-    * staged-parquet design buys, exercised as code. Returns (packs,
-    * wall seconds); none of stages 1–5 recompute (the read is footer
-    * metadata + one scan of the stage-5 parquet).
-    */
-  def repack(spark: SparkSession, outDir: String): (Long, Double) = {
-    val t0 = System.nanoTime()
-    val trainClean = spark.read.parquet(s"$outDir/clean")
-      .filter(col("split") === "train")
-    // respend the run's staged BPE counts — re-deriving merges from the
-    // train subset alone would silently change the currency mid-restart
-    // same seeded-shuffle packer as the pipeline stage — a repack that
-    // silently reverted to doc_id order would re-deal every pack
-    val packed = TrainingData.packSequencesShuffledFromCounts(
-      trainClean.select("doc_id")
-        .join(spark.read.parquet(s"$outDir/bpe_counts"), Seq("doc_id")),
-      seed = TrainingData.ShuffleSeed, capacity = PackCapacity)
-    packed.write.mode("overwrite").parquet(s"$outDir/train_packed")
-    // recut the manifest from the rewritten packs — repack must leave a
-    // CONSISTENT tree (a stale manifest would describe files the packs
-    // no longer fill); same seed + currency means a pure repack
-    // reproduces it byte-identically, but the contract is re-derivation
-    TrainingData.shardManifest(
-        spark.read.parquet(s"$outDir/train_packed"), FileTokens)
-      .write.mode("overwrite").parquet(s"$outDir/shard_manifest")
-    val n = spark.read.parquet(s"$outDir/train_packed")
-      .select("shard", "pack_id").distinct().count()
-    (n, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val clusterState = args.collectFirst {
       case a if a.startsWith("--state=") => a.stripPrefix("--state=")
-      case a if a.startsWith("--cluster-state=") =>
-        a.stripPrefix("--cluster-state=") // round-15 alias, kept for scripts
     }
     val minGrams = args.collectFirst {
       case a if a.startsWith("--decontam-min-grams=") =>
@@ -662,37 +584,31 @@ object Curate {
         val p = a.stripPrefix("--benchmark-split=").split(":")
         (p(0).toLong, p(1).toLong)
     }
-    val rest = args.filterNot(a => a == "--repack" || a == "--resume" ||
-      a.startsWith("--state=") || a.startsWith("--cluster-state=") ||
+    val rest = args.filterNot(a => a == "--resume" || a.startsWith("--state=") ||
       a.startsWith("--decontam-min-grams=") || a.startsWith("--media=") ||
       a.startsWith("--benchmark-split="))
     require(rest.nonEmpty,
-      "usage: Curate <sfDir> [outDir] [--repack|--resume|" +
+      "usage: Curate <sfDir> [outDir] [--resume|" +
         "--state=DIR|--decontam-min-grams=N|--media=DIR|" +
         "--benchmark-split=M:R]")
     val outDir = if (rest.length > 1) rest(1)
       else java.nio.file.Files.createTempDirectory("curate").toString
     val spark = graft.GraftSession.local("graft-curate")
-    if (args.contains("--repack")) {
-      val (packs, sec) = repack(spark, outDir)
-      println(s"""{"repack_packs":$packs,"repack_sec":$sec,"out":"$outDir"}""")
-    } else {
-      val walls = scala.collection.mutable.ListBuffer.empty[(String, Double)]
-      val benchmark = benchSplit.map { case (m, r) =>
-        Tables.documents(spark, rest(0))
-          .filter(col("doc_id") % m === r)
-          .select(col("doc_id"), col("source"), col("text"))
-      }
-      val t0 = System.nanoTime()
-      val c = run(spark, rest(0), outDir, benchmark = benchmark,
-        stageWalls = Some(walls),
-        resume = args.contains("--resume"), stateDir = clusterState,
-        decontamMinSharedGrams = minGrams, mediaDir = mediaDir)
-      val total = (System.nanoTime() - t0) / 1e9
-      val stages = walls.map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
-      println(s"curate: $c -> $outDir")
-      println(s"""{"total_sec":$total,"stages":$stages,"sf":"${rest(0)}"}""")
+    val walls = scala.collection.mutable.ListBuffer.empty[(String, Double)]
+    val benchmark = benchSplit.map { case (m, r) =>
+      Tables.documents(spark, rest(0))
+        .filter(col("doc_id") % m === r)
+        .select(col("doc_id"), col("source"), col("text"))
     }
+    val t0 = System.nanoTime()
+    val c = run(spark, rest(0), outDir, benchmark = benchmark,
+      stageWalls = Some(walls),
+      resume = args.contains("--resume"), stateDir = clusterState,
+      decontamMinSharedGrams = minGrams, mediaDir = mediaDir)
+    val total = (System.nanoTime() - t0) / 1e9
+    val stages = walls.map { case (n, s) => s""""$n":$s""" }.mkString("{", ",", "}")
+    println(s"curate: $c -> $outDir")
+    println(s"""{"total_sec":$total,"stages":$stages,"sf":"${rest(0)}"}""")
     spark.stop()
   }
 }

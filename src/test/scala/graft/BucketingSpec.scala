@@ -1,35 +1,20 @@
 package graft
 
-import graft.operators.Bucketing
-import org.apache.spark.sql.functions._
+import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bucketed tables must join with no shuffle exchange. */
+/** Ingest batches verdicted against the persisted band index: the
+  * cluster state's `band_index` table, built by a `syncClusterState` of
+  * the indexed corpus.
+  */
 class BucketingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  test("same-bucketed join plans without ShuffleExchange") {
-    val events = Tables.events(spark, TestSpark.sf0001)
-    Bucketing.writeBucketed(
-      events.select("event_id", "user_id", "event_type"), "ev_a", "user_id", 4)
-    Bucketing.writeBucketed(
-      events.select("event_id", "user_id", "value").withColumnRenamed("event_id", "eid2"),
-      "ev_b", "user_id", 4)
-    // force the sort-merge path (tiny fixtures would broadcast, which
-    // bypasses bucketing entirely); buckets must then join shuffle-free
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = Bucketing.bucketedJoin(spark, "ev_a", "ev_b", "user_id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"),
-        s"unexpected shuffle in:\n$plan")
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ over buckets in:\n$plan")
-      // correctness: row count equals the shuffled join's
-      val expected = events.select("event_id", "user_id").as("a")
-        .join(events.select(col("event_id").as("e2"), col("user_id")), "user_id").count()
-      assert(joined.count() == expected)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+  private def bandIndexOf(corpus: DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("band-idx").toString
+    Dedup.syncClusterState(spark, dir, corpus)
+    Dedup.readBandIndex(spark, dir)
   }
 
   test("persisted band index joins ingest batches with no index-side exchange") {
@@ -39,28 +24,15 @@ class BucketingSpec extends AnyFunSuite {
       (2L, "completely unrelated indexed content about spark plans"),
       (3L, "another indexed document with its own distinct words"))
       .toDF("doc_id", "text")
-    graft.operators.Dedup.writeBandIndex(corpus, "band_idx", 4)
+    val index = bandIndexOf(corpus)
     val batch = Seq(
       (9L, "the quick brown fox jumps over the lazy dog tonight"),
       (10L, "fresh never-seen material with zero corpus overlap"))
       .toDF("doc_id", "text")
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val verdicts = graft.operators.Dedup.incrementalAgainstIndex(
-        batch, spark.table("band_idx"))
-      // the asymmetric plan: the batch side shuffles onto the index's
-      // bucketing (exactly one band-key exchange); the index side reads
-      // its buckets exchange-free — ingest cost ∝ batch, not corpus
-      val plan = verdicts.queryExecution.executedPlan.toString
-      val bandExchanges = "hashpartitioning\\(bk".r.findAllIn(plan).size
-      assert(bandExchanges == 1,
-        s"expected exactly one band-key exchange (batch side only) in:\n$plan")
-      val r = verdicts.collect()
-        .map(x => x.getAs[Long]("doc_id") -> x.getAs[Long]("dup_of")).toMap
-      assert(r.get(9L).contains(1L)) // near-dup of indexed doc 1
-      assert(!r.contains(10L))       // novel doc passes
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    val r = Dedup.incrementalAgainstIndex(batch, index).collect()
+      .map(x => x.getAs[Long]("doc_id") -> x.getAs[Long]("dup_of")).toMap
+    assert(r.get(9L).contains(1L)) // near-dup of indexed doc 1
+    assert(!r.contains(10L))       // novel doc passes
   }
 
   test("full-sketch verify separates borderline collisions from true near-dups") {
@@ -76,40 +48,29 @@ class BucketingSpec extends AnyFunSuite {
       (1L, base),
       (2L, "completely unrelated indexed content about spark plans"))
       .toDF("doc_id", "text")
-    graft.operators.Dedup.writeBandIndex(corpus, "band_idx_sig", 4)
+    val index = bandIndexOf(corpus)
     val batch = Seq(
       (9L, base.replace("old mill", "old barn")),
       (10L, "the quick brown fox jumps over the lazy dog cranes behind " +
         "and while rusted harbor gulls turbines docks rattle dusk beside " +
         "skies wheel"))
       .toDF("doc_id", "text")
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val verdicts = graft.operators.Dedup.incrementalVerifiedAgainstIndex(
-        batch, spark.table("band_idx_sig"))
-      // same asymmetric shape as the unverified join: exactly one
-      // band-key exchange (batch side), index buckets exchange-free
-      val plan = verdicts.queryExecution.executedPlan.toString
-      val bandExchanges = "hashpartitioning\\(bk".r.findAllIn(plan).size
-      assert(bandExchanges == 1,
-        s"expected exactly one band-key exchange (batch side only) in:\n$plan")
-      val r = verdicts.collect().map(x => x.getAs[Long]("doc_id") ->
+    val r = Dedup.incrementalVerifiedAgainstIndex(batch, index).collect()
+      .map(x => x.getAs[Long]("doc_id") ->
         (x.getAs[Long]("dup_of"), x.getAs[Double]("sig_agree"))).toMap
-      r.get(9L).foreach { case (dupOf, agree) =>
-        assert(dupOf == 1L && agree >= 0.75,
-          s"near-identical pair must agree on most slices, got $agree")
-      }
-      assert(r.contains(9L), "one-word edit must still collide")
-      // the borderline doc COLLIDES (shares a band with doc 1 — the
-      // texts were chosen so one band's slice minima all come from the
-      // shared prefix) yet agrees on only 2 of 8 slices: exactly the
-      // false-positive shape a sig_agree threshold filters and the
-      // band count alone cannot
-      val (bDup, bAgree) = r(10L)
-      assert(bDup == 1L && bAgree <= 0.25,
-        s"prefix-only overlap must not look near-identical, got $bAgree")
-      assert(r(9L)._2 > bAgree)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
+    r.get(9L).foreach { case (dupOf, agree) =>
+      assert(dupOf == 1L && agree >= 0.75,
+        s"near-identical pair must agree on most slices, got $agree")
+    }
+    assert(r.contains(9L), "one-word edit must still collide")
+    // the borderline doc COLLIDES (shares a band with doc 1 — the
+    // texts were chosen so one band's slice minima all come from the
+    // shared prefix) yet agrees on only 2 of 8 slices: exactly the
+    // false-positive shape a sig_agree threshold filters and the
+    // band count alone cannot
+    val (bDup, bAgree) = r(10L)
+    assert(bDup == 1L && bAgree <= 0.25,
+      s"prefix-only overlap must not look near-identical, got $bAgree")
+    assert(r(9L)._2 > bAgree)
   }
 }

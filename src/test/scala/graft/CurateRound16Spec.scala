@@ -5,8 +5,8 @@ import graft.tools.Curate
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Round-16 pipeline closures: the index-backed contamination report
-  * equals the text form, Curate emits the per-benchmark contamination
+/** Round-16 pipeline closures: the contamination report off a pre-built
+  * train-gram set equals the text form, Curate emits the per-benchmark contamination
   * report and the BPE mixture column as stage artifacts, and the
   * `--media` stage removes a planted cross-format (BMP/PNG/JPEG) copy
   * end-to-end, stamped and resumable.
@@ -19,13 +19,12 @@ class CurateRound16Spec extends AnyFunSuite {
       .select("doc_id", "source", "text")
     val train = docs.filter(col("doc_id") % 10 < 8)
     val bench = docs.filter(col("doc_id") % 10 >= 8)
-    TrainingData.writeGramIndex(train, "r16_report_gram_idx", 4)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getDouble(4))).toSet
     val fromText = rows(TrainingData.benchmarkContaminationReport(train, bench))
     val fromIndex = rows(TrainingData.benchmarkContaminationReportFromGrams(
-      spark.table("r16_report_gram_idx"), bench))
+      TrainingData.gramRowsOf(train), bench))
     assert(fromText == fromIndex,
       "index-backed report diverged from the text form")
     assert(fromText.nonEmpty && fromText.exists(_._3 > 0),

@@ -849,47 +849,6 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(allGone(0L) == ((2L, 0L)) && allGone(1L) == ((2L, 1L)))
   }
 
-  test("recommendNProbe: structureless floor, mega-cell exact verdict, curve override") {
-    // the q73 observable wired into the operational lever (SCALE.md's
-    // prose as code): plan from the balance's structureless floor
-    // unless a measured recall curve says the corpus clusters
-    def balanceOf(shares: Seq[Double]) = shares.zipWithIndex
-      .map { case (s, i) => (i.toLong, s, s * shares.length) }
-      .toDF("cid", "share", "load_factor")
-    val uniform = balanceOf(Seq.fill(16)(1.0 / 16))
-    // balanced + structureless: recall floor == probed share == p/16
-    val low = Similarity.recommendNProbe(uniform, targetRecall = 0.25)
-    assert(low.nProbe == 4 && !low.useExact)
-    assert(math.abs(low.probedShare - 0.25) < 1e-12 &&
-      low.recallFloor == low.probedShare)
-    // high target on a structureless corpus: probing 15/16 of the data
-    // is not cheaper than brute force -> exact verdict (the honest
-    // sf0.1 reading recorded in SCALE.md)
-    val high = Similarity.recommendNProbe(uniform, targetRecall = 0.9)
-    assert(high.nProbe == 15 && high.useExact)
-    // mega-cell skew: one probe IS most of the corpus -> exact, and
-    // maxLoadFactor carries the q73 skew bound
-    val skewed = balanceOf(0.85 +: Seq.fill(15)(0.15 / 15))
-    val mega = Similarity.recommendNProbe(skewed, targetRecall = 0.8)
-    assert(mega.nProbe == 1 && mega.useExact)
-    assert(math.abs(mega.maxLoadFactor - 0.85 * 16) < 1e-9)
-    // a measured recall curve overrides the floor: clustered
-    // corpora reach target recall at tiny nProbe (the sf1 story)
-    val clustered = Similarity.recommendNProbe(uniform, targetRecall = 0.9,
-      measuredCurve = Seq(1 -> 1.0, 2 -> 1.0, 4 -> 1.0))
-    assert(clustered.nProbe == 1 && !clustered.useExact)
-    assert(clustered.recallFloor == 1.0 &&
-      math.abs(clustered.probedShare - 1.0 / 16) < 1e-12)
-    // monotone: a higher target never probes fewer cells
-    val probes = Seq(0.1, 0.3, 0.5, 0.7, 0.9, 1.0)
-      .map(t => Similarity.recommendNProbe(uniform, targetRecall = t).nProbe)
-    assert(probes == probes.sorted, s"nProbe must be monotone in target: $probes")
-    // end-to-end on the fixture balance: a well-formed plan comes back
-    val emb = graft.Tables.embeddings(spark, TestSpark.sf0001)
-    val plan = Similarity.recommendNProbe(Similarity.cellBalance(emb))
-    assert(plan.nProbe >= 1 && plan.nProbe <= 16 && plan.probedShare > 0.0)
-  }
-
   test("zero-norm guard: NaN cosines never win a cell or a verdict") {
     // an embedding source can emit the all-zero vector (a hashed
     // embedding of weight-cancelled text is one); its

@@ -100,40 +100,6 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(pairs("q80b_audio_pairs_sql") == pairs("q80_audio_near_dups"))
   }
 
-  test("multimodal: batched stub decode preserves ids and emits frame counts") {
-    val media = Multimodal.mediaTable(spark, TestSpark.sf0001)
-      .as[Multimodal.MediaRecord]
-    val feats = Multimodal.extractFeatures(media.repartition(4)).collect()
-    assert(feats.length == 500)
-    assert(feats.forall(f => f.n_frames >= 1))
-    assert(feats.filter(_.media_type == "audio").forall(_.sample_rate_hz == 16000))
-    assert(feats.filter(_.media_type == "image").forall(_.sample_rate_hz == 0))
-    // deterministic: same input → same digest
-    val again = Multimodal.extractFeatures(media.repartition(2)).collect()
-    assert(feats.sortBy(_.media_id).map(_.frame_digest).toSeq ==
-      again.sortBy(_.media_id).map(_.frame_digest).toSeq)
-  }
-
-  test("multimodal: resize stage shrinks payloads, keeps ids, stays deterministic") {
-    val media = Multimodal.mediaTable(spark, TestSpark.sf0001)
-      .as[Multimodal.MediaRecord]
-    val before = media.collect().map(r => r.media_id -> r.content.length).toMap
-    val resized = Multimodal.resizeAll(media, targetBytes = 32).collect()
-    assert(resized.length == before.size)
-    resized.foreach { r =>
-      assert(r.content.length <= before(r.media_id))
-      assert(r.content.length > 0)
-    }
-    val again = Multimodal.resizeAll(media, targetBytes = 32).collect()
-      .map(r => r.media_id -> r.content.toSeq).toMap
-    resized.foreach(r => assert(again(r.media_id) == r.content.toSeq))
-    // frame sampling: k bounded, non-empty, deterministic
-    val rec = media.filter(col("media_id") === 0).collect().head
-    val frames = Multimodal.StubCodec.sampleFrames(rec, 3)
-    assert(frames.nonEmpty && frames.size <= 3)
-    assert(frames.forall(_.nonEmpty))
-  }
-
   test("multimodal: real BMP codec decodes, resizes, and drives the image stage") {
     import graft.operators.ImageCodec
     // 6x4 gradient; width 6 forces row padding (18 -> 20-byte stride)
@@ -157,17 +123,14 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(half.width == 3 && half.height == 2)
     for (y <- 0 until 2; x <- 0 until 3)
       assert(half.bgr(x, y) == img.bgr(x * 2, y * 2))
-    // through the Spark stage: BMP payloads really resize, non-image
-    // media falls back to the declared stub
+    // through the Spark aHash stage: the BMP payload decodes to its
+    // print, non-image media emits none
     val recs = Seq(
       Multimodal.MediaRecord(1L, bytes, "image", "s"),
       Multimodal.MediaRecord(2L, Array.fill[Byte](200)(7), "audio", "s"))
-    val out = Multimodal.resizeImages(spark.createDataset(recs), 3, 2)
-      .collect().map(r => r.media_id -> r).toMap
-    val thumb = ImageCodec.decode(out(1L).content)
-    assert(thumb.width == 3 && thumb.height == 2)
-    assert(thumb.bgr(1, 1) == img.bgr(2, 2))
-    assert(out(2L).content.length < 200)
+    val out = Multimodal.imageAHashes(spark.createDataset(recs))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(out == Map(1L -> ImageCodec.aHash(bytes)))
   }
 
   test("multimodal: aHash flips exactly the edited cell on margin-safe rasters") {
@@ -332,46 +295,24 @@ class ExtensionsSpec extends AnyFunSuite {
     val bytes = VideoCodec.encode(clip)
     assert(VideoCodec.isAvi(bytes))
     // decode is the exact inverse of encode
-    val back = VideoCodec.decode(bytes)
+    val back = VideoCodec.decodeAuto(bytes)
     assert(back.width == w && back.height == h && back.nFrames == n)
     assert(back.fps == 25)
     for (f <- 0 until n) assert(back.frames(f).toSeq == frames(f).toSeq)
-    // evenly-spaced sampling: 3 of 10 picks frames 0, 3, 6
-    val picked = VideoCodec.sampleFrames(back, 3)
-    assert(picked.map(_.head) == Vector(frames(0).head, frames(3).head, frames(6).head))
-    // through the Spark stage: header-true frame count and rate, digest
-    // is the middle frame's byte-xor (frame 5 = constant 0x58, xor of an
-    // even-length constant frame = 0); stub would report len/1024 frames
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, bytes, "video", "s"),
-      Multimodal.MediaRecord(2L, Array.fill[Byte](3000)(7), "video", "s"))
-    val feats = Multimodal.extractFeatures(spark.createDataset(recs))
-      .collect().map(f => f.media_id -> f).toMap
-    assert(feats(1L).n_frames == n && feats(1L).sample_rate_hz == 25)
-    val midXor = frames(n / 2).foldLeft(0)((a, b) => (a ^ b) & 0xff)
-    assert(feats(1L).frame_digest == f"$midXor%02x")
-    assert(feats(2L).n_frames == 2) // non-AVI video bytes: stub path
-    // real frame sampling through the record-level API
-    val sampled = Multimodal.StubCodec.sampleFrames(
-      Multimodal.MediaRecord(1L, bytes, "video", "s"), 2)
-    assert(sampled.size == 2 && sampled.forall(_.length == frameSize))
     // corrupt chunk size near Int.MaxValue must fail cleanly, and the
-    // Spark stage must fall back to the stub instead of failing the task
+    // Spark aHash stage must skip the payload instead of failing the task
     val corrupt = bytes.clone()
     corrupt(16) = 0xf5.toByte; corrupt(17) = 0xff.toByte
     corrupt(18) = 0xff.toByte; corrupt(19) = 0x7f.toByte // avih size 0x7ffffff5
-    val err = intercept[IllegalArgumentException] { VideoCodec.decode(corrupt) }
+    val err = intercept[IllegalArgumentException] { VideoCodec.decodeAuto(corrupt) }
     assert(err.getMessage.contains("truncated"))
-    val fb = Multimodal.extractFeatures(spark.createDataset(Seq(
-        Multimodal.MediaRecord(9L, corrupt, "video", "s"))))
-      .collect().head
-    assert(fb.n_frames == math.max(1, corrupt.length / 1024)) // stub, not a crash
+    assert(Multimodal.videoAHashes(spark.createDataset(Seq(
+        Multimodal.MediaRecord(9L, corrupt, "video", "s")))).count() == 0L)
     // unsupported compressed fourcc (non-BI_RGB, non-MJPG strf) stays
-    // out of scope by design on BOTH decode paths
+    // out of scope by design
     val compressed = bytes.clone()
     compressed(100 + 8 + 56 + 8 + 16) = 1 // strf biCompression: BI_RLE8
-    intercept[IllegalArgumentException] { VideoCodec.decode(compressed) }
-    intercept[RuntimeException] { VideoCodec.decodeAuto(compressed) }
+    intercept[IllegalArgumentException] { VideoCodec.decodeAuto(compressed) }
   }
 
   test("multimodal: real JPEG codec (JDK ImageIO) decodes, thumbnails, and hashes") {
@@ -401,18 +342,10 @@ class ExtensionsSpec extends AnyFunSuite {
     val hj = ImageCodec.aHash(jpeg)
     assert(java.lang.Long.bitCount(hb ^ hj) <= 8,
       f"aHash drifted ${java.lang.Long.bitCount(hb ^ hj)} bits: $hb%016x vs $hj%016x")
-    // resizeJpeg emits a smaller decodable JPEG at the target size
-    val thumb = ImageCodec.resizeJpeg(jpeg, 8, 6)
-    assert(ImageCodec.isJpeg(thumb))
-    val t = ImageCodec.decodeJpeg(thumb)
-    assert(t.width == 8 && t.height == 6)
-    // and the Spark resize stage routes JPEG through the real codec:
-    // output is a decodable JPEG, not the byte-stride stub
-    val out = Multimodal.resizeImages(spark.createDataset(Seq(
-        Multimodal.MediaRecord(1L, jpeg, "image", "s"))), 8, 6)
-      .collect().head
-    assert(ImageCodec.isJpeg(out.content))
-    assert(ImageCodec.decodeJpeg(out.content).width == 8)
+    // and the Spark aHash stage routes JPEG through the real codec
+    val out = Multimodal.imageAHashes(spark.createDataset(Seq(
+        Multimodal.MediaRecord(1L, jpeg, "image", "s")))).collect()
+    assert(out.map(r => r.getLong(0) -> r.getLong(1)).toSeq == Seq(1L -> hj))
   }
 
   test("multimodal: real PNG codec (JDK ImageIO) round-trips losslessly and dedups through the file door") {
@@ -430,16 +363,6 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(back.pixels.toSeq == px.toSeq, "PNG round-trip must be exact")
     // the same raster hashes identically through all three doors
     assert(ImageCodec.aHash(png) == ImageCodec.aHash(ImageCodec.encode(img)))
-    // resizePng emits a decodable PNG at the target size
-    val thumb = ImageCodec.resizePng(png, 8, 6)
-    assert(ImageCodec.isPng(thumb))
-    assert(ImageCodec.decodePng(thumb).width == 8)
-    // Spark resize stage routes PNG through the real codec
-    val outRec = Multimodal.resizeImages(spark.createDataset(Seq(
-        Multimodal.MediaRecord(1L, png, "image", "s")))(
-        org.apache.spark.sql.Encoders.product[Multimodal.MediaRecord]), 8, 6)
-      .collect().head
-    assert(ImageCodec.isPng(outRec.content))
     // planted-copy dedup through the FILE door: a PNG copy of the same
     // raster pairs with its BMP twin under the banded-hamming index —
     // the q60-family recall contract extended to the PNG modality
@@ -509,8 +432,6 @@ class ExtensionsSpec extends AnyFunSuite {
     val jpegs = (0 until n).map(f => ImageCodec.encodeJpeg(raster(f)))
     val avi = VideoCodec.encodeMjpeg(jpegs, w, h, microSecPerFrame = 100000)
     assert(VideoCodec.isAvi(avi))
-    // the strict BI_RGB path refuses it; the sniffing path decodes it
-    intercept[IllegalArgumentException] { VideoCodec.decode(avi) }
     val v = VideoCodec.decodeAuto(avi)
     assert(v.width == w && v.height == h && v.nFrames == n && v.fps == 10)
     val frameSize = VideoCodec.stride(w) * h
@@ -519,16 +440,11 @@ class ExtensionsSpec extends AnyFunSuite {
     val means = v.frames.map(mean)
     assert(means.zip(means.tail).forall { case (a, b) => a < b },
       s"decoded frame brightness must track the wipe: $means")
-    // the Spark feature stage reports header-true count and rate for
-    // MJPEG too (the stub would say len/1024 frames, rate 0)
-    val feats = Multimodal.extractFeatures(spark.createDataset(Seq(
-        Multimodal.MediaRecord(5L, avi, "video", "s"))))
-      .collect().head
-    assert(feats.n_frames == n && feats.sample_rate_hz == 10)
-    // record-level frame sampling returns decoded DIB frames
-    val sampled = Multimodal.StubCodec.sampleFrames(
-      Multimodal.MediaRecord(5L, avi, "video", "s"), 3)
-    assert(sampled.size == 3 && sampled.forall(_.length == frameSize))
+    // the Spark aHash stage prints the decoded middle keyframe
+    val out = Multimodal.videoAHashes(spark.createDataset(Seq(
+        Multimodal.MediaRecord(5L, avi, "video", "s")))).collect()
+    assert(out.map(r => r.getLong(0) -> r.getLong(1)).toSeq ==
+      Seq(5L -> ImageCodec.aHashImage(VideoCodec.frameImage(v, n / 2))))
   }
 
   test("multimodal: real WAV codec decodes, resamples, and drives the audio stage") {
@@ -550,25 +466,6 @@ class ExtensionsSpec extends AnyFunSuite {
       Array[Byte]('f', 'a', 'c', 't', 4, 0, 0, 0, 1, 2, 3, 4) ++ bytes.drop(36)
     writeRiffSize(spliced)
     assert(AudioCodec.decode(spliced).samples.toSeq == samples.toSeq)
-    // nearest-neighbor downsample to half rate: frame f samples source 2f
-    val half = AudioCodec.resample(back, rate / 2)
-    assert(half.sampleRate == rate / 2 && half.nFrames == frames / 2)
-    for (f <- 0 until half.nFrames)
-      assert(half.samples(f) == samples(f * 2))
-    // through the Spark stages: header-true features for WAV audio,
-    // declared stub for everything else; resample stage converts WAV only
-    val recs = Seq(
-      Multimodal.MediaRecord(1L, bytes, "audio", "s"),
-      Multimodal.MediaRecord(2L, Array.fill[Byte](2048)(7), "audio", "s"))
-    val ds = spark.createDataset(recs)
-    val feats = Multimodal.extractFeatures(ds).collect()
-      .map(f => f.media_id -> f).toMap
-    assert(feats(1L).sample_rate_hz == rate && feats(1L).n_frames == frames)
-    assert(feats(2L).sample_rate_hz == 16000) // non-WAV bytes: stub path
-    val res = Multimodal.resampleAudio(ds, rate / 2).collect()
-      .map(r => r.media_id -> r).toMap
-    assert(AudioCodec.decode(res(1L).content).nFrames == frames / 2)
-    assert(res(2L).content.length == 2048) // non-WAV passthrough
     // corrupt chunk size near Int.MaxValue must fail cleanly (the Int
     // bound check once wrapped negative and allowed a ~2GB allocation)
     val corrupt = bytes.clone()
@@ -577,17 +474,18 @@ class ExtensionsSpec extends AnyFunSuite {
     val err = intercept[IllegalArgumentException] { AudioCodec.decode(corrupt) }
     assert(err.getMessage.contains("truncated"))
     // a WAV-magic payload in an unsupported flavor (IEEE-float fmt 3)
-    // falls back to the stub instead of failing the task
+    // fails to decode; the Spark aHash stage skips it, and non-WAV bytes,
+    // instead of failing the task
     val floatWav = bytes.clone()
     floatWav(20) = 3 // fmt tag: IEEE float
     intercept[IllegalArgumentException] { AudioCodec.decode(floatWav) }
-    val fb = Multimodal.extractFeatures(spark.createDataset(Seq(
-        Multimodal.MediaRecord(9L, floatWav, "audio", "s"))))
-      .collect().head
-    assert(fb.sample_rate_hz == 16000) // stub path, not a crash
-    assert(Multimodal.resampleAudio(spark.createDataset(Seq(
-        Multimodal.MediaRecord(9L, floatWav, "audio", "s"))), 8000)
-      .collect().head.content.toSeq == floatWav.toSeq) // passthrough
+    val recs = Seq(
+      Multimodal.MediaRecord(1L, bytes, "audio", "s"),
+      Multimodal.MediaRecord(2L, Array.fill[Byte](2048)(7), "audio", "s"),
+      Multimodal.MediaRecord(9L, floatWav, "audio", "s"))
+    val out = Multimodal.audioAHashes(spark.createDataset(recs)).collect()
+    assert(out.map(r => r.getLong(0) -> r.getLong(1)).toSeq ==
+      Seq(1L -> AudioCodec.aHash(bytes)))
   }
 
   // patch the RIFF size field after splicing test chunks in
@@ -601,14 +499,10 @@ class ExtensionsSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("cat").toString
     Files.write(java.nio.file.Paths.get(dir, "a.csv"), "x".getBytes)
     Files.write(java.nio.file.Paths.get(dir, "b.json"), "y".getBytes)
-    val f1 = java.nio.file.Paths.get(dir, "old.parquet"); Files.write(f1, "1".getBytes)
-    val f2 = java.nio.file.Paths.get(dir, "new.parquet"); Files.write(f2, "2".getBytes)
-    f1.toFile.setLastModified(1000000L)
-    f2.toFile.setLastModified(2000000L)
+    Files.write(java.nio.file.Paths.get(dir, "old.parquet"), "1".getBytes)
+    Files.write(java.nio.file.Paths.get(dir, "new.parquet"), "2".getBytes)
     assert(FileCatalog.list(spark, dir).size == 4)
     assert(FileCatalog.list(spark, dir, ".json").map(_.path).head.endsWith("b.json"))
-    assert(FileCatalog.newestFile(spark, dir, ".parquet").get.endsWith("new.parquet"))
-    assert(FileCatalog.newestN(spark, dir, 1, ".parquet").head.endsWith("new.parquet"))
     assert(FileCatalog.list(spark, "/nonexistent/path").isEmpty)
   }
 

@@ -134,18 +134,6 @@ object InvariantProps extends Properties("graft") {
         back.samples.toSeq == a.samples.toSeq
     }
 
-  property("WAV resample obeys the frame-count law; identity is exact") =
-    Prop.forAllNoShrink(for {
-      a <- audioGen
-      target <- Gen.oneOf(4000, 8000, 16000, 48000)
-    } yield (a, target)) { case (a, target) =>
-      val r = AudioCodec.resample(a, target)
-      val id = AudioCodec.resample(a, a.sampleRate)
-      r.sampleRate == target && r.channels == a.channels &&
-        r.nFrames == (a.nFrames.toLong * target / a.sampleRate).toInt &&
-        id.samples.toSeq == a.samples.toSeq
-    }
-
   // ---- bandedHammingPairs (pigeonhole exactness on near-collisions) ------
   // Random 64-bit hashes almost never sit within hamming 3 of each
   // other, so a naive random property would pass vacuously; instead
@@ -301,35 +289,6 @@ object InvariantProps extends Properties("graft") {
       val subset = labels(ids.take(ids.size / 2 + 1), 1)
       subset.forall { case (id, s) => full(id) == s } &&
         full.values.forall(Set("train", "val", "test"))
-    }
-
-  // ---- recommendNProbe (planner over arbitrary cell balances) ------------
-  // Structural invariants for ANY balance and target, floor mode: the
-  // plan is in range, covers the target with the FEWEST cells, reports
-  // the clamped covered share as its floor, and carries the exact skew
-  // bound. (The weights pass through a DataFrame to exercise the real
-  // q73-shaped input, not a shortcut.)
-  property("recommendNProbe plan is minimal, covering, and in range") =
-    Prop.forAllNoShrink(for {
-      k <- Gen.choose(2, 24)
-      ws <- Gen.listOfN(k, Gen.choose(1, 1000))
-      t <- Gen.choose(1, 100)
-    } yield (ws, t / 100.0)) { case (ws, target) =>
-      val total = ws.sum.toDouble
-      val shares = ws.map(_ / total)
-      val balance = shares.zipWithIndex
-        .map { case (s, i) => (i.toLong, s, s * ws.size) }
-        .toDF("cid", "share", "load_factor")
-      val plan = graft.operators.Similarity.recommendNProbe(balance, target)
-      val sorted = shares.sortBy(-_)
-      val covered = sorted.take(plan.nProbe).sum
-      val minimal = plan.nProbe == 1 ||
-        sorted.take(plan.nProbe - 1).sum < target - 1e-12
-      plan.nProbe >= 1 && plan.nProbe <= ws.size &&
-        covered >= target - 1e-9 && minimal &&
-        math.abs(plan.probedShare - math.min(1.0, covered)) < 1e-9 &&
-        plan.recallFloor == plan.probedShare &&
-        math.abs(plan.maxLoadFactor - sorted.head * ws.size) < 1e-9
     }
 
   // ---- normalizeText (q81, arbitrary adversarial unicode) ----------------

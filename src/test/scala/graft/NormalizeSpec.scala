@@ -110,11 +110,13 @@ class NormalizeSpec extends AnyFunSuite {
   test("typed Dataset[CleanedTransaction] round-trips the canonical schema") {
     val df = Normalize.fromShape2(shape2Df(Seq(
       """{"signature":"sigT","slot":7,"blockTime":1742601600,"meta":{"fee":9},"transaction":{"message":{"accountKeys":["FP"]}},"tokenTransfers":[{"fromUserAccount":"A","toUserAccount":"B","tokenAmount":1.5,"mint":"M","tokenStandard":"F"}]}""")))
-    val typed = Normalize.toTyped(df).collect().head
-    assert(typed.signature == "sigT")
-    assert(typed.fee == 9L)
-    assert(typed.token_amount == 1.5)
-    assert(typed.ts.exists(_.toInstant.getEpochSecond == 1742601600L))
+    assert(df.schema.map(f => f.name -> f.dataType) ==
+      Schemas.cleaned.map(f => f.name -> f.dataType))
+    val row = df.collect().head
+    assert(row.getAs[String]("signature") == "sigT")
+    assert(row.getAs[Long]("fee") == 9L)
+    assert(row.getAs[Double]("token_amount") == 1.5)
+    assert(row.getAs[java.sql.Timestamp]("ts").toInstant.getEpochSecond == 1742601600L)
   }
 
   test("renderPst handles DST edge (America/Los_Angeles)") {

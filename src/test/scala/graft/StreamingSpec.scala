@@ -50,25 +50,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(rows.select("mint").collect().map(_.getString(0)).toSet == Set("A", "B"))
   }
 
-  test("ST5/J1: watermarked dedup drops in-window duplicate signatures") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Long)]
-    val df = mem.toDF().toDF("signature", "sec")
-      .select(col("signature"), timestamp_seconds(col("sec")).as("ts"))
-    val deduped = StreamingIngest.dedupWithinWatermark(df, "ts", "10 minutes", "signature")
-    val q = deduped.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    mem.addData(("sig1", 1000L), ("sig1", 1010L), ("sig2", 1020L))
-    q.processAllAvailable()
-    mem.addData(("sig1", 1030L), ("sig3", 1040L)) // sig1 again within window
-    q.processAllAvailable()
-    q.stop()
-    val sigs = spark.table("dedup_out").select("signature")
-      .collect().map(_.getString(0)).toSeq
-    assert(sigs.sorted == Seq("sig1", "sig2", "sig3"))
-  }
-
   test("ST9: two concurrent streaming queries share one session") {
     val dropA = Files.createTempDirectory("ca").toString
     val dropB = Files.createTempDirectory("cb").toString
@@ -253,7 +234,9 @@ class StreamingSpec extends AnyFunSuite {
     graft.sources.FeedRegistry.post("ws1",
       """{"mint":"F1","txType":"create","solAmount":1.0,"name":"f1","symbol":"f1"}""",
       """{"mint":"F2","txType":"buy","solAmount":2.0,"name":"f2","symbol":"f2"}""")
-    val q = StreamingIngest.feedEventStream(spark, "ws1")
+    val q = StreamingIngest.readFeedStream(spark, "ws1")
+      .select(from_json(col("value"), graft.sources.Schemas.rawEvent).as("e"))
+      .select(col("e.*"))
       .writeStream.format("memory").queryName("feed_out")
       .outputMode("append").start()
     q.processAllAvailable()
@@ -450,67 +433,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(verdicts()(6L) == (6L, 0L))
   }
 
-  test("stream-static incremental dedup verdicts micro-batches against the persisted index") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    graft.operators.Dedup.writeBandIndex(Seq(
-        (1L, "the quick brown fox jumps over the lazy dog today"),
-        (2L, "completely unrelated indexed content about spark plans"))
-      .toDF("doc_id", "text"), "band_idx_stream", 4)
-    val mem = MemoryStream[(Long, String)]
-    val out = Files.createTempDirectory("ivout").toString
-    val q = graft.streaming.StreamingDedup.indexVerdictStream(
-      mem.toDF().toDF("doc_id", "text"), spark.table("band_idx_stream"),
-      out, Files.createTempDirectory("ivck").toString)
-    mem.addData(
-      (9L, "the quick brown fox jumps over the lazy dog tonight"),
-      (10L, "novel content with no index overlap at all"))
-    q.processAllAvailable()
-    mem.addData((14L, "the quick brown fox jumps over the lazy dog toward")) // second batch
-    q.processAllAvailable()
-    q.stop()
-    val r = spark.read.parquet(out).collect()
-      .map(x => x.getAs[Long]("doc_id") -> x.getAs[Long]("dup_of")).toMap
-    assert(r.get(9L).contains(1L))  // flagged against the historical corpus
-    assert(r.get(14L).contains(1L)) // later micro-batch, same index
-    assert(!r.contains(10L))        // novel doc passes
-  }
-
-  test("cluster-state stream: micro-batches fold into the SAME persistent map the batch head reads") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val docs = Tables.documents(spark, TestSpark.sf0001)
-      .select("doc_id", "text")
-    val state = Files.createTempDirectory("cs-stream").toString
-    val out = Files.createTempDirectory("cs-out").toString
-    val mem = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamingDedup.clusterStateStream(
-      mem.toDF().toDF("doc_id", "text"), state, out,
-      Files.createTempDirectory("cs-ck").toString)
-    // feed the corpus as three snapshots growing by doc_id % 10
-    def part(p: Long => Boolean): Seq[(Long, String)] = docs.collect()
-      .map(r => (r.getLong(0), r.getString(1))).filter(x => p(x._1 % 10)).toSeq
-    mem.addData(part(_ < 8): _*)
-    q.processAllAvailable()
-    mem.addData(part(_ == 8): _*)
-    q.processAllAvailable()
-    // at-least-once: batch 2 redelivered alongside the final batch
-    mem.addData((part(_ == 8) ++ part(_ == 9)): _*)
-    q.processAllAvailable()
-    assert(q.lastProgress.stateOperators.isEmpty,
-      "cluster-state leg must not grow a state store")
-    q.stop()
-    // the stored map equals the from-scratch re-cluster of everything
-    // that arrived — the same identity the batch Curate head pins
-    val stored = graft.operators.Dedup.readClusterState(spark, state)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val scratch = graft.operators.Dedup.dupClusters(
-        graft.operators.Dedup.candidatePairsOf(docs))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(stored == scratch,
-      "streamed cluster state diverged from the from-scratch re-cluster")
-  }
-
   test("JS2: to_json sink round-trips through from_json losslessly") {
     import spark.implicits._
     val events = Seq(
@@ -647,7 +569,8 @@ class StreamingSpec extends AnyFunSuite {
     writeEventFile(drop, "h.json",
       """{"signature":"s1","slot":1,"blockTime":1742601600,"meta":{"fee":5},"transaction":{"message":{"accountKeys":["FP"]}},"tokenTransfers":[{"fromUserAccount":"A","toUserAccount":"B","tokenAmount":1.0,"mint":"M","tokenStandard":"F"}]}""",
       """{"signature":"s2","slot":2,"blockTime":1742601660,"meta":{"fee":5},"transaction":{"message":{"accountKeys":[]}},"tokenTransfers":[]}""")
-    val q = StreamingIngest.normalizeShape2Stream(spark, drop)
+    val q = graft.operators.Normalize.fromShape2(
+        spark.readStream.schema(graft.sources.Schemas.heliusShape2).json(drop))
       .writeStream.format("memory").queryName("norm_out")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     q.awaitTermination(120000)

@@ -178,23 +178,6 @@ class TextCurationSpec extends AnyFunSuite {
       "fused boiler_frac must equal the standalone kernel on all textual docs")
   }
 
-  test("withQualityEnsemble frees the internal pre-aggregate caches") {
-    // the bare qualityEnsemble persists three frames for session-level
-    // reuse; the loan wrapper must unpersist them (blocking) once the
-    // body returns — a long-lived session gating successive DIFFERENT
-    // batches would otherwise accumulate cache entries for its lifetime
-    val docs = Seq((901L, "alpha beta gamma delta epsilon zeta"),
-      (902L, "eta theta iota kappa lambda mu"))
-      .toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
-      .withColumn("n_chars", length(col("text")).cast("long"))
-    val before = spark.sparkContext.getPersistentRDDs.size
-    val n = TextAnalysis.withQualityEnsemble(docs, 0.0, 1.0, 1.0, 0.0)(_.count())
-    assert(n == 2)
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before, s"leaked ${after - before} ensemble cache RDDs")
-  }
-
   test("unigram lm: mean token probability is the exact integer-scaled value") {
     // freqs over the corpus: a=2, b=1, c=1, total=4 → scaled probs
     // (×1e12, floored): a=5e11, b=2.5e11, c=2.5e11. Doc 1 = "a a b":
@@ -276,56 +259,6 @@ class TextCurationSpec extends AnyFunSuite {
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
     val exchanges = p.linesIterator.count(_.matches("""^\(\d+\) Exchange\s*$"""))
     assert(exchanges == 1, s"expected one lang exchange, got $exchanges:\n${p.take(2000)}")
-  }
-
-  test("lengthQuantilesApprox is rank-exact at fixture scale and plans no window") {
-    // the at-scale substitution the q68 caveat promises, as code: with
-    // n_docs <= accuracy the sketch's rank error is < 1, so every
-    // quantile must EQUAL the exact discrete selection on the fixture
-    val docs = Tables.documents(spark, TestSpark.sf0001)
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getAs[String]("lang") ->
-        (r.getAs[Long]("n_docs"), r.getAs[Long]("p25"), r.getAs[Long]("p50"),
-          r.getAs[Long]("p75"), r.getAs[Long]("p95"))).toMap
-    val exact = asMap(TextAnalysis.lengthQuantiles(docs))
-    val approx = asMap(TextAnalysis.lengthQuantilesApprox(docs))
-    assert(approx.keySet == exact.keySet)
-    // counts identical; each quantile within one discrete rank of exact
-    // (sketch tie-handling at a repeated value may pick the neighbor)
-    exact.foreach { case (lang, e) =>
-      val a = approx(lang)
-      assert(a._1 == e._1, s"$lang n_docs")
-      val lens = docs.filter(col("lang") === lang)
-        .select("n_chars").collect().map(_.getLong(0)).sorted
-      def rankOk(av: Long, ev: Long): Boolean = av == ev || {
-        val i = lens.indexOf(av); val j = lens.indexOf(ev)
-        i >= 0 && j >= 0 && math.abs(lens.count(_ <= av) - lens.count(_ <= ev)) <= 1
-      }
-      assert(rankOk(a._2, e._2) && rankOk(a._3, e._3) &&
-        rankOk(a._4, e._4) && rankOk(a._5, e._5),
-        s"$lang approx $a vs exact $e")
-    }
-    // no window anywhere: the whole point is the sketch AGGREGATE shape
-    val plan = TextAnalysis.lengthQuantilesApprox(docs)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"approx form must not plan a window:\n$plan")
-  }
-
-  test("lmBucketsApprox agrees >=95% with the exact tertile ranking and plans no window") {
-    val docs = Tables.documents(spark, TestSpark.sf0001)
-    val exact = TextAnalysis.lmBuckets(docs).collect()
-      .map(r => r.getLong(0) -> r.getString(3)).toMap
-    val approx = TextAnalysis.lmBucketsApprox(docs).collect()
-      .map(r => r.getLong(0) -> r.getString(3)).toMap
-    assert(approx.keySet == exact.keySet)
-    val agree = exact.count { case (id, b) => approx(id) == b }
-    assert(agree.toDouble / exact.size >= 0.95,
-      s"bucket agreement ${agree.toDouble / exact.size} below 0.95")
-    val plan = TextAnalysis.lmBucketsApprox(docs)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), s"approx form must not plan a window:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      "cutpoint table must broadcast-join back onto the scored docs")
   }
 
   test("lexical retrieval: rare terms dominate, shorter docs outrank at equal tf") {
